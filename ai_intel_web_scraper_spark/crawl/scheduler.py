@@ -30,6 +30,20 @@ Scale design notes (the 100 TB / 10^10-URL story — each choice is visible in
 - **All state in tables, none in the driver** (SnapshotStore): resume reads
   the last committed snapshot; timestamps are virtual (derived from round
   numbers) so a resumed run is bit-identical.
+- **A round is as wide as its rows.** The plan keeps its 10^10-URL shape,
+  but a small round does not run it at full width: each round takes
+  ``width = clamp(ceil(rows / ROWS_PER_TASK), 1, defaultParallelism)``
+  from the committed frontier's row count in the snapshot manifest (no
+  Spark job). The width sizes the frontier read (and with it the rank ->
+  fetch -> resolve -> policy chain), the probe cogroup, the url_seen side
+  of the confirm anti-join (at url_seen's own count) and every sink and
+  state write, so a small round stages one file per table and the next
+  round reads one split. Reason, measured on a 4-vCPU VM: a Python UDF
+  task costs ~0.25 s even over zero rows, and a crawl round of ~0.5k
+  scheduled URLs ran ~185 tasks at full width (800 for a bootstrap and
+  four rounds; 318 at the round's width, task time per round 14.4 ->
+  8.4 s). A frontier above ``ROWS_PER_TASK * defaultParallelism`` rows
+  keeps the full-width plan exactly.
 
 Crawl semantics contract: see semantics.py (shared with the oracle).
 """
@@ -71,6 +85,21 @@ def _parse_byte_size(s, default: int = 10 * 1024 * 1024) -> int:
         return int(num) * _BYTE_SUFFIX[suffix]
     except (ValueError, KeyError):
         return default
+
+
+# Rows per task for the round's stages. A Python-UDF task costs ~0.2-0.25 s
+# before its first row (worker hand-off, Arrow setup: a resolve or probe
+# stage over zero rows is that much slower than a JVM stage), while the
+# rows themselves cost ~9 us each in resolve + bloom probe (7.3 s/Mrow +
+# 2.0 s/Mkey, measured in-process on a 4-vCPU VM). Below ~25k rows a
+# further task therefore costs more than the rows it takes over.
+ROWS_PER_TASK = 25_000
+
+
+def round_width(rows: int, parallelism: int) -> int:
+    """Partitions for a round stage over `rows` rows:
+    ceil(rows / ROWS_PER_TASK), clamped to [1, parallelism]."""
+    return max(1, min(parallelism, -(-rows // ROWS_PER_TASK)))
 
 
 FRONTIER_SCHEMA = ("url string, url_hash long, bucket int, host string, "
@@ -276,10 +305,39 @@ class CrawlEngine:
         # once (round 1, inside the timed run) instead of once per round
         self.pages = (spark.read.parquet(fixtures["pages"]).persist()
                       if self.cfg.write_payload else None)
+        # what the current round attempt persisted or broadcast: released
+        # by run_round on every path
+        self._round_cache: list = []
 
     # ------------------------------------------------------------ helpers
     def _bucket(self, c):  # |url_hash| % n_buckets, sign-safe
         return F.pmod(F.abs(c), F.lit(self.cfg.n_buckets)).cast("int")
+
+    def _width(self, rows: int | None) -> int:
+        """round_width at the session's parallelism; an unknown row count
+        keeps the full width."""
+        par = self.spark.sparkContext.defaultParallelism
+        return par if rows is None else round_width(rows, par)
+
+    def _narrow(self, df: DataFrame, width: int) -> DataFrame:
+        """df on `width` partitions (no shuffle); at full width the plan
+        is left exactly as it was."""
+        if width < self.spark.sparkContext.defaultParallelism:
+            return df.coalesce(width)
+        return df
+
+    def _buckets_on(self, df: DataFrame, width: int) -> DataFrame:
+        """df hash-partitioned by bucket: n_buckets partitions at full
+        width, `width` partitions below it (a bucket stays whole in one
+        partition either way)."""
+        full = width >= self.spark.sparkContext.defaultParallelism
+        return df.repartition(self.cfg.n_buckets if full else width,
+                              "bucket")
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        """Persist df until the end of this round attempt."""
+        self._round_cache.append(df.persist())
+        return df
 
     def _maybe_bcast(self, df: DataFrame) -> DataFrame:
         """Broadcast-hint host-derived frames ONLY in pandas host-state
@@ -298,9 +356,10 @@ class CrawlEngine:
         sizing of the round that appended them — trusting them after an
         n_buckets change breaks both the anti-join key and the shard
         cogroup (seen URLs would be refetched)."""
-        return (self.store.read("url_seen")
-                .select(self._bucket("url_hash").alias("bucket"),
-                        "url_hash", "url"))
+        seen = self._narrow(self.store.read("url_seen"),
+                            self._width(self.store.row_count("url_seen")))
+        return seen.select(self._bucket("url_hash").alias("bucket"),
+                           "url_hash", "url")
 
     # ------------------------------------------- bucketed url_seen (r5)
     def _seen_table_name(self) -> str:
@@ -389,8 +448,8 @@ class CrawlEngine:
                 .where(F.col("_hit")).select("url"))
         return cand.join(hits, "url", "left_anti")
 
-    def _authority_rank_view(self, frontier: DataFrame,
-                             round_no: int) -> DataFrame:
+    def _authority_rank_view(self, frontier: DataFrame, round_no: int,
+                             width: int) -> DataFrame:
         """rank_mode="authority" (r5): the quality->crawl feedback loop.
         Integer PageRank (`operators/graph.py::authority_over`) over the
         DISTINCT policy-accepted edges recorded so far, nodes = url_seen,
@@ -424,9 +483,9 @@ class CrawlEngine:
                      .distinct())
             nodes = self.store.read("url_seen").select(
                 F.col("url").alias("node")).distinct()
-            self.store.stage_write("authority",
-                                   authority_over(nodes, edges),
-                                   "replace")
+            self.store.stage_write(
+                "authority",
+                self._narrow(authority_over(nodes, edges), width), "replace")
             pr = self.store.read_staged("authority")
         else:
             pr = self.store.read("authority")
@@ -506,8 +565,11 @@ class CrawlEngine:
     def bootstrap(self) -> None:
         """Round 0: seed the frontier, url_seen, host_state; commit snapshot."""
         import numpy as np
+        import pyarrow.dataset as ds
         import pyarrow.parquet as pq
         sp = self.spark
+        # the seed list's footer row count sizes every bootstrap write
+        width = self._width(ds.dataset(self.fixtures["seeds"]).count_rows())
         pol = pq.read_table(self.fixtures["politeness"]).to_pandas()
         rob = pq.read_table(self.fixtures["robots"]).to_pandas()
         if "body" in rob.columns:
@@ -566,11 +628,11 @@ class CrawlEngine:
         w_seed = Window.partitionBy("url").orderBy("seed_seq")
         ok = (ok.withColumn("_rn", F.row_number().over(w_seed))
               .where(F.col("_rn") == 1).drop("_rn"))
-        frontier = ok.select(
+        frontier = self._narrow(ok.select(
             "url", "url_hash", self._bucket("url_hash").alias("bucket"), "host",
             F.lit(0).alias("depth"), "priority",
             F.col("seed_seq").alias("discovery_seq"),
-            F.lit(1).alias("attempt")).persist()
+            F.lit(1).alias("attempt")), width).persist()
         # add-before-enqueue: seeds enter url_seen immediately (C2 semantics)
         url_seen = frontier.select("url", "url_hash", "bucket",
                                    F.lit(0).alias("round_added"))
@@ -586,17 +648,18 @@ class CrawlEngine:
                 # per-bucket shard rows built AND stored executor-side; the
                 # driver never holds a bitmap
                 tasks.append(lambda: self.store.stage_write(
-                    "bloom_shards", self._shard_partials(frontier),
+                    "bloom_shards", self._shard_partials(frontier, width),
                     "replace"))
             elif self.cfg.bloom_mode == "cuckoo":
                 tasks.append(lambda: self.store.stage_write(
-                    "cuckoo_shards", self._cuckoo_shard_rows(frontier),
+                    "cuckoo_shards",
+                    self._narrow(self._cuckoo_shard_rows(frontier), width),
                     "replace"))
             else:
                 def _blob_task():
                     bloom = BloomShards.sized_for(self.cfg.expected_urls,
                                                   self.cfg.n_buckets)
-                    self._bloom_add(bloom, frontier)
+                    self._bloom_add(bloom, frontier, width)
                     self.store.stage_blob("bloom", bloom.to_bytes())
                 tasks.append(_blob_task)
             self._stage_sidecar_meta(self.cfg.bloom_mode, 0)
@@ -611,11 +674,10 @@ class CrawlEngine:
         frontier.unpersist()
         self.store.commit(round_no=0, metrics={"round": 0, "event": "bootstrap"})
 
-    def _shard_partials(self, df: DataFrame) -> DataFrame:
+    def _shard_partials(self, df: DataFrame, width: int) -> DataFrame:
         """Executor-built per-bucket partial bitmaps, one row per bucket
         (repartition-by-bucket puts each bucket wholly in one partition)."""
-        return (df.select("bucket", "url_hash")
-                .repartition(self.cfg.n_buckets, "bucket")
+        return (self._buckets_on(df.select("bucket", "url_hash"), width)
                 .mapInPandas(partial_bitmaps(self._bloom_m,
                                              self.cfg.n_buckets),
                              schema="bucket int, bitmap binary"))
@@ -637,14 +699,14 @@ class CrawlEngine:
                                      self._cuckoo_slots_log2),
                     schema="bucket int, bitmap binary"))
 
-    def _bloom_add(self, bloom: BloomShards, df: DataFrame) -> None:
+    def _bloom_add(self, bloom: BloomShards, df: DataFrame,
+                   width: int) -> None:
         """OR executor-built per-partition bitmaps into the sidecar shards.
         Constant-size data to the driver per (partition, bucket)."""
         # co-partition by bucket first: one bitmap per (partition, bucket)
         # reaches the driver, so the transfer is n_buckets * m/8 bytes per
         # round, independent of row count
-        parts = (df.select("bucket", "url_hash")
-                 .repartition(self.cfg.n_buckets, "bucket")
+        parts = (self._buckets_on(df.select("bucket", "url_hash"), width)
                  .mapInPandas(partial_bitmaps(bloom.m_bits, bloom.n_buckets),
                               schema="bucket int, bitmap binary")
                  .collect())
@@ -655,11 +717,30 @@ class CrawlEngine:
 
     # ------------------------------------------------------------ one round
     def run_round(self, round_no: int) -> dict:
+        """One crawl round, committed atomically: a failed attempt aborts
+        everything it staged, so a retry — on this engine or after a
+        resume — starts from the last commit."""
+        try:
+            return self._round(round_no)
+        except BaseException:
+            self.store.abort()
+            self._host_pdf = None  # re-read from the committed host_state
+            raise
+        finally:
+            for held in self._round_cache:
+                held.unpersist()
+            self._round_cache.clear()
+
+    def _round(self, round_no: int) -> dict:
         import numpy as np
         t0 = time.time()
         sp = self.spark
         cfg = self.cfg
-        frontier = self.store.read("frontier")
+        # the round's width, from the committed frontier's row count:
+        # it sizes the frontier read (and with it the rank -> fetch ->
+        # resolve -> policy chain), the probe cogroup and every write
+        width = self._width(self.store.row_count("frontier"))
+        frontier = self._narrow(self.store.read("frontier"), width)
         if cfg.seen_layout == "bucketed" and not self._seen_layout_valid():
             # mode switch / bucket-count change / fresh session catalog:
             # rebuild the bucketed mirror from the committed url_seen
@@ -730,7 +811,7 @@ class CrawlEngine:
         # then the quota-bounded survivor set joins the full row back. At
         # 10^10-frontier scale this is the difference between shuffling
         # hashes and shuffling the web's URLs.
-        rank_view = (self._authority_rank_view(frontier, round_no)
+        rank_view = (self._authority_rank_view(frontier, round_no, width)
                      if cfg.rank_mode == "authority" else frontier)
         narrow = rank_view.select("url_hash", "host", "depth", "priority",
                                   "discovery_seq")
@@ -751,12 +832,11 @@ class CrawlEngine:
             sp.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
         if bcast_limit > 0 and quota_sum * 40 <= bcast_limit:
             ranked_keys = F.broadcast(ranked_keys)
-        scheduled = (frontier.join(
-            ranked_keys,
-            ["url_hash", "discovery_seq"])
-            .persist())  # consumed by the fetch join AND
-        # the next-frontier anti-join — persisting avoids running the
-        # two-phase ranking windows twice
+        # persisted: consumed by the fetch join AND the next-frontier
+        # anti-join — persisting avoids running the two-phase ranking
+        # windows twice
+        scheduled = self._cache(frontier.join(
+            ranked_keys, ["url_hash", "discovery_seq"]))
 
         # -- fetch-simulate (SURVEY S1/S2): join the web graph. URL equality
         # alone is the correctness key; bucket pruning belongs to the
@@ -769,14 +849,14 @@ class CrawlEngine:
                      g, on=[scheduled["url"] == g["g_url"]],
                      how="left")
                  .drop("g_url"))
-        fetch = fetch.withColumn(
+        fetch = self._cache(fetch.withColumn(
             "outcome",
             F.when(F.col("status").isNull() | (F.col("status") != 200),
                    F.lit("http_error"))
              .when(F.col("attempt") <= F.col("fail_attempts"),
                    F.when(F.col("attempt") < S.MAX_ATTEMPTS, F.lit("timeout_retry"))
                     .otherwise(F.lit("timeout_dead")))
-             .otherwise(F.lit("success"))).persist()
+             .otherwise(F.lit("success"))))
 
         success = fetch.where(F.col("outcome") == "success")
         retries = fetch.where(F.col("outcome") == "timeout_retry")
@@ -808,9 +888,9 @@ class CrawlEngine:
                                 * F.lit(1 << S.SEQ_LEVEL_BITS)
                                 + F.col("pos") + 1)
                     .drop("parent_host", "parent_depth", "parent_seq", "pos"))
-        policed = self._apply_url_policies(
+        policed = self._cache(self._apply_url_policies(
             resolved, self._host_cfg(["host", "crawl_delay",
-                                      "exclude_patterns", "disallow"])).persist()
+                                      "exclude_patterns", "disallow"])))
         kept = policed.where(F.col("reject").isNull())
         # keep-first within the batch (SURVEY C16): min (depth, discovery_seq)
         deduped = (kept.groupBy("url_hash", "url", "host")
@@ -832,11 +912,8 @@ class CrawlEngine:
         sidecar_tbl = "cuckoo_shards" if is_cuckoo else "bloom_shards"
         repr_key = cfg.bloom_mode if cfg.use_bloom else None
         shards_df = None
-        rebuilt_shards = None
         bloom_bytes = None
         bloom = None
-        probed_cached = None
-        probe_udf_handle = None
         if use_part_bloom:
             # executor-resident sidecar: per-bucket shard rows cogrouped
             # against the candidate buckets — each task receives only its
@@ -849,9 +926,9 @@ class CrawlEngine:
                 # rebuild from url_seen, still executor-side (staged with
                 # this round's update)
                 seen = self._seen()
-                shards_df = (self._cuckoo_shard_rows(seen) if is_cuckoo
-                             else self._shard_partials(seen)).persist()
-                rebuilt_shards = shards_df  # released at end of round
+                shards_df = self._cache(
+                    self._cuckoo_shard_rows(seen) if is_cuckoo
+                    else self._shard_partials(seen, width))
             out_cols = deduped.columns
             # fresh StructType: StructType.add MUTATES the frame's cached
             # schema, which would poison the cogroup's column resolution
@@ -867,20 +944,30 @@ class CrawlEngine:
             probe = (cuckoo_probe_fn(out_cols, cfg.n_buckets) if is_cuckoo
                      else partitioned_probe_upsert_fn(out_cols,
                                                       self._bloom_m))
+            # below full width both sides are hash-partitioned by bucket
+            # at the round's width, which the cogroup takes as its own
+            # partitioning (no further exchange). At least 2: a one-way
+            # repartition plans as a single partition, which the cogroup
+            # re-shuffles at full width whenever the candidates' size
+            # estimate (a product over the round's joins) is large.
+            cand, shards = deduped, shards_df
+            probe_width = max(width, 2)
+            if probe_width < sp.sparkContext.defaultParallelism:
+                cand = deduped.repartition(probe_width, "bucket")
+                shards = shards_df.repartition(probe_width, "bucket")
             # persist: both the definite-new and to-confirm branches read
             # this frame — uncached, the cogrouped shard probe (the most
             # expensive per-round stage at scale) would run twice
-            probed = (deduped.groupBy("bucket")
-                      .cogroup(shards_df.groupBy("bucket"))
-                      .applyInPandas(probe, schema=out_schema)).persist()
-            probed_cached = probed
+            probed = self._cache(cand.groupBy("bucket")
+                                 .cogroup(shards.groupBy("bucket"))
+                                 .applyInPandas(probe, schema=out_schema))
             # shard rows carry maybe=null, so the candidate filters below
             # exclude them without an explicit bitmap-null conjunct
             drop_cols = ["maybe"] + (["bitmap"] if not is_cuckoo else [])
             definite_new = probed.where(~F.col("maybe")).drop(*drop_cols)
             to_confirm = probed.where(F.col("maybe")).drop(*drop_cols)
             confirmed = self._anti_seen(to_confirm)
-            new_urls = definite_new.unionByName(confirmed).persist()
+            new_urls = definite_new.unionByName(confirmed)
         else:
             bloom_bytes = self.store.read_blob("bloom")
             if bloom_bytes is not None and not self._sidecar_valid("broadcast"):
@@ -893,15 +980,18 @@ class CrawlEngine:
                 rebuilt = BloomShards.sized_for(cfg.expected_urls,
                                                 cfg.n_buckets)
                 self._bloom_add(rebuilt,
-                                self._seen().select("bucket", "url_hash"))
+                                self._seen().select("bucket", "url_hash"),
+                                width)
                 bloom_bytes = rebuilt.to_bytes()
             if bloom_bytes is not None and cfg.use_bloom:
                 bloom = BloomShards.from_bytes(bloom_bytes)
                 maybe_seen = bloom_probe_udf(sp, bloom_bytes)
-                probe_udf_handle = maybe_seen
-                probed = deduped.withColumn(
-                    "maybe", maybe_seen("bucket", "url_hash")).persist()
-                probed_cached = probed
+                # release this round's sidecar-blob broadcast with the
+                # round — otherwise each round's version stays pinned in
+                # block-manager memory
+                self._round_cache.append(maybe_seen.blob_broadcast)
+                probed = self._cache(self._narrow(deduped, width).withColumn(
+                    "maybe", maybe_seen("bucket", "url_hash")))
                 definite_new = probed.where(~F.col("maybe")).drop("maybe")
                 to_confirm = probed.where(F.col("maybe")).drop("maybe")
                 confirmed = self._anti_seen(to_confirm)
@@ -912,7 +1002,7 @@ class CrawlEngine:
                 bloom = (BloomShards.from_bytes(bloom_bytes)
                          if bloom_bytes is not None else None)
                 new_urls = self._anti_seen(deduped)
-            new_urls = new_urls.persist()
+        new_urls = self._cache(new_urls)
 
         # -- next frontier: unscheduled + retries + new (anti-join, no skew) -
         alive_hosts = quota_cfg.select("host")
@@ -956,13 +1046,12 @@ class CrawlEngine:
                                "discovery_seq", "fetch_slot", "fetch_ts",
                                "image_id", "caption", "w", "h", "fmt",
                                "phash", "bytes"))
-            # a success is unmatched iff its image_id is NULL or absent
-            # from pages — anti-joining the pages id column directly is
-            # the same set as anti-joining matched's ids, without
-            # re-deriving the whole matched join subtree (which scanned
-            # the payload table a second time per round)
+            # a success is unmatched iff its image_id is NULL or matched no
+            # page: anti-join against the ids THIS round matched — bounded
+            # by the round's successes, so broadcastable at any scale,
+            # unlike the whole pages.image_id column
             unmatched = (fetched_cols.join(
-                F.broadcast(pages.select("image_id")), "image_id",
+                F.broadcast(matched.select("image_id")), "image_id",
                 "left_anti")
                 .select("url", "host", "depth", "round", "discovery_seq",
                         "fetch_slot", "fetch_ts", "image_id",
@@ -1035,8 +1124,9 @@ class CrawlEngine:
         tasks = []
         if cfg.seen_layout == "bucketed":
             tasks.append(lambda: self._seen_catalog_write(
-                new_urls.select("url_hash", "url",
-                                F.lit(round_no).alias("round_added")),
+                self._narrow(new_urls.select(
+                    "url_hash", "url", F.lit(round_no).alias("round_added")),
+                    width),
                 "append"))
         if cfg.host_state_mode == "dataframe":
             succ = (fetch.where(F.col("outcome") == "success")
@@ -1048,7 +1138,7 @@ class CrawlEngine:
                                      + F.coalesce(F.col("_ok"), F.lit(0)))
                          .drop("_ok"))
             tasks.append(lambda: self.store.stage_write(
-                "host_state", new_hs_df, "replace"))
+                "host_state", self._narrow(new_hs_df, width), "replace"))
         if use_part_bloom:
             if is_cuckoo:
                 merged = self._cuckoo_shard_rows(new_urls, shards_df)
@@ -1059,13 +1149,18 @@ class CrawlEngine:
                 merged = probed.where(F.col("bitmap").isNotNull()) \
                                .select("bucket", "bitmap")
             tasks.append(lambda: self.store.stage_write(
-                sidecar_tbl, merged, "replace"))
-        pool = ThreadPoolExecutor(max_workers=len(sink_writes) + len(tasks))
-        futs = [pool.submit(self.store.stage_write, t, df, m)
-                for t, df, m in sink_writes]
-        futs += [pool.submit(t) for t in tasks]
-
-        stats = stats_df.collect()
+                sidecar_tbl, self._narrow(merged, width), "replace"))
+        # leaving the block waits for every write, also when one fails,
+        # so run_round's abort sees all that this attempt staged
+        with ThreadPoolExecutor(
+                max_workers=len(sink_writes) + len(tasks)) as pool:
+            futs = [pool.submit(self.store.stage_write, t,
+                                self._narrow(df, width), m)
+                    for t, df, m in sink_writes]
+            futs += [pool.submit(t) for t in tasks]
+            stats = stats_df.collect()
+            for f in futs:  # join the concurrent sink + state-update writes
+                f.result()
         outcome_counts: dict[str, int] = {}
         host_ok: dict[str, int] = {}
         policy_counts: dict[str, int] = {}
@@ -1085,10 +1180,6 @@ class CrawlEngine:
         # separately in reject_counts / the edges table
         n_discovered = int(policy_counts.get("ok", 0))
         n_new = int(sum(lineage.values()))
-
-        for f in futs:  # join the concurrent sink + state-update writes
-            f.result()
-        pool.shutdown()
         if cfg.seen_layout == "bucketed":
             # the delta was appended to the bucketed mirror BEFORE the
             # commit (in the concurrent batch above): a crash in between
@@ -1110,7 +1201,7 @@ class CrawlEngine:
         if use_part_bloom:
             self._stage_sidecar_meta(repr_key, round_no)
         elif bloom is not None:
-            self._bloom_add(bloom, new_urls)
+            self._bloom_add(bloom, new_urls, width)
             self.store.stage_blob("bloom", bloom.to_bytes())
             self._stage_sidecar_meta("broadcast", round_no)
         frontier_size = self.store.staged_row_count("frontier")
@@ -1136,18 +1227,6 @@ class CrawlEngine:
             "new_urls": n_new, "frontier_size": int(frontier_size),
             "wall_ms": wall_ms}]), "append")
         self.store.commit(round_no, metrics)
-        scheduled.unpersist()
-        fetch.unpersist()
-        policed.unpersist()
-        new_urls.unpersist()
-        if probed_cached is not None:
-            probed_cached.unpersist()
-        if rebuilt_shards is not None:  # mode-switch rebuild path only
-            rebuilt_shards.unpersist()
-        if probe_udf_handle is not None:
-            # release this round's sidecar-blob broadcast — otherwise each
-            # round's version stays pinned in block-manager memory
-            probe_udf_handle.blob_broadcast.unpersist()
         return metrics
 
     # ------------------------------------------------------------ driver loop

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 import time
 import uuid
@@ -95,15 +96,21 @@ class SnapshotStore:
                         "rows": pq.ParquetFile(fp).metadata.num_rows})
         return out
 
-    def stage_write(self, table: str, df: DataFrame, mode: str) -> None:
-        """Write df into a fresh dir and stage it for the next commit.
-        mode: 'append' (dirs add to parent's) or 'replace' (dirs supersede)."""
+    def _stage_dir(self, table: str, mode: str, write) -> None:
+        """write(path) into a fresh dir and stage it for the next commit.
+        mode: 'append' (dirs add to parent's) or 'replace' (dirs supersede).
+        A failed write is removed: it was never staged, so abort() cannot
+        see it."""
         assert mode in ("append", "replace")
         dirname = f"w-{uuid.uuid4().hex[:12]}"
         path = os.path.join(self._table_dir(table), dirname)
-        df.write.mode("overwrite").parquet(path)
+        try:
+            write(path)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
         stats = self._file_stats(path)
-        with self._stage_lock:
+        with self._stage_lock:  # callers write from concurrent threads
             st = self._staged.setdefault(
                 table, {"mode": mode, "dirs": [], "files": {}})
             if mode == "replace":
@@ -111,15 +118,16 @@ class SnapshotStore:
             st["dirs"].append(dirname)
             st["files"][dirname] = stats
 
+    def stage_write(self, table: str, df: DataFrame, mode: str) -> None:
+        """Write df into a fresh dir and stage it for the next commit."""
+        self._stage_dir(table, mode,
+                        lambda path: df.write.mode("overwrite").parquet(path))
+
     def stage_write_arrow(self, table: str, pdf, mode: str) -> None:
         """Driver-side write for SMALL tables (host_state, metrics): one
         pyarrow file, no Spark job. Read path is identical (parquet)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
-        assert mode in ("append", "replace")
-        dirname = f"w-{uuid.uuid4().hex[:12]}"
-        path = os.path.join(self._table_dir(table), dirname)
-        os.makedirs(path, exist_ok=True)
         tbl = pa.Table.from_pandas(pdf, preserve_index=False)
         ddl = self.schemas.get(table)
         if ddl is not None:
@@ -131,25 +139,36 @@ class SnapshotStore:
             from pyspark.sql.types import StructType
             target = to_arrow_schema(StructType.fromDDL(ddl))
             tbl = tbl.select(target.names).cast(target)
-        pq.write_table(tbl, os.path.join(path, "part-0.parquet"))
-        stats = self._file_stats(path)
-        with self._stage_lock:  # same discipline as stage_write: callers
-            # may overlap with in-flight sink-writer threads
-            st = self._staged.setdefault(
-                table, {"mode": mode, "dirs": [], "files": {}})
-            if mode == "replace":
-                st["mode"] = "replace"
-            st["dirs"].append(dirname)
-            st["files"][dirname] = stats
+
+        def write(path):
+            os.makedirs(path, exist_ok=True)
+            pq.write_table(tbl, os.path.join(path, "part-0.parquet"))
+        self._stage_dir(table, mode, write)
+
+    @staticmethod
+    def _rows_of(st: dict) -> int:
+        return sum(f["rows"] for stats in st["files"].values() for f in stats)
 
     def staged_row_count(self, table: str) -> int:
         """Row count of this round's staged dirs — straight from the
         lineage stats captured at stage time (no file reads, no Spark job)."""
         st = self._staged.get(table)
-        if not st:
-            return 0
-        return sum(f["rows"]
-                   for stats in st["files"].values() for f in stats)
+        return self._rows_of(st) if st else 0
+
+    def row_count(self, table: str, snap_id: int | None = None) -> int | None:
+        """Rows of `table` at a snapshot (default: CURRENT), from the
+        manifest's footer-derived counts — no Spark job. None when the
+        count is unknown (no snapshot, or a manifest written before the
+        counts were recorded)."""
+        snap = self.snapshot(snap_id)
+        if snap is None or "rows" not in snap:
+            return None
+        rows = snap["rows"]
+        if table in rows:
+            return rows[table]
+        # a table no commit ever touched is empty; one with dirs but no
+        # count was inherited from a manifest without counts
+        return None if snap["tables"].get(table) else 0
 
     def read_staged(self, table: str) -> DataFrame:
         """This round's STAGED dirs for `table` — lets a producer reuse
@@ -178,9 +197,17 @@ class SnapshotStore:
         parent = self.snapshot(parent_id) if parent_id is not None else None
         snap_id = (parent_id or 0) + 1
         tables: dict[str, list[str]] = dict((parent or {}).get("tables", {}))
+        # rows per table (from the staged files' footers): replace = staged,
+        # append = parent + staged, untouched = parent. A parent without
+        # counts (an older manifest) leaves its appended tables uncounted.
+        rows = dict((parent or {}).get("rows", {}))
         for table, st in self._staged.items():
             prev = tables.get(table, []) if st["mode"] == "append" else []
             tables[table] = list(prev) + st["dirs"]
+            if not prev:
+                rows[table] = self._rows_of(st)
+            elif table in rows:
+                rows[table] += self._rows_of(st)
         blobs = dict((parent or {}).get("blobs", {}))
         blobs.update(self._staged_blobs)
         manifest = {
@@ -188,6 +215,7 @@ class SnapshotStore:
             "parent_id": parent_id,
             "round": round_no,
             "tables": tables,
+            "rows": rows,
             "blobs": blobs,
             # Iceberg manifest-entry analog: THIS commit's added files per
             # table/dir with byte and footer row counts — per-partition
@@ -206,6 +234,24 @@ class SnapshotStore:
         self._staged = {}
         self._staged_blobs = {}
         return snap_id
+
+    def abort(self) -> None:
+        """Drop everything staged since the last commit and delete its
+        dirs and blobs from disk: a failed round attempt then leaves
+        nothing for the next commit to pick up. Callers must first wait
+        for their in-flight stage_write calls."""
+        with self._stage_lock:
+            staged, blobs = self._staged, self._staged_blobs
+            self._staged, self._staged_blobs = {}, {}
+        for table, st in staged.items():
+            for d in st["dirs"]:
+                shutil.rmtree(os.path.join(self._table_dir(table), d),
+                              ignore_errors=True)
+        for fname in blobs.values():
+            try:
+                os.remove(os.path.join(self.root, "blobs", fname))
+            except FileNotFoundError:
+                pass
 
     def compact(self, table: str) -> int:
         """Iceberg `rewrite_data_files` analog: an append-heavy table (e.g.
@@ -254,7 +300,6 @@ class SnapshotStore:
         (pytest-proven); `history()` parent chains cut cleanly at the
         horizon. Returns removal counts."""
         import glob
-        import shutil
         cur = self.current_snapshot_id()
         if cur is None:
             return {"snapshots": 0, "dirs": 0, "blobs": 0}

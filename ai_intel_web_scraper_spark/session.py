@@ -11,11 +11,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """Cores this process may run on (its CPU affinity set)."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_heap() -> str:
+    """An eighth of RAM, clamped to [1g, 4g]: the JVM, its Python workers
+    and whatever else shares the machine all fit beside it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(max(ram // 8 >> 20, 1024), 4096)}m"
+
+
 def get_spark(app: str = "ai_intel_web_scraper_spark",
               cores: int | str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # explicit arguments, then SPARK_GRAFT_* env vars, then the machine
+    cores = cores or os.environ.get("SPARK_GRAFT_CPUS") or default_cores()
     shuffle = shuffle_partitions or int(os.environ.get(
         "SPARK_GRAFT_SHUFFLE", str(min(int(cores) * 2, 64)) if str(cores).isdigit() else "32"))
     b = (SparkSession.builder
@@ -41,7 +54,9 @@ def get_spark(app: str = "ai_intel_web_scraper_spark",
          # rows of scheduling-path columns is ~4 MB — well inside worker
          # memory, ~6x fewer batch boundaries than the 10k default
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+         .config("spark.driver.memory",
+                 os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                 or default_driver_heap())
          .config("spark.ui.enabled", "false")
          # shuffle/spill files on tmpfs: local-mode stand-in for a real
          # cluster's per-executor local disks (a shared /tmp spindle would
@@ -50,7 +65,13 @@ def get_spark(app: str = "ai_intel_web_scraper_spark",
                  os.environ.get("SPARK_GRAFT_LOCAL_DIR",
                                 "/dev/shm/spark_graft_tmp"
                                 if os.path.isdir("/dev/shm") else "/tmp"))
-         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)))
+         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+         # ORDER BY ... LIMIT k plans an in-memory top-k whose buffers are
+         # sized by k, not by the data (Spark's default threshold is
+         # 2^31): k = 10^9 asks for several GB of heap over a handful of
+         # rows. Above a million rows, sort (spilling) and take instead.
+         .config("spark.sql.execution.topKSortFallbackThreshold",
+                 str(1_000_000)))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
