@@ -11,4 +11,11 @@ per scheduling round; its in-memory `visited: set` becomes a bucketed
 politeness becomes per-host quota windows.
 """
 
+from . import zipcache
+
+# every Python worker imports the package when it unpickles a package UDF:
+# from then on its per-task importlib.invalidate_caches() stops re-reading
+# pyspark.zip (see zipcache)
+zipcache.install()
+
 __version__ = "0.1.0"

@@ -39,10 +39,11 @@ Scale design notes (the 100 TB / 10^10-URL story — each choice is visible in
   of the confirm anti-join (at url_seen's own count) and every sink and
   state write, so a small round stages one file per table and the next
   round reads one split. Reason, measured on a 4-vCPU VM: a Python UDF
-  task costs ~0.25 s even over zero rows, and a crawl round of ~0.5k
-  scheduled URLs ran ~185 tasks at full width (800 for a bootstrap and
-  four rounds; 318 at the round's width, task time per round 14.4 ->
-  8.4 s). A frontier above ``ROWS_PER_TASK * defaultParallelism`` rows
+  task cost ~0.25 s even over zero rows (~0.1-0.15 s since workers stop
+  re-reading pyspark.zip per task, see ROWS_PER_TASK), and a crawl round
+  of ~0.5k scheduled URLs ran ~185 tasks at full width (800 for a
+  bootstrap and four rounds; 318 at the round's width, task time per
+  round 14.4 -> 8.4 s). A frontier above ``ROWS_PER_TASK * defaultParallelism`` rows
   keeps the full-width plan exactly.
 
 Crawl semantics contract: see semantics.py (shared with the oracle).
@@ -87,12 +88,15 @@ def _parse_byte_size(s, default: int = 10 * 1024 * 1024) -> int:
         return default
 
 
-# Rows per task for the round's stages. A Python-UDF task costs ~0.2-0.25 s
-# before its first row (worker hand-off, Arrow setup: a resolve or probe
-# stage over zero rows is that much slower than a JVM stage), while the
-# rows themselves cost ~9 us each in resolve + bloom probe (7.3 s/Mrow +
-# 2.0 s/Mkey, measured in-process on a 4-vCPU VM). Below ~25k rows a
-# further task therefore costs more than the rows it takes over.
+# Rows per task for the round's stages. A Python-UDF task costs ~0.1-0.15 s
+# before its first row (worker hand-off, Arrow setup: a job running a
+# trivial pandas UDF over 500 rows takes that much longer than a JVM-only
+# job on a warm session), while the rows themselves cost ~9 us each in
+# resolve + bloom probe (7.3 s/Mrow + 2.0 s/Mkey, measured in-process on a
+# 4-vCPU VM). The constant was set when that fixed cost was ~0.2-0.25 s,
+# before workers stopped re-reading pyspark.zip per task (see zipcache);
+# the break-even is now nearer 12-15k rows, but a smaller constant widens
+# crawl's rounds and needs its own paired runs.
 ROWS_PER_TASK = 25_000
 
 
@@ -309,6 +313,13 @@ class CrawlEngine:
         # by run_round on every path
         self._round_cache: list = []
 
+    def close(self) -> None:
+        """Release the persisted web graph and pages (idempotent). The
+        engine runs no further round after this."""
+        self.graph.unpersist()
+        if self.pages is not None:
+            self.pages.unpersist()
+
     # ------------------------------------------------------------ helpers
     def _bucket(self, c):  # |url_hash| % n_buckets, sign-safe
         return F.pmod(F.abs(c), F.lit(self.cfg.n_buckets)).cast("int")
@@ -483,9 +494,16 @@ class CrawlEngine:
                      .distinct())
             nodes = self.store.read("url_seen").select(
                 F.col("url").alias("node")).distinct()
-            self.store.stage_write(
-                "authority",
-                self._narrow(authority_over(nodes, edges), width), "replace")
+            releases: list = []
+            try:
+                self.store.stage_write(
+                    "authority",
+                    self._narrow(authority_over(nodes, edges,
+                                                releases=releases),
+                                 width), "replace")
+            finally:
+                for release in releases:
+                    release()
             pr = self.store.read_staged("authority")
         else:
             pr = self.store.read("authority")

@@ -36,6 +36,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _fsync_dir(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 class SnapshotStore:
     def __init__(self, spark: SparkSession, root: str,
                  schemas: dict[str, str] | None = None) -> None:
@@ -225,12 +233,20 @@ class SnapshotStore:
             "metrics": metrics or {},
             "committed_at": time.time(),  # informational only, never read back
         }
+        # durable before the swap: a crash after it must find the manifest
+        # CURRENT names; the root's sync makes the swap itself durable
         with open(self._snap_path(snap_id), "w") as f:
             json.dump(manifest, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())
+        _fsync_dir(os.path.join(self.root, "snapshots"))
         tmp = self._current_path() + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(snap_id))
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, self._current_path())  # the atomic commit point
+        _fsync_dir(self.root)
         self._staged = {}
         self._staged_blobs = {}
         return snap_id

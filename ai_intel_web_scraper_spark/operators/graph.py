@@ -54,7 +54,8 @@ def link_graph(spark, n: int = PR_N) -> DataFrame:
 def pagerank(edges: DataFrame, n_nodes: int,
              iters: int = PR_ITERS, scale: int = PR_SCALE,
              checkpoint_every: int = 3,
-             nodes: DataFrame | None = None) -> DataFrame:
+             nodes: DataFrame | None = None,
+             releases: list | None = None) -> DataFrame:
     """Fixed-iteration integer PageRank over (src, dst) edges with node
     ids in [0, n_nodes). Returns (node, r) where r is the quantized rank
     after `iters` steps of
@@ -71,7 +72,13 @@ def pagerank(edges: DataFrame, n_nodes: int,
     the recurrence only ever joins on key equality, so dense integer ids
     are not required (no global row_number pass at 10^10 nodes);
     `n_nodes` must still be the exact node count (it sets BASE and the
-    uniform init mass)."""
+    uniform init mass).
+
+    `releases`, if given, receives one callable per cache this call pins
+    (the persisted edges, each local checkpoint of the ranks), for the
+    caller to run once the ranks are materialized. Otherwise the persist
+    stays for the session, and a local checkpoint until the JVM collects
+    its plan."""
     sp = edges.sparkSession
     base = ((PR_DAMP_DEN - PR_DAMP_NUM) * scale) // (PR_DAMP_DEN * n_nodes)
     if nodes is None:
@@ -81,6 +88,8 @@ def pagerank(edges: DataFrame, n_nodes: int,
     # iterations — the Pregel convention of caching the edge RDD; without
     # it each iteration's join re-derives the edges subtree
     ed = edges.join(deg, "src").persist()
+    if releases is not None:
+        releases.append(ed.unpersist)
     ranks = nodes.select("node", F.lit(scale // n_nodes).alias("r"))
     # a zero contribution per node folds the old `nodes LEFT JOIN sums`
     # re-attach into the aggregation itself: every node still gets
@@ -102,6 +111,9 @@ def pagerank(edges: DataFrame, n_nodes: int,
                          .cast("long").alias("r")))
         if (it + 1) % checkpoint_every == 0 and it + 1 < iters:
             ranks = ranks.localCheckpoint(eager=False)
+            if releases is not None:
+                rdd = ranks._jdf.queryExecution().analyzed().rdd()
+                releases.append(lambda rdd=rdd: rdd.unpersist(False))
     return ranks
 
 
@@ -111,13 +123,15 @@ AUTH_SEED_W = 1000
 
 
 def authority_over(nodes: DataFrame, edges: DataFrame,
-                   iters: int = PR_ITERS) -> DataFrame:
+                   iters: int = PR_ITERS,
+                   releases: list | None = None) -> DataFrame:
     """PageRank over an ARBITRARY node key (canonical URLs here): adds
     the self-loops the recurrence requires for dangling nodes (left-anti
     against the out-edge set), counts nodes once (single-row collect),
     and runs the integer recurrence keyed by the node column directly —
     no dense-id assignment pass, so nothing global-windows 10^10 URLs.
-    `edges` must already be DISTINCT (src, dst) pairs."""
+    `edges` must already be DISTINCT (src, dst) pairs. `releases` as in
+    `pagerank`, also for the two inputs persisted here."""
     # persist both inputs: `edges` feeds the out-node set AND the full
     # edge union (then degree + join inside pagerank), `nodes` feeds the
     # count action, the dangling anti-join, the rank init and the
@@ -125,12 +139,15 @@ def authority_over(nodes: DataFrame, edges: DataFrame,
     # upstream resolution/distinct subtrees
     nodes = nodes.persist()
     edges = edges.persist()
+    if releases is not None:
+        releases += [nodes.unpersist, edges.unpersist]
     outs = edges.select(F.col("src").alias("node")).distinct()
     dangling = nodes.join(outs, "node", "left_anti")
     full = edges.unionByName(
         dangling.select(F.col("node").alias("src"),
                         F.col("node").alias("dst")))
-    return pagerank(full, nodes.count(), iters=iters, nodes=nodes)
+    return pagerank(full, nodes.count(), iters=iters, nodes=nodes,
+                    releases=releases)
 
 
 def toprank_hosts(edges: DataFrame, n_nodes: int, k: int = 20,

@@ -89,6 +89,7 @@ def main() -> int:
 
     fetched = eng.store.read("fetched").count()
     seen = eng.store.read("url_seen").count()
+    eng.close()
     print(json.dumps({
         "rounds": len(rounds), "fetched": fetched, "url_seen": seen,
         "snapshot": eng.store.current_snapshot_id(),
