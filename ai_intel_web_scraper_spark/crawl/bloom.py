@@ -7,25 +7,22 @@ engine's ground truth is the bucketed ``url_seen`` table (exact anti-join);
 this module provides the probabilistic *pre-filter* that keeps the exact
 join's probe side small: candidates whose bloom probe says "definitely not
 seen" skip the join entirely; only "maybe seen" rows are confirmed exactly.
-An insert-only set never deletes, so a plain bloom (not counting/cuckoo)
-is sufficient and 8x smaller; the sharding story is what matters at scale.
+An insert-only set never deletes, so a plain bloom is sufficient (no
+counting variant, 8x smaller); the sharding story is what matters at scale.
 
 Sharding: one filter per url_hash bucket (the same ``bucket = |url_hash| %
-N_BUCKETS`` that partitions ``url_seen`` on disk). On a real cluster each
-task loads only the shards for the buckets in its partition from the
-snapshot sidecar; in local mode the shard dict is a single broadcast.
-
-Bits are built executor-side: ``partial_bitmaps`` runs inside
-``mapInPandas`` and emits one fixed-size packed bitmap per (partition,
-bucket) — constant-size shuffle to the driver regardless of row count —
-which the driver ORs into the sidecar. Double hashing (Kirsch-Mitzenmacher)
-derives K probe positions from the single 64-bit url_hash.
+N_BUCKETS`` that partitions ``url_seen`` on disk), stored as one
+``(bucket, bitmap)`` row per bucket in the snapshot's ``bloom_shards``
+table. A round cogroups its candidates with those rows by bucket, so each
+task receives only its buckets' bitmaps and the driver never holds a
+filter: ``partitioned_probe_upsert_fn`` probes and inserts in that one
+pass, and ``partial_bitmaps`` (inside ``mapInPandas``) builds the rows from
+scratch when the sidecar is rebuilt from url_seen. Double hashing
+(Kirsch-Mitzenmacher) derives K probe positions from the single 64-bit
+url_hash.
 """
 
 from __future__ import annotations
-
-import io
-import zlib
 
 import numpy as np
 import pandas as pd
@@ -85,82 +82,6 @@ class BloomShards:
             out[mask] = bits.all(axis=1)
         return out
 
-    def merge_bitmap(self, bucket: int, packed: np.ndarray) -> None:
-        np.bitwise_or(self._shard(bucket), packed, out=self._shard(bucket))
-
-    # ------------------------------------------------------------ serialize
-    def to_bytes(self) -> bytes:
-        buf = io.BytesIO()
-        np.savez(buf, meta=np.array([self.n_buckets, self.m_bits], dtype=np.int64),
-                 **{f"b{k}": v for k, v in self.shards.items()})
-        return zlib.compress(buf.getvalue(), 3)
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "BloomShards":
-        with np.load(io.BytesIO(zlib.decompress(data))) as z:
-            nb, m = (int(x) for x in z["meta"])
-            shards = {int(k[1:]): z[k].copy() for k in z.files if k != "meta"}
-        return cls(nb, m, shards)
-
-
-_DESERIALIZED_CACHE: dict[object, "BloomShards"] = {}
-
-
-def cached_from_bytes(key: object, data: bytes) -> "BloomShards":
-    """Worker-side memo for deserialized shard dicts. Python workers are
-    reused across Arrow batches, so without this every 10k-row batch would
-    re-zlib-decompress the full sidecar — O(batches), not O(1)."""
-    got = _DESERIALIZED_CACHE.get(key)
-    if got is None:
-        _DESERIALIZED_CACHE.clear()  # one live sidecar per worker is enough
-        got = BloomShards.from_bytes(data)
-        _DESERIALIZED_CACHE[key] = got
-    return got
-
-
-def bloom_probe_udf(spark, blob: bytes):
-    """Vectorized probe UDF over (bucket, url_hash): True = maybe seen.
-    The packed sidecar travels once as a broadcast; each worker
-    deserializes it once (cached_from_bytes) and probes numpy-vectorized."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    bc = spark.sparkContext.broadcast(blob)
-    key = ("bloom", uuid.uuid4().hex)  # one cache entry per sidecar version
-
-    @F.pandas_udf("boolean")
-    def maybe_seen(bucket: pd.Series, url_hash: pd.Series) -> pd.Series:
-        shards = cached_from_bytes(key, bc.value)
-        return pd.Series(shards.maybe_contains(
-            bucket.to_numpy(), url_hash.to_numpy()))
-
-    # expose the handle so the caller can unpersist after the round —
-    # otherwise every round's blob version stays pinned in block-manager
-    # memory for the life of the session
-    maybe_seen.blob_broadcast = bc
-    return maybe_seen
-
-
-def or_merge_shards_fn():
-    """applyInPandas per bucket: OR all bitmap versions of the bucket into
-    one row PER WIDTH. Executor-side shard compaction — the driver never
-    sees bits. Widths are self-described (len(bitmap)); a warehouse
-    reopened under a different expected_urls sizing legitimately holds two
-    widths in one bucket, which must merge side by side, not crash (the
-    probe ORs the per-width verdicts)."""
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_width: dict[int, np.ndarray] = {}
-        for raw in pdf["bitmap"]:
-            arr = np.frombuffer(raw, dtype=np.uint8)
-            by_width[arr.size] = (arr.copy() if arr.size not in by_width
-                                  else np.bitwise_or(by_width[arr.size], arr))
-        b = int(pdf["bucket"].iloc[0])
-        return pd.DataFrame({"bucket": [b] * len(by_width),
-                             "bitmap": [v.tobytes()
-                                        for v in by_width.values()]})
-    return fn
-
 
 def partitioned_probe_fn(out_columns: list[str]):
     """Cogrouped probe: (candidate rows of one bucket) x (that bucket's
@@ -205,8 +126,8 @@ def partitioned_probe_upsert_fn(out_columns: list[str], m_bits: int):
     """Fused cogrouped probe + shard update (r6): one pass per bucket
     emits BOTH the probed candidate rows (`maybe` flag, `bitmap` null)
     and the bucket's updated shard rows (`bitmap` set, candidate columns
-    null). This replaces the separate per-round
-    ``partial_bitmaps -> union -> or_merge_shards_fn`` update job: the
+    null). This replaces a separate per-round update job (partial bitmaps
+    of the new urls, OR-merged per bucket into the stored rows): the
     probe task already holds the bucket's bitmap and its candidate
     hashes, so inserting is free.
 
@@ -223,8 +144,7 @@ def partitioned_probe_upsert_fn(out_columns: list[str], m_bits: int):
     positives, which the exact anti-join resolves).
 
     New bits always land in the ENGINE-width (`m_bits`) row, created on
-    demand; rows of other widths pass through untouched — exactly the
-    or_merge convention."""
+    demand; rows of other widths pass through untouched."""
     _NULLABLE = {"int8": "Int8", "int16": "Int16", "int32": "Int32",
                  "int64": "Int64", "uint8": "UInt8", "uint16": "UInt16",
                  "uint32": "UInt32", "uint64": "UInt64", "bool": "boolean"}
@@ -292,325 +212,4 @@ def partial_bitmaps(m_bits: int, n_buckets: int):
                 "bucket": list(acc.keys()),
                 "bitmap": [v.tobytes() for v in acc.values()],
             })
-    return fn
-
-
-class CountingBloomShards(BloomShards):
-    """Counting variant (4-bit saturating counters, 2 per byte): supports
-    `remove_many`, needed when url_seen entries EXPIRE (re-crawl windows,
-    politeness-driven eviction) rather than only grow. The plain bitmap
-    variant above stays the default for the insert-only crawl; the two share
-    probe semantics so the scheduler can swap them by construction flag.
-
-    Memory: 4 bits/slot (vs 1) — still ~5 bytes/key at 10 bits/key sizing.
-    Counters saturate at 15 (saturated slots never decrement: classic
-    counting-bloom safety rule, avoids false negatives after heavy reuse)."""
-
-    _MAX = 15
-
-    def _shard(self, bucket: int) -> np.ndarray:
-        s = self.shards.get(bucket)
-        if s is None:
-            s = np.zeros(self.m_bits // 2, dtype=np.uint8)  # 2 counters/byte
-            self.shards[bucket] = s
-        return s
-
-    def _bump(self, shard: np.ndarray, pos: np.ndarray, delta: int) -> None:
-        # pos may repeat (K probes of many keys can land on one slot): apply
-        # each increment/decrement individually via unique+counts
-        upos, cnt = np.unique(pos, return_counts=True)
-        byte, hi = upos >> 1, (upos & 1).astype(bool)
-        cur = np.where(hi, shard[byte] >> 4, shard[byte] & 0x0F).astype(np.int64)
-        if delta > 0:
-            new = np.minimum(cur + cnt, self._MAX)
-            new = np.where(cur == self._MAX, cur, new)  # saturated stays
-        else:
-            new = np.where(cur == self._MAX, cur, np.maximum(cur - cnt, 0))
-        for b, h, v in zip(byte, hi, new):
-            if h:
-                shard[b] = (shard[b] & 0x0F) | (np.uint8(v) << 4)
-            else:
-                shard[b] = (shard[b] & 0xF0) | np.uint8(v)
-
-    def add_many(self, buckets: np.ndarray, hashes: np.ndarray) -> None:
-        for b in np.unique(buckets):
-            pos = _positions(hashes[buckets == b], self.m_bits).ravel()
-            self._bump(self._shard(int(b)), pos, +1)
-
-    def remove_many(self, buckets: np.ndarray, hashes: np.ndarray) -> None:
-        """Delete keys (caller guarantees they were added — standard
-        counting-bloom contract)."""
-        for b in np.unique(buckets):
-            pos = _positions(hashes[buckets == b], self.m_bits).ravel()
-            self._bump(self._shard(int(b)), pos, -1)
-
-    def maybe_contains(self, buckets: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-        out = np.zeros(len(hashes), dtype=bool)
-        for b in np.unique(buckets):
-            mask = buckets == b
-            shard = self.shards.get(int(b))
-            if shard is None:
-                continue
-            pos = _positions(hashes[mask], self.m_bits)
-            byte, hi = pos >> 1, (pos & 1).astype(bool)
-            cnt = np.where(hi, shard[byte] >> 4, shard[byte] & 0x0F)
-            out[mask] = (cnt > 0).all(axis=1)
-        return out
-
-    def merge_bitmap(self, bucket: int, packed: np.ndarray) -> None:
-        """Merge an executor-built partial COUNTING shard by saturating
-        counter addition (min(a+b, 15) — a saturated side stays saturated,
-        preserving the never-decrement-a-saturated-slot rule). This lets the
-        counting variant use the same executor-built partial path as the
-        plain bitmap (see partial_counting_bitmaps)."""
-        s = self._shard(bucket)
-        lo = np.minimum((s & 0x0F).astype(np.int64)
-                        + (packed & 0x0F).astype(np.int64), self._MAX)
-        hi = np.minimum((s >> 4).astype(np.int64)
-                        + (packed >> 4).astype(np.int64), self._MAX)
-        self.shards[bucket] = ((hi.astype(np.uint8) << 4)
-                               | lo.astype(np.uint8))
-
-
-def partial_counting_bitmaps(m_bits: int):
-    """mapInPandas builder for CountingBloomShards partials: emits one
-    packed 4-bit-counter array per bucket present in the partition —
-    mergeable driver- or executor-side via CountingBloomShards.merge_bitmap."""
-    def fn(iterator):
-        acc = CountingBloomShards(0, m_bits)
-        for pdf in iterator:
-            acc.add_many(pdf["bucket"].to_numpy(), pdf["url_hash"].to_numpy())
-        if acc.shards:
-            yield pd.DataFrame({
-                "bucket": list(acc.shards.keys()),
-                "bitmap": [v.tobytes() for v in acc.shards.values()],
-            })
-    return fn
-
-
-class CuckooShards:
-    """Per-bucket cuckoo filters (the rule's alternative to counting bloom):
-    16-bit fingerprints in 4-slot buckets with partial-cuckoo relocation.
-    vs counting bloom: deletes without saturation risk, ~2x denser at 1%
-    FPR, and membership probes touch exactly TWO buckets (cache-friendly)
-    instead of K scattered bits. Same sharding story as BloomShards (one
-    filter per url_hash bucket, serialized into the snapshot sidecar).
-
-    Vectorized probe: both candidate bucket rows for the whole batch are
-    gathered with numpy fancy indexing and compared against fingerprints in
-    one pass — no per-row Python in the hot path.
-    """
-
-    SLOTS = 4
-    MAX_KICKS = 250
-
-    def __init__(self, n_buckets: int, n_slots_log2: int,
-                 shards: dict[int, np.ndarray] | None = None) -> None:
-        self.n_buckets = n_buckets
-        self.n_slots_log2 = n_slots_log2  # buckets per shard = 2^this
-        self.shards = shards if shards is not None else {}
-
-    @classmethod
-    def sized_for(cls, expected_keys: int, n_buckets: int) -> "CuckooShards":
-        per_shard = max(1024, expected_keys // max(1, n_buckets))
-        # 4-slot cuckoo sustains ~84% load with random-walk relocation;
-        # rounding the bucket count up to a power of two leaves headroom
-        need = int(per_shard / (cls.SLOTS * 0.84)) + 1
-        return cls(n_buckets, max(8, int(np.ceil(np.log2(need)))))
-
-    def _shard(self, bucket: int) -> np.ndarray:
-        s = self.shards.get(bucket)
-        if s is None:
-            s = np.zeros((1 << self.n_slots_log2, self.SLOTS),
-                         dtype=np.uint16)  # 0 = empty slot
-            self.shards[bucket] = s
-        return s
-
-    def _fp_and_index(self, hashes: np.ndarray):
-        u = hashes.astype(np.uint64)
-        # full 16-bit fingerprint space; only the reserved empty value 0 is
-        # remapped (OR-ing 1 would force all fingerprints odd — half the
-        # space, ~2x the FPR)
-        fp = (u >> np.uint64(48)).astype(np.uint16)
-        fp = np.where(fp == 0, np.uint16(1), fp)
-        # index bits 16.. — DISJOINT from the shard key (|hash| % n_buckets,
-        # low bits) and the fingerprint (top 16): sharing bits with the
-        # shard key would leave every shard using only a fraction of its
-        # buckets (correlated-hash degeneracy)
-        i1 = ((u >> np.uint64(16))
-              & np.uint64((1 << self.n_slots_log2) - 1)).astype(np.int64)
-        return fp, i1
-
-    def _alt_index(self, i: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        # standard cuckoo-filter partner bucket: i XOR hash(fp)
-        h = (fp.astype(np.uint64) * np.uint64(0x5BD1E9955BD1E995))
-        return ((i.astype(np.uint64) ^ h)
-                & np.uint64((1 << self.n_slots_log2) - 1)).astype(np.int64)
-
-    def add_many(self, buckets: np.ndarray, hashes: np.ndarray) -> None:
-        for b in np.unique(buckets):
-            shard = self._shard(int(b))
-            fps, i1s = self._fp_and_index(hashes[buckets == b])
-            i2s = self._alt_index(i1s, fps)
-            rng = np.random.default_rng(int(b) + 991)
-            for fp, i1, i2 in zip(fps, i1s, i2s):
-                if self._insert_one(shard, int(fp), int(i1), int(i2), rng):
-                    continue
-                raise RuntimeError("cuckoo filter full; resize required")
-
-    def _insert_one(self, shard, fp, i1, i2, rng) -> bool:
-        for i in (i1, i2):
-            row = shard[i]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        i = i1 if rng.random() < 0.5 else i2
-        for _ in range(self.MAX_KICKS):
-            slot = int(rng.integers(0, self.SLOTS))
-            fp, shard[i][slot] = int(shard[i][slot]), fp
-            i = int(self._alt_index(np.array([i]), np.array([fp], dtype=np.uint16))[0])
-            row = shard[i]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        return False
-
-    def remove_many(self, buckets: np.ndarray, hashes: np.ndarray) -> None:
-        """Delete previously-added keys (standard cuckoo contract)."""
-        for b in np.unique(buckets):
-            shard = self._shard(int(b))
-            fps, i1s = self._fp_and_index(hashes[buckets == b])
-            i2s = self._alt_index(i1s, fps)
-            for fp, i1, i2 in zip(fps, i1s, i2s):
-                for i in (int(i1), int(i2)):
-                    hit = np.nonzero(shard[i] == fp)[0]
-                    if len(hit):
-                        shard[i][hit[0]] = 0
-                        break
-
-    def maybe_contains(self, buckets: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-        out = np.zeros(len(hashes), dtype=bool)
-        for b in np.unique(buckets):
-            mask = buckets == b
-            shard = self.shards.get(int(b))
-            if shard is None:
-                continue
-            fps, i1s = self._fp_and_index(hashes[mask])
-            i2s = self._alt_index(i1s, fps)
-            hit1 = (shard[i1s] == fps[:, None]).any(axis=1)
-            hit2 = (shard[i2s] == fps[:, None]).any(axis=1)
-            out[mask] = hit1 | hit2
-        return out
-
-    # ------------------------------------------------------------ serialize
-    def to_bytes(self) -> bytes:
-        buf = io.BytesIO()
-        np.savez(buf, meta=np.array([self.n_buckets, self.n_slots_log2],
-                                    dtype=np.int64),
-                 **{f"b{k}": v for k, v in self.shards.items()})
-        return zlib.compress(buf.getvalue(), 3)
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CuckooShards":
-        with np.load(io.BytesIO(zlib.decompress(data))) as z:
-            nb, sl = (int(x) for x in z["meta"])
-            shards = {int(k[1:]): z[k].copy() for k in z.files if k != "meta"}
-        return cls(nb, sl, shards)
-
-
-# ------------------------------------------------- partitioned cuckoo mode
-
-def _cuckoo_rows_to_filters(raws, n_buckets: int,
-                            bucket: int) -> dict[int, "CuckooShards"]:
-    """Shard rows -> one single-bucket CuckooShards per WIDTH. A row's
-    n_slots_log2 is SELF-DESCRIBED by its byte length (2^L x 4 uint16
-    slots), mirroring the bloom shards' mixed-width convention: a
-    warehouse reopened under a different expected_urls sizing keeps both
-    widths probe-able side by side."""
-    by_width: dict[int, CuckooShards] = {}
-    for raw in raws:
-        arr = np.frombuffer(raw, dtype=np.uint16).copy()
-        slots_log2 = int(np.log2(arr.size // CuckooShards.SLOTS))
-        arr = arr.reshape(-1, CuckooShards.SLOTS)
-        cf = by_width.get(slots_log2)
-        if cf is None:
-            by_width[slots_log2] = CuckooShards(
-                n_buckets, slots_log2, {bucket: arr})
-        else:
-            # same width twice (e.g. pre-compaction duplicates): fold the
-            # occupied slots of the later row into the kept filter
-            occ = np.nonzero(arr)
-            for i, s in zip(*occ):
-                # re-insert via the standard path to preserve invariants
-                # ({i, alt(i)} is closed under alt, so i's partner is valid)
-                ok = cf._insert_one(
-                    cf.shards[bucket], int(arr[i, s]), int(i),
-                    int(cf._alt_index(
-                        np.array([i]),
-                        np.array([arr[i, s]], dtype=np.uint16))[0]),
-                    np.random.default_rng(bucket + 991))
-                if not ok:
-                    # a silent drop would be a false NEGATIVE (seen URL
-                    # probes 'definitely new' and bypasses the anti-join)
-                    # — fail loudly like add_many does on a full filter
-                    raise RuntimeError(
-                        "cuckoo shard fold overflow; resize required")
-    return by_width
-
-
-def cuckoo_probe_fn(out_columns: list[str], n_buckets: int):
-    """Cogrouped probe, the cuckoo analog of partitioned_probe_fn:
-    (candidates of one bucket) x (that bucket's cuckoo shard rows) ->
-    candidates + `maybe`. Two-bucket fingerprint probes, vectorized per
-    width; verdicts OR across widths."""
-    def fn(cand: pd.DataFrame, shards: pd.DataFrame) -> pd.DataFrame:
-        out = cand[out_columns].copy()
-        if len(cand) == 0:
-            out["maybe"] = pd.Series([], dtype=bool)
-            return out
-        if len(shards) == 0:
-            out["maybe"] = False
-            return out
-        b = int(cand["bucket"].iloc[0])
-        hashes = cand["url_hash"].to_numpy()
-        bvec = np.full(len(hashes), b)
-        maybe = np.zeros(len(hashes), dtype=bool)
-        for cf in _cuckoo_rows_to_filters(shards["bitmap"], n_buckets,
-                                          b).values():
-            maybe |= cf.maybe_contains(bvec, hashes)
-        out["maybe"] = maybe
-        return out
-    return fn
-
-
-def cuckoo_upsert_fn(n_buckets: int, n_slots_log2: int):
-    """Cogrouped executor-side shard update: (this round's new url_hash
-    rows of one bucket) x (that bucket's existing shard rows) -> updated
-    shard rows. Cuckoo filters do not OR-merge, but each bucket has
-    exactly ONE owner task here, so sequential insertion into the
-    deserialized shard is safe and stays executor-side — the driver never
-    holds a filter. New hashes insert into the row at the ENGINE's
-    current sizing (created on demand); rows of other widths pass through
-    untouched and remain probe-able."""
-    def fn(new: pd.DataFrame, shards: pd.DataFrame) -> pd.DataFrame:
-        if len(new) == 0 and len(shards) == 0:
-            return pd.DataFrame({"bucket": pd.Series([], dtype="int32"),
-                                 "bitmap": pd.Series([], dtype=object)})
-        b = int((new if len(new) else shards)["bucket"].iloc[0])
-        by_width = _cuckoo_rows_to_filters(
-            shards["bitmap"] if len(shards) else [], n_buckets, b)
-        if len(new):
-            cf = by_width.get(n_slots_log2)
-            if cf is None:
-                cf = CuckooShards(n_buckets, n_slots_log2)
-                cf._shard(b)
-                by_width[n_slots_log2] = cf
-            hashes = new["url_hash"].to_numpy()
-            cf.add_many(np.full(len(hashes), b), hashes)
-        return pd.DataFrame({
-            "bucket": [b] * len(by_width),
-            "bitmap": [cf.shards[b].tobytes()
-                       for cf in by_width.values()]})
     return fn

@@ -63,9 +63,7 @@ from pyspark.sql import types as T
 
 from ..functions import urls as U
 from . import semantics as S
-from .bloom import (BloomShards, CuckooShards, bloom_probe_udf,
-                    cuckoo_probe_fn, cuckoo_upsert_fn, partial_bitmaps,
-                    partitioned_probe_upsert_fn)
+from .bloom import BloomShards, partial_bitmaps, partitioned_probe_upsert_fn
 from .statestore import SnapshotStore
 
 _BYTE_SUFFIX = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10,
@@ -98,6 +96,11 @@ def _parse_byte_size(s, default: int = 10 * 1024 * 1024) -> int:
 # the break-even is now nearer 12-15k rows, but a smaller constant widens
 # crawl's rounds and needs its own paired runs.
 ROWS_PER_TASK = 25_000
+
+
+# The url_seen sidecar's representation, as the validity marker records
+# it: per-bucket bloom shard rows in the bloom_shards table.
+_SIDECAR_REPR = "partitioned"
 
 
 def round_width(rows: int, parallelism: int) -> int:
@@ -167,7 +170,7 @@ def politeness_rank(frontier: DataFrame, quota_cfg: DataFrame,
     if max_quota is None:
         max_quota = int(quota_cfg.agg(F.max("quota")).first()[0] or 0)
     # broadcast_quota=False when the host table must not transit the
-    # driver (dataframe host-state mode) — Catalyst/AQE picks the strategy
+    # driver (the engine's host_state) — Catalyst/AQE picks the strategy
     qc = F.broadcast(quota_cfg) if broadcast_quota else quota_cfg
     # r6: the windows shuffle ONLY the frontier's narrow columns — the
     # per-host quota/crawl_delay columns re-attach by (broadcastable)
@@ -202,28 +205,19 @@ class CrawlConfig:
     n_buckets: int = 16
     n_salt: int = 8
     use_bloom: bool = True
-    # "broadcast": one packed sidecar blob broadcast per round (fast in
-    #   local mode / small filters).
-    # "partitioned": per-bucket shard rows in the snapshot's bloom_shards
-    #   table, probed via a bucket-cogrouped applyInPandas and updated by
-    #   executor-side OR-merge — the driver NEVER materializes the set
-    #   (the only feasible shape at the 10^10-URL sizing, where the blob
-    #   would be ~10+ GB of driver memory and per-round broadcast).
-    # "cuckoo": same executor-resident shard-row story, but the per-bucket
-    #   structure is a cuckoo filter (north-rule alternative): 16-bit
-    #   fingerprints, 2-bucket probes, delete-capable without counting-
-    #   bloom saturation. Cuckoo filters don't OR-merge, so the round
-    #   update cogroups each bucket's NEW hashes with its existing shard
-    #   row and inserts sequentially inside that bucket's single owner
-    #   task — still executor-side, still no driver materialization.
-    bloom_mode: str = "broadcast"
-    # "pandas": host_state cached as driver pandas (one row per HOST, tiny
-    #   locally; avoids a Spark write job per round).
-    # "dataframe": host_state stays a table end-to-end — quota derivation,
-    #   the alive/max/sum scalars (one tiny agg job), and the
-    #   fetched_count update (join + staged replace) are all Spark jobs;
-    #   the driver never holds the host set. Required at 10^8-host scale.
-    host_state_mode: str = "pandas"
+    # The url_seen pre-filter is one representation: per-bucket bloom
+    # shard rows in the snapshot's bloom_shards table, probed and updated
+    # by one bucket-cogrouped applyInPandas pass — the driver never
+    # materializes the set (at the 10^10-URL sizing a single filter
+    # object would be ~10+ GB). url_seen is insert-only, so a plain bloom
+    # suffices: nothing needs deletes. "partitioned" is the only accepted
+    # value.
+    bloom_mode: str = _SIDECAR_REPR
+    # host_state stays a table end to end: quota derivation, the
+    # alive/max/sum scalars (one small agg job) and the fetched_count
+    # update (join + staged replace) are Spark jobs; the driver never
+    # holds the host set. "dataframe" is the only accepted value.
+    host_state_mode: str = "dataframe"
     expected_urls: int = 1 << 20
     # "bfs": (depth, discovery_seq) — reference FIFO parity.
     # "priority": stored priority desc (seed ppm / hash-derived link
@@ -281,6 +275,15 @@ class CrawlConfig:
     seen_layout: str = "snapshot"
     seen_buckets: int | None = None   # default: max(16, 2 * parallelism)
 
+    def __post_init__(self) -> None:
+        if self.bloom_mode != _SIDECAR_REPR:
+            raise ValueError(f"unsupported bloom_mode {self.bloom_mode!r}: "
+                             f"the only url_seen sidecar is {_SIDECAR_REPR!r}")
+        if self.host_state_mode != "dataframe":
+            raise ValueError(
+                f"unsupported host_state_mode {self.host_state_mode!r}: "
+                "host_state is always 'dataframe'")
+
 
 class CrawlEngine:
     def __init__(self, spark: SparkSession, fixtures: dict, warehouse: str,
@@ -292,13 +295,10 @@ class CrawlEngine:
             "fetched": FETCHED_SCHEMA, "failures": FAILURES_SCHEMA,
             "host_state": HOST_STATE_SCHEMA, "metrics": METRICS_SCHEMA,
             "edges": EDGES_SCHEMA, "bloom_shards": "bucket int, bitmap binary",
-            "cuckoo_shards": "bucket int, bitmap binary",
             "authority": "node string, r long",
         })
         self._bloom_m = BloomShards.sized_for(
             self.cfg.expected_urls, self.cfg.n_buckets).m_bits
-        self._cuckoo_slots_log2 = CuckooShards.sized_for(
-            self.cfg.expected_urls, self.cfg.n_buckets).n_slots_log2
         self.fixtures = fixtures
         # persist (lazy): the fetch join re-reads the web graph EVERY
         # round — caching it pays the parquet scan once, in round 1,
@@ -309,8 +309,8 @@ class CrawlEngine:
         # once (round 1, inside the timed run) instead of once per round
         self.pages = (spark.read.parquet(fixtures["pages"]).persist()
                       if self.cfg.write_payload else None)
-        # what the current round attempt persisted or broadcast: released
-        # by run_round on every path
+        # what the current round attempt persisted: released by run_round
+        # on every path
         self._round_cache: list = []
 
     def close(self) -> None:
@@ -348,17 +348,6 @@ class CrawlEngine:
     def _cache(self, df: DataFrame) -> DataFrame:
         """Persist df until the end of this round attempt."""
         self._round_cache.append(df.persist())
-        return df
-
-    def _maybe_bcast(self, df: DataFrame) -> DataFrame:
-        """Broadcast-hint host-derived frames ONLY in pandas host-state
-        mode (driver-held, known-small). In dataframe mode the whole point
-        is that the host set never transits the driver — forcing
-        F.broadcast would collect it there, so leave the strategy to
-        Catalyst/AQE (which still auto-broadcasts under the threshold from
-        file stats, and shuffle-joins at 10^8-host scale)."""
-        if self.cfg.host_state_mode == "pandas":
-            return F.broadcast(df)
         return df
 
     def _seen(self) -> DataFrame:
@@ -514,15 +503,15 @@ class CrawlEngine:
                 .withColumn("priority", composed)
                 .drop("node", "r"))
 
-    # Sidecar validity marker: the url_seen sidecar (bloom blob, bloom
-    # shard rows, or cuckoo shard rows) is only trustworthy if the LAST
-    # commit maintained it — rounds run in another mode, or with probing
-    # disabled, append url_seen without touching the inactive
-    # representations, and an out-of-date sidecar's false "definitely new"
-    # verdicts would bypass the exact anti-join. The marker records which
-    # representation was maintained, at which bucketing, by which round;
-    # any mismatch forces a rebuild from url_seen (always correct).
-    def _sidecar_valid(self, repr_key: str) -> bool:
+    # Sidecar validity marker: the bloom shard rows are only trustworthy
+    # if the LAST commit maintained them — rounds run with probing
+    # disabled append url_seen without touching the shards, and an
+    # out-of-date sidecar's false "definitely new" verdicts would bypass
+    # the exact anti-join. The marker records which representation was
+    # maintained, at which bucketing, by which round; any mismatch forces
+    # a rebuild from url_seen (always correct), also when the marker names
+    # a representation an older engine wrote.
+    def _sidecar_valid(self) -> bool:
         raw = self.store.read_blob("sidecar_meta")
         if raw is None:
             return False
@@ -531,37 +520,20 @@ class CrawlEngine:
         except ValueError:
             return False
         snap = self.store.snapshot() or {}
-        return (meta.get("repr") == repr_key
+        return (meta.get("repr") == _SIDECAR_REPR
                 and meta.get("n_buckets") == self.cfg.n_buckets
                 and meta.get("round") == snap.get("round"))
 
-    def _stage_sidecar_meta(self, repr_key: str, round_no: int) -> None:
+    def _stage_sidecar_meta(self, round_no: int) -> None:
         self.store.stage_blob("sidecar_meta", json.dumps(
-            {"repr": repr_key, "n_buckets": self.cfg.n_buckets,
+            {"repr": _SIDECAR_REPR, "n_buckets": self.cfg.n_buckets,
              "round": round_no}).encode())
-
-    def _host_state_pdf(self):
-        """host_state as driver-side pandas. The table on disk stays the
-        source of truth (snapshot-versioned); the driver caches it because
-        it is small relative to the frontier (one row per HOST, not URL) and
-        its per-round update (fetched_count += successes) would otherwise
-        cost a full Spark write job. At 10^8-host scale flip this to the
-        pure-DataFrame path (join + stage_write) — the columns and
-        semantics are identical."""
-        if getattr(self, "_host_pdf", None) is None:
-            self._host_pdf = self.store.read("host_state").toPandas()
-        return self._host_pdf
-
-    def _host_cfg(self, cols: list[str]) -> DataFrame:
-        if self.cfg.host_state_mode == "dataframe":
-            return self.store.read("host_state").select(*cols)
-        return self.spark.createDataFrame(self._host_state_pdf()[cols])
 
     def _apply_url_policies(self, df: DataFrame, cfg: DataFrame) -> DataFrame:
         """Join host config and tag rows rejected by exclude patterns
         (SURVEY C6, substring containment per docs_scraper.py:171-176) or
         robots disallow path-prefixes (SURVEY C18, graft addition)."""
-        out = (df.join(self._maybe_bcast(cfg), "host", "left")
+        out = (df.join(cfg, "host", "left")
                .withColumn("_path", F.regexp_replace("url", r"^https?://[^/]*", "")))
         reject = F.when(F.col("crawl_delay").isNull(),
                         F.lit("unknown_host"))
@@ -614,7 +586,6 @@ class CrawlEngine:
         hs["exclude_patterns"] = hs["exclude_patterns"].map(as_list)
         hs = hs[["host", "crawl_delay", "max_pages", "max_depth",
                  "fetched_count", "exclude_patterns", "disallow"]]
-        self._host_pdf = hs
         self.store.stage_write_arrow("host_state", hs, "replace")
 
         raw_seeds = sp.read.parquet(self.fixtures["seeds"])
@@ -636,7 +607,7 @@ class CrawlEngine:
                          "seed_seq", "priority")
                  .where(F.col("url").isNotNull()))
         # host_state is staged but not yet committed here, so the policy
-        # config comes from the local frame in BOTH host_state modes
+        # config comes from the local frame
         seeds = self._apply_url_policies(
             seeds, sp.createDataFrame(hs[["host", "crawl_delay",
                                           "exclude_patterns", "disallow"]]))
@@ -662,25 +633,12 @@ class CrawlEngine:
                  lambda: self.store.stage_write("url_seen", url_seen,
                                                 "append")]
         if self.cfg.use_bloom:
-            if self.cfg.bloom_mode == "partitioned":
-                # per-bucket shard rows built AND stored executor-side; the
-                # driver never holds a bitmap
-                tasks.append(lambda: self.store.stage_write(
-                    "bloom_shards", self._shard_partials(frontier, width),
-                    "replace"))
-            elif self.cfg.bloom_mode == "cuckoo":
-                tasks.append(lambda: self.store.stage_write(
-                    "cuckoo_shards",
-                    self._narrow(self._cuckoo_shard_rows(frontier), width),
-                    "replace"))
-            else:
-                def _blob_task():
-                    bloom = BloomShards.sized_for(self.cfg.expected_urls,
-                                                  self.cfg.n_buckets)
-                    self._bloom_add(bloom, frontier, width)
-                    self.store.stage_blob("bloom", bloom.to_bytes())
-                tasks.append(_blob_task)
-            self._stage_sidecar_meta(self.cfg.bloom_mode, 0)
+            # per-bucket shard rows built AND stored executor-side; the
+            # driver never holds a bitmap
+            tasks.append(lambda: self.store.stage_write(
+                "bloom_shards", self._shard_partials(frontier, width),
+                "replace"))
+            self._stage_sidecar_meta(0)
         if self.cfg.seen_layout == "bucketed":
             tasks.append(lambda: self._seen_catalog_write(url_seen,
                                                           "overwrite"))
@@ -700,39 +658,6 @@ class CrawlEngine:
                                              self.cfg.n_buckets),
                              schema="bucket int, bitmap binary"))
 
-    def _cuckoo_shard_rows(self, df: DataFrame,
-                           shards_df: DataFrame | None = None) -> DataFrame:
-        """Executor-built/updated per-bucket cuckoo shard rows: each
-        bucket's single owner task inserts its new hashes into the
-        deserialized shard (cogrouped with the existing rows when given —
-        cuckoo filters don't OR-merge, single ownership replaces it)."""
-        if shards_df is None:
-            shards_df = self.spark.createDataFrame(
-                [], "bucket int, bitmap binary")
-        return (df.select("bucket", "url_hash")
-                .groupBy("bucket")
-                .cogroup(shards_df.groupBy("bucket"))
-                .applyInPandas(
-                    cuckoo_upsert_fn(self.cfg.n_buckets,
-                                     self._cuckoo_slots_log2),
-                    schema="bucket int, bitmap binary"))
-
-    def _bloom_add(self, bloom: BloomShards, df: DataFrame,
-                   width: int) -> None:
-        """OR executor-built per-partition bitmaps into the sidecar shards.
-        Constant-size data to the driver per (partition, bucket)."""
-        # co-partition by bucket first: one bitmap per (partition, bucket)
-        # reaches the driver, so the transfer is n_buckets * m/8 bytes per
-        # round, independent of row count
-        parts = (self._buckets_on(df.select("bucket", "url_hash"), width)
-                 .mapInPandas(partial_bitmaps(bloom.m_bits, bloom.n_buckets),
-                              schema="bucket int, bitmap binary")
-                 .collect())
-        import numpy as np
-        for row in parts:
-            bloom.merge_bitmap(int(row["bucket"]),
-                               np.frombuffer(row["bitmap"], dtype=np.uint8))
-
     # ------------------------------------------------------------ one round
     def run_round(self, round_no: int) -> dict:
         """One crawl round, committed atomically: a failed attempt aborts
@@ -742,7 +667,6 @@ class CrawlEngine:
             return self._round(round_no)
         except BaseException:
             self.store.abort()
-            self._host_pdf = None  # re-read from the committed host_state
             raise
         finally:
             for held in self._round_cache:
@@ -750,7 +674,6 @@ class CrawlEngine:
             self._round_cache.clear()
 
     def _round(self, round_no: int) -> dict:
-        import numpy as np
         t0 = time.time()
         sp = self.spark
         cfg = self.cfg
@@ -767,40 +690,22 @@ class CrawlEngine:
 
         # -- politeness quota (SURVEY C9): two-phase salted ranking ---------
         # quota = min(max(round_seconds/crawl_delay, 1), remaining budget)
-        if cfg.host_state_mode == "dataframe":
-            hs = None
-            quota_cfg = (self.store.read("host_state")
-                         .select("host", "crawl_delay",
-                                 F.least(
-                                     F.greatest(
-                                         F.floor(F.lit(cfg.round_seconds)
-                                                 / F.col("crawl_delay")),
-                                         F.lit(1)),
-                                     F.col("max_pages")
-                                     - F.col("fetched_count"))
-                                 .cast("int").alias("quota"))
-                         .where(F.col("quota") > 0))
-            qs = quota_cfg.agg(F.max("quota").alias("mx"),
-                               F.sum("quota").alias("sm"),
-                               F.count("*").alias("n")).first()
-            max_quota = int(qs["mx"] or 0)
-            quota_sum = int(qs["sm"] or 0)
-            n_alive = int(qs["n"])
-        else:
-            hs = self._host_state_pdf()
-            quota = np.minimum(
-                np.maximum((cfg.round_seconds / hs["crawl_delay"])
-                           .astype(np.int64), 1),
-                (hs["max_pages"] - hs["fetched_count"]).astype(np.int64))
-            qpdf = pd.DataFrame({"host": hs["host"],
-                                 "crawl_delay": hs["crawl_delay"],
-                                 "quota": quota.astype(np.int32)})
-            alive_pdf = qpdf[qpdf["quota"] > 0]
-            max_quota = int(alive_pdf["quota"].max()) if len(alive_pdf) else 0
-            quota_sum = int(alive_pdf["quota"].sum()) if len(alive_pdf) else 0
-            n_alive = len(alive_pdf)
-            if n_alive:
-                quota_cfg = sp.createDataFrame(alive_pdf)
+        quota_cfg = (self.store.read("host_state")
+                     .select("host", "crawl_delay",
+                             F.least(
+                                 F.greatest(
+                                     F.floor(F.lit(cfg.round_seconds)
+                                             / F.col("crawl_delay")),
+                                     F.lit(1)),
+                                 F.col("max_pages") - F.col("fetched_count"))
+                             .cast("int").alias("quota"))
+                     .where(F.col("quota") > 0))
+        qs = quota_cfg.agg(F.max("quota").alias("mx"),
+                           F.sum("quota").alias("sm"),
+                           F.count("*").alias("n")).first()
+        max_quota = int(qs["mx"] or 0)
+        quota_sum = int(qs["sm"] or 0)
+        n_alive = int(qs["n"])
         if n_alive == 0:
             # every remaining host's max_pages budget is exhausted: the
             # crawl is over (oracle: quota<=0 drops the host's rows).
@@ -835,8 +740,7 @@ class CrawlEngine:
                                   "discovery_seq")
         ranked = politeness_rank(
             narrow, quota_cfg, order_cols, cfg.n_salt, round_no,
-            cfg.round_seconds, max_quota=max_quota,
-            broadcast_quota=(cfg.host_state_mode == "pandas"))
+            cfg.round_seconds, max_quota=max_quota, broadcast_quota=False)
         ranked_keys = ranked.select("url_hash", "discovery_seq",
                                     "crawl_delay", "fetch_slot", "fetch_ts")
         # the ranked set is quota-bounded (<= sum of host quotas rows): when
@@ -882,8 +786,8 @@ class CrawlEngine:
 
         # -- expansion (SURVEY C10): explode -> resolve -> filter -> dedupe -
         parents = (success
-                   .join(self._maybe_bcast(self._host_cfg(["host", "max_depth"])
-                                           .withColumnRenamed("max_depth", "md")),
+                   .join(self.store.read("host_state")
+                         .select("host", F.col("max_depth").alias("md")),
                          "host")
                    .where(F.col("depth") < F.col("md"))
                    .select(F.col("url").alias("parent_url"),
@@ -907,8 +811,8 @@ class CrawlEngine:
                                 + F.col("pos") + 1)
                     .drop("parent_host", "parent_depth", "parent_seq", "pos"))
         policed = self._cache(self._apply_url_policies(
-            resolved, self._host_cfg(["host", "crawl_delay",
-                                      "exclude_patterns", "disallow"])))
+            resolved, self.store.read("host_state").select(
+                "host", "crawl_delay", "exclude_patterns", "disallow")))
         kept = policed.where(F.col("reject").isNull())
         # keep-first within the batch (SURVEY C16): min (depth, discovery_seq)
         deduped = (kept.groupBy("url_hash", "url", "host")
@@ -919,49 +823,35 @@ class CrawlEngine:
                    .withColumn("bucket", self._bucket("url_hash")))
 
         # -- url_seen anti-join with bloom pre-filter (SURVEY C2) -----------
-        # The sidecar must remain a SUPERSET of url_seen across config
-        # changes: it is read and maintained whenever it exists (even with
-        # probing disabled), and rebuilt from url_seen when probing is
-        # enabled but no blob was carried — otherwise a stale blob's false
+        # The shards must remain a SUPERSET of url_seen: rounds run with
+        # probing disabled do not maintain them, so a later round trusts
+        # them only if the validity marker names the last commit, and
+        # rebuilds them from url_seen otherwise — a stale sidecar's false
         # "definitely new" verdicts would bypass the exact anti-join.
-        use_part_bloom = (cfg.use_bloom
-                          and cfg.bloom_mode in ("partitioned", "cuckoo"))
-        is_cuckoo = cfg.bloom_mode == "cuckoo"
-        sidecar_tbl = "cuckoo_shards" if is_cuckoo else "bloom_shards"
-        repr_key = cfg.bloom_mode if cfg.use_bloom else None
-        shards_df = None
-        bloom_bytes = None
-        bloom = None
-        if use_part_bloom:
+        if cfg.use_bloom:
             # executor-resident sidecar: per-bucket shard rows cogrouped
             # against the candidate buckets — each task receives only its
             # buckets' bitmaps, once, and the driver never holds the set
             snap_tables = (self.store.snapshot() or {}).get("tables", {})
-            if snap_tables.get(sidecar_tbl) and self._sidecar_valid(repr_key):
-                shards_df = self.store.read(sidecar_tbl)
-            else:  # mode switch / stale (rounds ran in another mode or
-                # with probing off) / n_buckets change / fresh enable:
-                # rebuild from url_seen, still executor-side (staged with
-                # this round's update)
-                seen = self._seen()
+            if snap_tables.get("bloom_shards") and self._sidecar_valid():
+                shards_df = self.store.read("bloom_shards")
+            else:  # stale (rounds ran with probing off) / n_buckets
+                # change / fresh enable / older representation: rebuild
+                # from url_seen, still executor-side (staged with this
+                # round's update)
                 shards_df = self._cache(
-                    self._cuckoo_shard_rows(seen) if is_cuckoo
-                    else self._shard_partials(seen, width))
-            out_cols = deduped.columns
-            # fresh StructType: StructType.add MUTATES the frame's cached
-            # schema, which would poison the cogroup's column resolution
-            extra_fields = [T.StructField("maybe", T.BooleanType())]
-            if not is_cuckoo:
-                # fused probe+insert (r6): the same cogroup pass emits the
-                # updated shard rows (bitmap set, candidate columns null)
-                # alongside the probed candidates — the separate
-                # partial_bitmaps -> or_merge update job disappears
-                extra_fields.append(T.StructField("bitmap", T.BinaryType()))
+                    self._shard_partials(self._seen(), width))
+            # fused probe+insert (r6): the same cogroup pass emits the
+            # updated shard rows (bitmap set, candidate columns null)
+            # alongside the probed candidates. Fresh StructType:
+            # StructType.add MUTATES the frame's cached schema, which would
+            # poison the cogroup's column resolution
             out_schema = T.StructType(
-                list(deduped.schema.fields) + extra_fields)
-            probe = (cuckoo_probe_fn(out_cols, cfg.n_buckets) if is_cuckoo
-                     else partitioned_probe_upsert_fn(out_cols,
-                                                      self._bloom_m))
+                list(deduped.schema.fields)
+                + [T.StructField("maybe", T.BooleanType()),
+                   T.StructField("bitmap", T.BinaryType())])
+            probe = partitioned_probe_upsert_fn(deduped.columns,
+                                                self._bloom_m)
             # below full width both sides are hash-partitioned by bucket
             # at the round's width, which the cogroup takes as its own
             # partitioning (no further exchange). At least 2: a one-way
@@ -981,51 +871,18 @@ class CrawlEngine:
                                  .applyInPandas(probe, schema=out_schema))
             # shard rows carry maybe=null, so the candidate filters below
             # exclude them without an explicit bitmap-null conjunct
-            drop_cols = ["maybe"] + (["bitmap"] if not is_cuckoo else [])
-            definite_new = probed.where(~F.col("maybe")).drop(*drop_cols)
-            to_confirm = probed.where(F.col("maybe")).drop(*drop_cols)
-            confirmed = self._anti_seen(to_confirm)
-            new_urls = definite_new.unionByName(confirmed)
+            definite_new = probed.where(~F.col("maybe")).drop("maybe",
+                                                              "bitmap")
+            to_confirm = probed.where(F.col("maybe")).drop("maybe", "bitmap")
+            new_urls = definite_new.unionByName(self._anti_seen(to_confirm))
         else:
-            bloom_bytes = self.store.read_blob("bloom")
-            if bloom_bytes is not None and not self._sidecar_valid("broadcast"):
-                # stale (rounds ran in another mode / with probing off /
-                # n_buckets changed): do not probe it AND do not keep
-                # maintaining it — a maintained-but-gappy blob would look
-                # fresh to a later re-enable. Rebuild (below) or drop.
-                bloom_bytes = None
-            if cfg.use_bloom and bloom_bytes is None:
-                rebuilt = BloomShards.sized_for(cfg.expected_urls,
-                                                cfg.n_buckets)
-                self._bloom_add(rebuilt,
-                                self._seen().select("bucket", "url_hash"),
-                                width)
-                bloom_bytes = rebuilt.to_bytes()
-            if bloom_bytes is not None and cfg.use_bloom:
-                bloom = BloomShards.from_bytes(bloom_bytes)
-                maybe_seen = bloom_probe_udf(sp, bloom_bytes)
-                # release this round's sidecar-blob broadcast with the
-                # round — otherwise each round's version stays pinned in
-                # block-manager memory
-                self._round_cache.append(maybe_seen.blob_broadcast)
-                probed = self._cache(self._narrow(deduped, width).withColumn(
-                    "maybe", maybe_seen("bucket", "url_hash")))
-                definite_new = probed.where(~F.col("maybe")).drop("maybe")
-                to_confirm = probed.where(F.col("maybe")).drop("maybe")
-                confirmed = self._anti_seen(to_confirm)
-                new_urls = definite_new.unionByName(confirmed)
-            else:
-                # probing disabled — but keep maintaining an existing
-                # sidecar so re-enabling use_bloom later stays safe
-                bloom = (BloomShards.from_bytes(bloom_bytes)
-                         if bloom_bytes is not None else None)
-                new_urls = self._anti_seen(deduped)
+            new_urls = self._anti_seen(deduped)
         new_urls = self._cache(new_urls)
 
         # -- next frontier: unscheduled + retries + new (anti-join, no skew) -
         alive_hosts = quota_cfg.select("host")
         unscheduled = (frontier
-                       .join(self._maybe_bcast(alive_hosts), "host", "left_semi")
+                       .join(alive_hosts, "host", "left_semi")
                        .join(scheduled.select("url_hash", "url"),
                              ["url_hash", "url"], "left_anti"))
         retry_rows = retries.select("url", "url_hash", "bucket", "host", "depth",
@@ -1146,28 +1003,24 @@ class CrawlEngine:
                     "url_hash", "url", F.lit(round_no).alias("round_added")),
                     width),
                 "append"))
-        if cfg.host_state_mode == "dataframe":
-            succ = (fetch.where(F.col("outcome") == "success")
-                    .groupBy("host").agg(F.count("*").alias("_ok")))
-            new_hs_df = (self.store.read("host_state")
-                         .join(succ, "host", "left")
-                         .withColumn("fetched_count",
-                                     F.col("fetched_count")
-                                     + F.coalesce(F.col("_ok"), F.lit(0)))
-                         .drop("_ok"))
+        succ = (fetch.where(F.col("outcome") == "success")
+                .groupBy("host").agg(F.count("*").alias("_ok")))
+        new_hs = (self.store.read("host_state")
+                  .join(succ, "host", "left")
+                  .withColumn("fetched_count",
+                              F.col("fetched_count")
+                              + F.coalesce(F.col("_ok"), F.lit(0)))
+                  .drop("_ok"))
+        tasks.append(lambda: self.store.stage_write(
+            "host_state", self._narrow(new_hs, width), "replace"))
+        if cfg.use_bloom:
+            # fused path: the updated shard rows came out of the probe
+            # cogroup itself — this write only filters the persisted
+            # probe output, no extra shuffle
+            merged = (probed.where(F.col("bitmap").isNotNull())
+                      .select("bucket", "bitmap"))
             tasks.append(lambda: self.store.stage_write(
-                "host_state", self._narrow(new_hs_df, width), "replace"))
-        if use_part_bloom:
-            if is_cuckoo:
-                merged = self._cuckoo_shard_rows(new_urls, shards_df)
-            else:
-                # fused path: the updated shard rows came out of the probe
-                # cogroup itself — this write only filters the persisted
-                # probe output, no extra shuffle
-                merged = probed.where(F.col("bitmap").isNotNull()) \
-                               .select("bucket", "bitmap")
-            tasks.append(lambda: self.store.stage_write(
-                sidecar_tbl, self._narrow(merged, width), "replace"))
+                "bloom_shards", self._narrow(merged, width), "replace"))
         # leaving the block waits for every write, also when one fails,
         # so run_round's abort sees all that this attempt staged
         with ThreadPoolExecutor(
@@ -1180,14 +1033,11 @@ class CrawlEngine:
             for f in futs:  # join the concurrent sink + state-update writes
                 f.result()
         outcome_counts: dict[str, int] = {}
-        host_ok: dict[str, int] = {}
         policy_counts: dict[str, int] = {}
         lineage: dict[str, int] = {}
         for r in stats:
             if r["kind"] == "outcome":
                 outcome_counts[r["k2"]] = outcome_counts.get(r["k2"], 0) + r["cnt"]
-                if r["k2"] == "success":
-                    host_ok[r["k1"]] = r["cnt"]
             elif r["kind"] == "policy":
                 policy_counts[r["k2"]] = r["cnt"]
             else:
@@ -1208,20 +1058,8 @@ class CrawlEngine:
             self.store.stage_blob("seen_layout_meta", json.dumps(
                 {"buckets": self._seen_buckets(),
                  "round": round_no}).encode())
-        if cfg.host_state_mode != "dataframe":
-            new_hs = hs.copy()
-            if host_ok:
-                delta = (new_hs["host"].map(host_ok).fillna(0)
-                         .astype(np.int64))
-                new_hs["fetched_count"] = new_hs["fetched_count"] + delta
-            self._host_pdf = new_hs
-            self.store.stage_write_arrow("host_state", new_hs, "replace")
-        if use_part_bloom:
-            self._stage_sidecar_meta(repr_key, round_no)
-        elif bloom is not None:
-            self._bloom_add(bloom, new_urls, width)
-            self.store.stage_blob("bloom", bloom.to_bytes())
-            self._stage_sidecar_meta("broadcast", round_no)
+        if cfg.use_bloom:
+            self._stage_sidecar_meta(round_no)
         frontier_size = self.store.staged_row_count("frontier")
         wall_ms = (time.time() - t0) * 1000.0
         metrics = {

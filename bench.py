@@ -1,22 +1,21 @@
-"""Benchmark harness.
+"""Operator-query timing harness.
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "crawl": {scheduled, deduped_candidates, new_urls, wall_sec,
-             throughput_urls_per_sec}}
+   "queries": {name: sec, ...}, "queries_extra": {...}, "sf": ...}
 
 - Operator queries run at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
   on local[$SPARK_GRAFT_CPUS] (default 32).
-- The crawl bench generates a synthetic web (cached in /tmp, Spark-parallel,
-  seeded) and runs the full frontier scheduler on it; throughput counts URLs
-  scheduled plus candidate URLs deduped per second of crawl wall time.
+- The crawl round and the scheduling round are measured by the benchmark
+  in perfbench/ (`python3 perfbench/run.py --workload crawl|sched`), which
+  runs the engine and checks every round; this harness times only the
+  operator queries, which perfbench does not measure.
 
 Flags:
-  --cores N        override core count (used for the N vs 4N scaling runs)
-  --crawl-only     skip operator queries (scaling evidence mode)
-  --queries-only   skip the crawl bench
-  --hosts/--pages  crawl bench scale knobs
+  --cores N        override core count
+  --no-aqe         disable adaptive query execution for the session
+  --calibrate      also measure the platform's process-pool CPU and memory
+                   bandwidth ceilings
 """
 
 from __future__ import annotations
@@ -24,15 +23,10 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# sched-bench bucket count: buckets >> cores (matches the 10^10 design,
-# where bucket count is sized to the cluster, not the laptop)
-SCHED_BUCKETS = 64
 
 HEADLINE = [
     "pricing_summary", "docs_keep_first", "topic_tags", "budget_prefix",
@@ -112,372 +106,6 @@ def run_queries(spark, sf_dir: str, names: list[str] | None = None
     return out
 
 
-def crawl_fixtures(spark, n_hosts: int, total_pages: int, with_bytes: bool,
-                   budget_scale: int = 1, depth_add: int = 0,
-                   max_links: int = 12, seed_frac: float = 0.6) -> dict:
-    from ai_intel_web_scraper_spark.synth.generator import (
-        FX_VERSION, WebSpec, generate_fixtures_spark)
-    tag = (f"h{n_hosts}_p{total_pages}_b{int(with_bytes)}_s{budget_scale}"
-           f"_d{depth_add}_l{max_links}_f{seed_frac}_v{FX_VERSION}")
-    out = f"/tmp/spark_graft_bench_fx_{tag}"
-    done = os.path.join(out, "_DONE")
-    spec = WebSpec(seed=42, n_hosts=n_hosts, total_pages=total_pages,
-                   budget_scale=budget_scale, depth_add=depth_add,
-                   max_links=max_links, seed_frac=seed_frac,
-                   max_pages_per_host=400 * budget_scale)
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
-        t0 = time.time()
-        generate_fixtures_spark(spark, spec, out, with_bytes=with_bytes)
-        with open(done, "w") as f:
-            f.write(f"{time.time() - t0:.1f}")
-    return {n: os.path.join(out, f"{n}.parquet")
-            for n in ("pages", "web_graph", "seeds", "politeness", "robots",
-                      "sitemaps")}
-
-
-def run_crawl(spark, n_hosts: int, total_pages: int,
-              with_payload: bool, round_seconds: float,
-              budget_scale: int = 1, depth_add: int = 0,
-              max_links: int = 12, seed_frac: float = 0.6,
-              bloom_mode: str = "partitioned",
-              host_state_mode: str = "dataframe",
-              rank_mode: str = "bfs",
-              authority_every: int = 1) -> dict:
-    from ai_intel_web_scraper_spark.crawl.scheduler import (CrawlConfig,
-                                                            CrawlEngine)
-    fx = crawl_fixtures(spark, n_hosts, total_pages,
-                        with_bytes=with_payload, budget_scale=budget_scale,
-                        depth_add=depth_add, max_links=max_links,
-                        seed_frac=seed_frac)
-    wh = "/tmp/spark_graft_bench_wh"
-    shutil.rmtree(wh, ignore_errors=True)
-    # buckets sized to the compute (>= 2x cores): bucket count bounds the
-    # cogrouped shard-probe's parallelism in partitioned mode — at cluster
-    # scale buckets are sized to executors for the same reason (measured
-    # here: 16 -> 64 buckets cut the partitioned e2e 68s -> 52s at 32 cores)
-    n_buckets = max(16, 2 * spark.sparkContext.defaultParallelism)
-    eng = CrawlEngine(spark, fx, wh, CrawlConfig(
-        expected_urls=max(1 << 20, total_pages * 4),
-        write_payload=with_payload, round_seconds=round_seconds,
-        n_salt=8, bloom_mode=bloom_mode, host_state_mode=host_state_mode,
-        n_buckets=n_buckets, rank_mode=rank_mode,
-        authority_every=authority_every))
-    t0 = time.time()
-    rounds = eng.run()
-    wall = time.time() - t0
-    scheduled = sum(m["scheduled"] for m in rounds)
-    discovered = sum(m["discovered"] for m in rounds)
-    new_urls = sum(m["new_urls"] for m in rounds)
-    fetched = sum(m["fetched_ok"] for m in rounds)
-    return {
-        "rounds": len(rounds), "scheduled": scheduled,
-        "deduped_candidates": discovered, "new_urls": new_urls,
-        "fetched_ok": fetched, "wall_sec": round(wall, 2),
-        "bloom_mode": bloom_mode, "host_state_mode": host_state_mode,
-        "n_buckets": n_buckets, "rank_mode": rank_mode,
-        "throughput_urls_per_sec": round((scheduled + discovered) / wall, 1),
-    }
-
-
-def sched_fixtures(spark, n_urls: int, n_hosts: int, seen_frac: float,
-                   seen_mult: int = 1) -> dict:
-    """Synthetic frontier at scheduling-bench scale (the 10^10-URL story
-    downscaled): Zipf-skewed hosts (head host holds ~(1/H)^(1/3) of all
-    URLs), deterministic hash-derived priorities, and a url_seen table
-    covering ~seen_frac of the frontier. Everything is spark.range + codegen
-    (no Python row generation); written once and cached by tag.
-
-    `seen_mult` > 1 pads url_seen with (seen_mult-1) * n_urls EXTRA rows
-    from a disjoint URL range (pages crawled in earlier rounds that the
-    current frontier never re-links) — the steady-state crawl regime,
-    where the seen set dwarfs the per-round delta. These rows match no
-    candidate, so scheduled counts are layout- and mult-invariant."""
-    from pyspark.sql import functions as F
-    tag = (f"u{n_urls}_h{n_hosts}_s{seen_frac}_v4"
-           + (f"_m{seen_mult}" if seen_mult != 1 else ""))
-    out = f"/tmp/spark_graft_sched_fx_{tag}"
-    done = os.path.join(out, "_DONE")
-    paths = {"frontier": os.path.join(out, "frontier.parquet"),
-             "url_seen": os.path.join(out, "url_seen.parquet"),
-             "bloom_shards": os.path.join(out, "bloom_shards.parquet")}
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
-        ids = spark.range(0, n_urls, 1, 64)
-        u = (F.pmod(F.xxhash64("id"), F.lit(1_000_000)).cast("double")
-             + 500_000.0) / 1_000_000.0
-        host_id = F.least(F.floor(F.pow(u, F.lit(3.0)) * n_hosts),
-                          F.lit(n_hosts - 1)).cast("int")
-        url = F.format_string("https://host%d.example/p/%d",
-                              host_id, F.col("id"))
-        # raw_url carries the un-normalized href variants a crawler actually
-        # discovers (trailing slash / fragment / query); the timed job
-        # canonicalizes them back via the engine's resolve UDF. The stored
-        # url/url_hash columns are produced by that SAME UDF so url_seen and
-        # the bloom sidecar agree with what the timed job computes.
-        from ai_intel_web_scraper_spark.crawl.scheduler import resolve_udf
-        variant = F.pmod("id", F.lit(4))
-        raw_url = F.concat(url, F.when(variant == 0, F.lit(""))
-                           .when(variant == 1, F.lit("/"))
-                           .when(variant == 2, F.lit("#frag"))
-                           .otherwise(F.lit("?utm=x")))
-        frontier = (ids.select(
-            raw_url.alias("raw_url"),
-            F.pmod("id", F.lit(6)).cast("int").alias("depth"),
-            (F.pmod(F.abs(F.xxhash64(F.col("id") + 1)), F.lit(1000))
-             .cast("double") / 1000.0).alias("priority"),
-            F.col("id").alias("discovery_seq"),
-            F.lit(1).alias("attempt"))
-            .withColumn("r", resolve_udf(
-                "raw_url", F.lit(None).cast("string")))
-            .select(F.col("r.url").alias("url"),
-                    F.col("r.host").alias("host"),
-                    F.col("r.url_hash").alias("url_hash"),
-                    "raw_url", "depth", "priority", "discovery_seq",
-                    "attempt"))
-        frontier = frontier.withColumn(
-            "bucket",
-            F.pmod(F.abs("url_hash"), F.lit(SCHED_BUCKETS)).cast("int"))
-        frontier.write.mode("overwrite").parquet(paths["frontier"])
-        # ~seen_frac of the frontier is already known (hash-derived subset)
-        seen_df = (spark.read.parquet(paths["frontier"])
-                   .where(F.pmod(F.abs("url_hash"), F.lit(1000))
-                          < int(seen_frac * 1000))
-                   .select("url", "url_hash", "bucket"))
-        if seen_mult > 1:
-            extra_ids = spark.range(n_urls, n_urls * seen_mult, 1, 64)
-            ex_u = (F.pmod(F.xxhash64("id"), F.lit(1_000_000))
-                    .cast("double") + 500_000.0) / 1_000_000.0
-            ex_host = F.least(F.floor(F.pow(ex_u, F.lit(3.0)) * n_hosts),
-                              F.lit(n_hosts - 1)).cast("int")
-            ex_url = F.format_string("https://host%d.example/old/%d",
-                                     ex_host, F.col("id"))
-            from ai_intel_web_scraper_spark.crawl.scheduler import \
-                resolve_udf as _ru
-            extra = (extra_ids.select(ex_url.alias("raw"))
-                     .withColumn("r", _ru("raw",
-                                          F.lit(None).cast("string")))
-                     .select(F.col("r.url").alias("url"),
-                             F.col("r.url_hash").alias("url_hash"))
-                     .withColumn("bucket",
-                                 F.pmod(F.abs("url_hash"),
-                                        F.lit(SCHED_BUCKETS)).cast("int")))
-            seen_df = seen_df.unionByName(extra)
-        seen_df.write.mode("overwrite").parquet(paths["url_seen"])
-        # bloom sidecar over url_seen, in BOTH placements: executor-built
-        # per-bucket shard rows (the 10^10 shape — written as a parquet
-        # table, never driver-merged) and the single broadcast blob
-        from ai_intel_web_scraper_spark.crawl.bloom import (
-            BloomShards, or_merge_shards_fn, partial_bitmaps)
-        import numpy as np
-        bloom = BloomShards.sized_for(
-            max(int(n_urls * seen_frac)
-                + n_urls * (seen_mult - 1), 1024),
-            SCHED_BUCKETS)
-        partials = (spark.read.parquet(paths["url_seen"])
-                    .select("bucket", "url_hash")
-                    .repartition(SCHED_BUCKETS, "bucket")
-                    .mapInPandas(partial_bitmaps(bloom.m_bits, SCHED_BUCKETS),
-                                 schema="bucket int, bitmap binary"))
-        (partials.groupBy("bucket")
-         .applyInPandas(or_merge_shards_fn(),
-                        schema="bucket int, bitmap binary")
-         .write.mode("overwrite").parquet(paths["bloom_shards"]))
-        for row in spark.read.parquet(paths["bloom_shards"]).collect():
-            bloom.merge_bitmap(int(row["bucket"]),
-                               np.frombuffer(row["bitmap"], dtype=np.uint8))
-        with open(os.path.join(out, "bloom.bin"), "wb") as f:
-            f.write(bloom.to_bytes())
-        with open(done, "w") as f:
-            f.write("ok")
-    paths["bloom"] = os.path.join(out, "bloom.bin")
-    return paths
-
-
-def sched_cuckoo_shards(spark, paths: dict, n_urls: int,
-                        seen_frac: float) -> str:
-    """Cuckoo shard rows over the sched url_seen fixture (built lazily
-    with its own marker so cached frontiers aren't regenerated): each
-    bucket's owner task inserts its hashes into a fresh shard — the same
-    executor-side build the engine's cuckoo mode uses."""
-    out = os.path.dirname(paths["frontier"])
-    p = os.path.join(out, "cuckoo_shards.parquet")
-    done = os.path.join(out, "_DONE_CUCKOO")
-    if not os.path.exists(done):
-        from ai_intel_web_scraper_spark.crawl.bloom import (CuckooShards,
-                                                            cuckoo_upsert_fn)
-        ck = CuckooShards.sized_for(max(int(n_urls * seen_frac), 1024),
-                                    SCHED_BUCKETS)
-        empty = spark.createDataFrame([], "bucket int, bitmap binary")
-        (spark.read.parquet(paths["url_seen"]).select("bucket", "url_hash")
-         .groupBy("bucket").cogroup(empty.groupBy("bucket"))
-         .applyInPandas(cuckoo_upsert_fn(SCHED_BUCKETS, ck.n_slots_log2),
-                        schema="bucket int, bitmap binary")
-         .write.mode("overwrite").parquet(p))
-        with open(done, "w") as f:
-            f.write("ok")
-    return p
-
-
-def sched_bucketed_seen(spark, paths: dict, n_urls: int,
-                        seen_frac: float, seen_mult: int = 1) -> str:
-    """One-time bucketed catalog mirror of the sched url_seen fixture
-    (built outside the timer, like the sidecar builds): the r5
-    seen_layout="bucketed" path joins candidates against it on url_hash
-    alone, so the big seen side is never re-shuffled per round."""
-    from ai_intel_web_scraper_spark.sources.bucketed import write_bucketed
-    tag = f"u{n_urls}_s{seen_frac}_m{seen_mult}".replace(".", "_")
-    tbl = f"sched_seen_{tag}"
-    if not spark.catalog.tableExists(tbl):
-        buckets = max(16, 2 * spark.sparkContext.defaultParallelism)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        wdir = spark.conf.get("spark.sql.warehouse.dir")
-        from urllib.parse import urlparse
-        shutil.rmtree(os.path.join(urlparse(wdir).path, tbl),
-                      ignore_errors=True)
-        # repartition on the bucket column first: one file per bucket,
-        # so the scan's per-bucket output is globally sorted and the
-        # join elides the seen-side SORT as well as the Exchange (a
-        # compacted Iceberg table gives the same property)
-        write_bucketed(spark.read.parquet(paths["url_seen"])
-                       .select("url_hash", "url")
-                       .repartition(buckets, "url_hash"),
-                       tbl, "url_hash", buckets)
-    return tbl
-
-
-def run_sched(spark, n_urls: int, n_hosts: int, seen_frac: float,
-              round_seconds: float, n_salt: int,
-              bloom_mode: str = "partitioned",
-              seen_layout: str = "snapshot",
-              seen_mult: int = 1) -> dict:
-    """ONE frontier-scheduling round at bench scale — the per-round
-    DataFrame job of the crawl engine, timed end-to-end including the
-    parquet sink write. This is the north-rule metric surface:
-    URLs (scheduled + deduped) per second. Pipeline (identical operators to
-    CrawlEngine.run_round's scheduling path):
-
-      scan frontier -> bloom probe (partitioned: bucket-cogrouped
-      executor-resident shard rows, the 10^10 shape; broadcast: one blob
-      probed by a vectorized Arrow UDF)
-      -> exact anti-join for the 'maybe seen' minority only
-      -> two-phase salted politeness rank on NARROW columns
-      -> late-materialize the full rows for the quota-bounded survivors
-      -> parquet sink
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from ai_intel_web_scraper_spark.crawl.bloom import (bloom_probe_udf,
-                                                        cuckoo_probe_fn,
-                                                        partitioned_probe_fn)
-    from ai_intel_web_scraper_spark.crawl.scheduler import politeness_rank
-    fx = sched_fixtures(spark, n_urls, n_hosts, seen_frac, seen_mult)
-    if bloom_mode == "cuckoo":  # lazy one-time build, outside the timer
-        fx["cuckoo_shards"] = sched_cuckoo_shards(spark, fx, n_urls,
-                                                  seen_frac)
-    seen_tbl = (sched_bucketed_seen(spark, fx, n_urls, seen_frac,
-                                    seen_mult)
-                if seen_layout == "bucketed" else None)
-    rng = np.random.default_rng(42)
-    delays = rng.choice([0.3, 0.5, 1.0], size=n_hosts)
-    quota_cfg = spark.createDataFrame(pd.DataFrame({
-        "host": [f"host{k}.example" for k in range(n_hosts)],
-        "crawl_delay": delays,
-        "quota": (round_seconds / delays).astype(np.int32),
-    }))
-    with open(fx["bloom"], "rb") as f:
-        blob = f.read()
-    sink = "/tmp/spark_graft_sched_sink"
-    shutil.rmtree(sink, ignore_errors=True)
-
-    from ai_intel_web_scraper_spark.crawl.scheduler import resolve_udf
-
-    t0 = time.time()
-    frontier = spark.read.parquet(fx["frontier"])
-    # candidate intake: canonicalize + hash every raw href (vectorized
-    # Arrow UDF — the same per-link work a real round does on discovery)
-    resolved = (frontier
-                .select("raw_url", "depth", "discovery_seq")
-                .withColumn("r", resolve_udf("raw_url",
-                                             F.lit(None).cast("string")))
-                .select(F.col("r.url").alias("url"),
-                        F.col("r.host").alias("host"),
-                        F.col("r.url_hash").alias("url_hash"),
-                        "depth", "discovery_seq")
-                .withColumn("bucket",
-                            F.pmod(F.abs("url_hash"),
-                                   F.lit(SCHED_BUCKETS)).cast("int")))
-    if bloom_mode in ("partitioned", "cuckoo"):
-        # executor-resident sidecar: candidates cogrouped with their
-        # bucket's shard row — the driver never holds the bit set
-        if bloom_mode == "cuckoo":
-            shards_df = spark.read.parquet(fx["cuckoo_shards"])
-            probe = cuckoo_probe_fn(resolved.columns, SCHED_BUCKETS)
-        else:
-            shards_df = spark.read.parquet(fx["bloom_shards"])
-            probe = partitioned_probe_fn(resolved.columns)
-        out_schema = T.StructType(
-            list(resolved.schema.fields)
-            + [T.StructField("maybe", T.BooleanType())])
-        probed = (resolved.groupBy("bucket")
-                  .cogroup(shards_df.groupBy("bucket"))
-                  .applyInPandas(probe, schema=out_schema))
-    else:
-        maybe_seen = bloom_probe_udf(spark, blob)
-        probed = resolved.withColumn("maybe",
-                                     maybe_seen("bucket", "url_hash"))
-    definite_new = probed.where(~F.col("maybe")).drop("maybe")
-    to_confirm = probed.where(F.col("maybe")).drop("maybe")
-    if seen_tbl is not None:
-        # r5 bucketed layout: co-located hash-equi join (zero Exchange
-        # on the seen side) + groupBy-fenced exact-url confirm — the
-        # CrawlEngine._anti_seen shape. The two-phase form consumes
-        # to_confirm twice; persist it like the engine persists probed
-        # (snapshot mode consumes it once, so its path is unchanged).
-        to_confirm = to_confirm.persist()
-        seen_b = spark.table(seen_tbl).select(
-            "url_hash", F.col("url").alias("_seen_url"))
-        m = (to_confirm.select("url_hash", "url")
-             .join(seen_b, "url_hash", "inner"))
-        hits = (m.groupBy("url")
-                .agg(F.max(F.col("_seen_url") == F.col("url"))
-                     .alias("_hit"))
-                .where(F.col("_hit")).select("url"))
-        confirmed = to_confirm.join(hits, "url", "left_anti")
-    else:
-        seen = spark.read.parquet(fx["url_seen"]).select(
-            "bucket", "url_hash", "url")
-        confirmed = to_confirm.join(seen, ["bucket", "url_hash", "url"],
-                                    "left_anti")
-    fresh = definite_new.unionByName(confirmed)
-    ranked = politeness_rank(
-        fresh.select("url_hash", "host", "depth", "discovery_seq"),
-        quota_cfg,
-        [F.col("depth").asc(), F.col("discovery_seq").asc()],
-        n_salt, 1, round_seconds,
-        max_quota=int(round_seconds / delays.min()))
-    # late materialization: the ranked set is quota-bounded (<= n_hosts *
-    # max_quota rows), so broadcast it — the 40M-row frontier is joined
-    # without ever shuffling its URL strings
-    scheduled = frontier.drop("raw_url").join(
-        F.broadcast(ranked.select("url_hash", "discovery_seq", "fetch_slot",
-                                  "fetch_ts")),
-        ["url_hash", "discovery_seq"])
-    scheduled.write.mode("overwrite").parquet(sink)
-    wall = time.time() - t0
-    import pyarrow.dataset as ds
-    n_sched = ds.dataset(sink).count_rows()
-    return {
-        "frontier_urls": n_urls, "deduped": n_urls, "scheduled": n_sched,
-        "wall_sec": round(wall, 2), "bloom_mode": bloom_mode,
-        "seen_layout": seen_layout, "seen_mult": seen_mult,
-        "throughput_urls_per_sec": round((n_urls + n_sched) / wall, 1),
-    }
-
-
 def _burn(k):
     s = 0
     for i in range(k):
@@ -535,57 +163,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--crawl-only", action="store_true")
-    ap.add_argument("--queries-only", action="store_true")
-    ap.add_argument("--hosts", type=int, default=1200)
-    ap.add_argument("--pages", type=int, default=60000)
-    ap.add_argument("--payload", action="store_true", default=True)
-    ap.add_argument("--no-payload", dest="payload", action="store_false")
-    ap.add_argument("--round-seconds", type=float, default=600.0)
-    ap.add_argument("--bloom-mode", default="partitioned",
-                    choices=["broadcast", "partitioned", "cuckoo"],
-                    help="url_seen sidecar placement: executor-resident "
-                         "per-bucket bloom shard rows (default — the "
-                         "10^10-URL shape; driver never holds the set), "
-                         "one broadcast blob (local-mode fast path), or "
-                         "executor-resident cuckoo-filter shards (delete-"
-                         "capable north-rule alternative)")
-    ap.add_argument("--host-state-mode", default="dataframe",
-                    choices=["pandas", "dataframe"],
-                    help="host_state placement: pure-DataFrame end-to-end "
-                         "(default — the 10^8-host shape) or driver pandas")
-    ap.add_argument("--both-modes", action="store_true", default=True,
-                    help="in the full bench, also run the crawl e2e and "
-                         "sched round in the other bloom mode and report "
-                         "both (headline stays the scale-safe partitioned)")
-    ap.add_argument("--single-mode", dest="both_modes",
-                    action="store_false")
-    ap.add_argument("--rank-mode", default="bfs",
-                    choices=["bfs", "priority", "authority"],
-                    help="frontier ranking for the crawl e2e (authority = "
-                         "r5 per-round integer PageRank composed with "
-                         "stored priorities)")
-    ap.add_argument("--authority-every", type=int, default=1,
-                    help="authority refresh cadence in rounds (r5)")
-    ap.add_argument("--budget-scale", type=int, default=1)
-    ap.add_argument("--depth-add", type=int, default=0)
-    ap.add_argument("--max-links", type=int, default=12)
-    ap.add_argument("--seed-frac", type=float, default=0.6)
-    ap.add_argument("--sched-only", action="store_true",
-                    help="run only the single-round frontier-scheduling "
-                         "bench (the N-vs-4N scaling evidence)")
-    ap.add_argument("--sched-urls", type=int, default=8_000_000)
-    ap.add_argument("--sched-hosts", type=int, default=2000)
-    ap.add_argument("--sched-seen-frac", type=float, default=0.3)
-    ap.add_argument("--sched-salt", type=int, default=16)
-    ap.add_argument("--seen-layout", default="snapshot",
-                    choices=["snapshot", "bucketed"],
-                    help="url_seen layout for the sched round's exact "
-                         "anti-join (bucketed = r5 co-located join; the "
-                         "catalog mirror is built outside the timer)")
-    ap.add_argument("--sched-seen-mult", type=int, default=1,
-                    help="pad url_seen to mult*n_urls rows (steady-state "
-                         "crawl regime: seen >> per-round delta)")
     ap.add_argument("--no-aqe", action="store_true",
                     help="disable adaptive query execution for the bench "
                          "session (fixed-shape job; AQE's per-stage driver "
@@ -600,71 +177,28 @@ def main() -> None:
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
     from ai_intel_web_scraper_spark.session import get_spark
-    extra = ({"spark.sql.adaptive.enabled": "false"} if args.no_aqe else {})
+    conf = ({"spark.sql.adaptive.enabled": "false"} if args.no_aqe else {})
     spark = get_spark(app="bench", cores=args.cores,
                       shuffle_partitions=max(args.cores, 16),
-                      extra_conf=extra)
+                      extra_conf=conf)
 
     t_all = time.time()
     warm = warmup(spark, sf_dir)
-    queries: dict[str, float] = {}
-    extra: dict[str, float] = {}
-    crawl: dict = {}
-    sched: dict = {}
-    crawl_alt: dict = {}
-    sched_alt: dict = {}
-    if args.sched_only:
-        sched = run_sched(spark, args.sched_urls, args.sched_hosts,
-                          args.sched_seen_frac, args.round_seconds,
-                          args.sched_salt, args.bloom_mode,
-                          args.seen_layout, args.sched_seen_mult)
-        queries["sched_round"] = sched["wall_sec"]
-    else:
-        if not args.crawl_only:
-            queries = run_queries(spark, sf_dir)
-            extra = run_queries(spark, sf_dir, EXTRA)
-        if not args.queries_only:
-            crawl = run_crawl(spark, args.hosts, args.pages,
-                              args.payload, args.round_seconds,
-                              args.budget_scale, args.depth_add,
-                              args.max_links, args.seed_frac,
-                              args.bloom_mode, args.host_state_mode,
-                              args.rank_mode, args.authority_every)
-            queries["crawl_scheduling"] = crawl["wall_sec"]
-            sched = run_sched(spark, args.sched_urls, args.sched_hosts,
-                              args.sched_seen_frac, args.round_seconds,
-                              args.sched_salt, args.bloom_mode)
-            queries["sched_round"] = sched["wall_sec"]
-    # headline total is queries + headline-mode crawl/sched only, so
-    # `value` stays comparable round-over-round; alt-mode runs follow
+    queries = run_queries(spark, sf_dir)
+    extra = run_queries(spark, sf_dir, EXTRA)
     total = round(time.time() - t_all, 2)
-    if not args.sched_only and not args.queries_only and args.both_modes:
-        other = ("broadcast" if args.bloom_mode == "partitioned"
-                 else "partitioned")
-        crawl_alt = run_crawl(spark, args.hosts, args.pages,
-                              args.payload, args.round_seconds,
-                              args.budget_scale, args.depth_add,
-                              args.max_links, args.seed_frac,
-                              other, args.host_state_mode)
-        sched_alt = run_sched(spark, args.sched_urls, args.sched_hosts,
-                              args.sched_seen_frac, args.round_seconds,
-                              args.sched_salt, other)
     calib = run_calibration() if args.calibrate else {}
     bw = run_bw_calibration() if args.calibrate else {}
 
     print(json.dumps({
-        "metric": "frontier-scheduling throughput + operator suite wall time",
+        "metric": "operator suite wall time",
         "value": total,
         "unit": "sec",
         "queries": queries,
         "warmup_sec": warm,
-        **({"queries_extra": extra} if extra else {}),
+        "queries_extra": extra,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cores": args.cores,
-        "crawl": crawl,
-        "sched": sched,
-        **({"crawl_alt_mode": crawl_alt} if crawl_alt else {}),
-        **({"sched_alt_mode": sched_alt} if sched_alt else {}),
         **({"platform_mops": calib} if calib else {}),
         **({"platform_bw_gbs": bw} if bw else {}),
     }))

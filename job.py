@@ -6,14 +6,17 @@ by --num-executors / cluster sizing, nothing in here changes):
     python tools/package_pyfiles.py
     spark-submit --master <cluster> \
         --py-files dist/ai_intel_web_scraper_spark.zip \
-        job.py --fixtures /path/to/fixtures --warehouse /path/to/wh \
-               --bloom-mode partitioned --host-state-mode dataframe
+        job.py --fixtures /path/to/fixtures --warehouse /path/to/wh
 
 Local smoke (what CI runs):
 
     spark-submit --master local[8] \
         --py-files dist/ai_intel_web_scraper_spark.zip \
         job.py --fixtures /tmp/fx --warehouse /tmp/wh --synth-pages 120
+
+The engine has one url_seen pre-filter (per-bucket bloom shard rows,
+probed executor-side) and keeps host_state as a table, so the flags below
+set only sizing, ranking and payload.
 
 The job is resumable: re-running with the same --warehouse continues from
 the latest snapshot (bit-identical to an uninterrupted run — the pytest
@@ -42,10 +45,6 @@ def main() -> int:
     ap.add_argument("--seed", type=int, default=7)
     ap.add_argument("--max-rounds", type=int, default=200)
     ap.add_argument("--round-seconds", type=float, default=None)
-    ap.add_argument("--bloom-mode", default="partitioned",
-                    choices=["broadcast", "partitioned", "cuckoo"])
-    ap.add_argument("--host-state-mode", default="dataframe",
-                    choices=["pandas", "dataframe"])
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--expected-urls", type=int, default=1 << 20)
     ap.add_argument("--rank-mode", default="bfs",
@@ -74,9 +73,7 @@ def main() -> int:
                 for n in ("pages", "web_graph", "seeds", "politeness",
                           "robots")}
 
-    cfg_kwargs = dict(bloom_mode=args.bloom_mode,
-                      host_state_mode=args.host_state_mode,
-                      n_buckets=args.n_buckets,
+    cfg_kwargs = dict(n_buckets=args.n_buckets,
                       expected_urls=args.expected_urls,
                       rank_mode=args.rank_mode,
                       write_payload=args.payload,

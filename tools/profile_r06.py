@@ -6,11 +6,9 @@ Usage:
       Times each declared query with bench.py's exact methodology
       (xxhash64-all-columns + bit_xor collect), best-of-N, and optionally
       writes .explain("formatted") to plans/r06/<name>_<DIR_TAG>.txt.
-  python tools/profile_r06.py crawl [--mode partitioned] [--repeat N]
-      Runs the bench crawl e2e (same knobs as bench.py defaults) and
-      prints per-round wall_ms plus the total.
-  python tools/profile_r06.py sched [--urls N]
-      Runs the bench sched round once, with per-phase wall breakdown.
+
+The crawl and scheduling rounds are profiled by perfbench/
+(`python3 perfbench/run.py --workload crawl|sched --trace 1`).
 """
 
 from __future__ import annotations
@@ -26,14 +24,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("cmd", choices=["queries", "crawl", "sched"])
+    ap.add_argument("cmd", choices=["queries"])
     ap.add_argument("names", nargs="*")
     ap.add_argument("--best", type=int, default=3)
     ap.add_argument("--plans", default=None,
                     help="write plans/r06/<name>_<tag>.txt explain output")
-    ap.add_argument("--mode", default="partitioned")
-    ap.add_argument("--repeat", type=int, default=1)
-    ap.add_argument("--urls", type=int, default=8_000_000)
     ap.add_argument("--cores", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
@@ -45,56 +40,37 @@ def main() -> None:
     import bench as B
     B.warmup(spark, sf_dir)
 
-    if args.cmd == "queries":
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        import __spark_entry__ as E
-        qs = E.queries()
-        out = {}
-        for name in args.names:
-            if args.plans:
-                df = qs[name](spark, sf_dir)
-                plan = df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted")
-                pdir = os.path.join(os.path.dirname(
-                    os.path.dirname(os.path.abspath(__file__))),
-                    "plans", "r06")
-                os.makedirs(pdir, exist_ok=True)
-                with open(os.path.join(
-                        pdir, f"{name}_{args.plans}.txt"), "w") as f:
-                    f.write(plan)
-            best = None
-            samples = []
-            for _ in range(args.best):
-                spark.sparkContext.setJobDescription(f"profile:{name}")
-                t0 = time.time()
-                df = qs[name](spark, sf_dir)
-                df.select(F.xxhash64(*df.columns).alias("_h")) \
-                    .agg(F.expr("bit_xor(_h)")).collect()
-                dt = round(time.time() - t0, 3)
-                samples.append(dt)
-                best = dt if best is None else min(best, dt)
-            out[name] = {"best": best, "samples": samples}
-            print(json.dumps({name: out[name]}), flush=True)
-        print(json.dumps({"summary": {k: v["best"] for k, v in out.items()}}))
-    elif args.cmd == "crawl":
-        for _ in range(args.repeat):
+    import __spark_entry__ as E
+    qs = E.queries()
+    out = {}
+    for name in args.names:
+        if args.plans:
+            df = qs[name](spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
+            pdir = os.path.join(os.path.dirname(
+                os.path.dirname(os.path.abspath(__file__))),
+                "plans", "r06")
+            os.makedirs(pdir, exist_ok=True)
+            with open(os.path.join(
+                    pdir, f"{name}_{args.plans}.txt"), "w") as f:
+                f.write(plan)
+        best = None
+        samples = []
+        for _ in range(args.best):
+            spark.sparkContext.setJobDescription(f"profile:{name}")
             t0 = time.time()
-            r = B.run_crawl(spark, 1200, 60000, True, 600.0,
-                            bloom_mode=args.mode,
-                            host_state_mode="dataframe")
-            print(json.dumps(r))
-            # per-round walls from the engine metrics are inside r? run_crawl
-            # drops them; re-read from the warehouse metrics table
-            mdf = spark.read.parquet(
-                "/tmp/spark_graft_bench_wh/tables/metrics/*")
-            rows = sorted((x["round"], round(x["wall_ms"] / 1000.0, 2))
-                          for x in mdf.collect())
-            print("per-round sec:", rows, "total", round(time.time() - t0, 2))
-    else:
-        r = B.run_sched(spark, args.urls, 2000, 0.3, 600.0, 16,
-                        bloom_mode=args.mode)
-        print(json.dumps(r))
+            df = qs[name](spark, sf_dir)
+            df.select(F.xxhash64(*df.columns).alias("_h")) \
+                .agg(F.expr("bit_xor(_h)")).collect()
+            dt = round(time.time() - t0, 3)
+            samples.append(dt)
+            best = dt if best is None else min(best, dt)
+        out[name] = {"best": best, "samples": samples}
+        print(json.dumps({name: out[name]}), flush=True)
+    print(json.dumps({"summary": {k: v["best"] for k, v in out.items()}}))
 
 
 if __name__ == "__main__":
