@@ -1548,28 +1548,6 @@ def _authority_crawl_expected() -> list[tuple]:
              r["discovery_seq"], r["fetch_slot"]) for r in res.fetched]
 
 
-def q_bucketed_crawl(spark, sf_dir):
-    """seen_layout="bucketed" (r5) LIVE in the engine: the url_seen
-    mirror bucketed by url_hash + the two-phase exchange-free exact
-    anti-join, run through a full crawl. Layout is pure physics —
-    the fetched table must equal the default layout's bit for bit, so
-    the oracle IS crawl_frontier's expected-row relation."""
-    import shutil
-    from ai_intel_web_scraper_spark.crawl.scheduler import (CrawlConfig,
-                                                            CrawlEngine)
-    wh = "/tmp/spark_graft_entry_wh_bucketed"
-    shutil.rmtree(wh, ignore_errors=True)
-    eng = CrawlEngine(spark, _crawl_fixture_paths(), wh,
-                      CrawlConfig(expected_urls=1 << 12,
-                                  write_payload=False,
-                                  seen_layout="bucketed",
-                                  round_seconds=120.0))
-    eng.run(max_rounds=4)
-    return (eng.store.read("fetched")
-            .select("url", "host", "depth", "round", "discovery_seq")
-            .orderBy("round", "depth", "discovery_seq"))
-
-
 def _crawl_frontier_expected() -> list[tuple]:
     """Run the pure-Python oracle crawler (oracle/crawler.py — the golden
     implementation the parity suite gates on) over the entry fixtures with
@@ -3375,9 +3353,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # means some age-2 stragglers are unavoidable; they lead next round).
     # r5 window = the 2 revenue keys (round()-free cents fix
     # verification; ship_probe_date retired — its question was answered
-    # in r4) + 10 new r5 queries (authority_crawl, bucketed_crawl,
-    # cms_point_queries, incremental_image_dedup, video_neardup,
-    # stream_image_dedup, webdataset_budget, crossmodal_topk,
+    # in r4) + 10 new r5 queries (authority_crawl, a bucketed-layout
+    # crawl since deleted, cms_point_queries, incremental_image_dedup,
+    # video_neardup, stream_image_dedup, webdataset_budget, crossmodal_topk,
     # audio_neardup, warc_source) + the 27 queries whose last green was
     # r2 + 11 of the 12 touched-by-r5-code keys (host_blocklist r4-green
     # slipped just past the fold, with the r3-green minhash_greedy /
@@ -3387,10 +3365,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- fix verification: round()-free revenue_cents (r5 task #1) --
         "top_revenue_orders": q_top_revenue_orders,
         "ship_probe_revenue": q_ship_probe_revenue,
-        # --- new in r5: authority feedback + bucketed layout LIVE, and
+        # --- new in r5: authority feedback LIVE, and
         # --- driver evidence for the late-r4 cms_estimates left-join fix
         "authority_crawl": q_authority_crawl,
-        "bucketed_crawl": q_bucketed_crawl,
         "cms_point_queries": q_cms_point_queries,
         "incremental_image_dedup": q_incremental_image_dedup,
         "video_neardup": q_video_neardup,
@@ -4934,13 +4911,6 @@ def oracle_sql() -> dict[str, str]:
                                     ["image_id", "chunk_index",
                                      "token_count", "chunk_text"])}""",
         "crawl_frontier": f"""
-            SELECT url, host, depth, round, discovery_seq
-            FROM {_sql_values_table(_crawl_frontier_expected(),
-                                    ["url", "host", "depth", "round",
-                                     "discovery_seq"])}""",
-        # bucketed_crawl: layout-invariance — the bucketed-layout crawl
-        # must value-hash EQUAL to the default layout's oracle relation
-        "bucketed_crawl": f"""
             SELECT url, host, depth, round, discovery_seq
             FROM {_sql_values_table(_crawl_frontier_expected(),
                                     ["url", "host", "depth", "round",

@@ -6,7 +6,7 @@ DataFrame-first, snapshot-checkpointed frontier scheduler plus a library of
 Spark operators (dedup, tagging, ranking, vector search, chunking).
 
 Nothing here is a port: the reference's while-loop becomes one DataFrame job
-per scheduling round; its in-memory `visited: set` becomes a bucketed
+per scheduling round; its in-memory `visited: set` becomes an insert-only
 `url_seen` table with a partitioned-bloom fast path; its `time.sleep`
 politeness becomes per-host quota windows.
 """

@@ -3,7 +3,7 @@ SURVEY C2).
 
 The reference keeps ``visited: set[str]`` in driver memory
 (reference scrapers/docs_scraper.py:117,124) — impossible at 10^10 URLs. The
-engine's ground truth is the bucketed ``url_seen`` table (exact anti-join);
+engine's ground truth is the insert-only ``url_seen`` table (exact anti-join);
 this module provides the probabilistic *pre-filter* that keeps the exact
 join's probe side small: candidates whose bloom probe says "definitely not
 seen" skip the join entirely; only "maybe seen" rows are confirmed exactly.
@@ -20,6 +20,13 @@ pass, and ``partial_bitmaps`` (inside ``mapInPandas``) builds the rows from
 scratch when the sidecar is rebuilt from url_seen. Double hashing
 (Kirsch-Mitzenmacher) derives K probe positions from the single 64-bit
 url_hash.
+
+One shard width per warehouse: every shard row is ``m_bits`` wide, and the
+engine's sidecar marker records that width. A resize (another
+``expected_urls``) makes the marker stale, so the engine rebuilds the
+shards from url_seen at the new width instead of probing rows of two
+widths. A probe meeting a row of another width raises ``ValueError``:
+probing at the wrong width yields false "definitely new" verdicts.
 """
 
 from __future__ import annotations
@@ -77,10 +84,31 @@ class BloomShards:
             shard = self.shards.get(int(b))
             if shard is None:
                 continue  # empty shard: nothing seen in this bucket
-            pos = _positions(hashes[mask], self.m_bits)
-            bits = (shard[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-            out[mask] = bits.all(axis=1)
+            out[mask] = _probe(shard, hashes[mask])
         return out
+
+
+def _bucket_bitmap(shards: pd.DataFrame, m_bits: int | None) -> np.ndarray | None:
+    """One bucket's bitmap (a writable copy) from its shard rows, or None
+    when the bucket has none. Every row must be `m_bits` wide (None: the
+    first row's width); a row of another width raises ValueError."""
+    bitmap = None
+    for raw in shards["bitmap"]:
+        arr = np.frombuffer(raw, dtype=np.uint8)
+        m_bits = m_bits or arr.size * 8
+        if arr.size * 8 != m_bits:
+            raise ValueError(
+                f"bloom shard row is {arr.size * 8} bits wide, the sidecar "
+                f"is {m_bits} bits: a resized sidecar must be rebuilt from "
+                "url_seen, never probed at two widths")
+        bitmap = arr.copy() if bitmap is None else bitmap | arr
+    return bitmap
+
+
+def _probe(bitmap: np.ndarray, hashes: np.ndarray) -> np.ndarray:
+    """True = maybe seen, False = definitely new."""
+    pos = _positions(hashes, bitmap.size * 8)
+    return ((bitmap[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1).all(axis=1)
 
 
 def partitioned_probe_fn(out_columns: list[str]):
@@ -88,36 +116,17 @@ def partitioned_probe_fn(out_columns: list[str]):
     shard rows) -> candidates + `maybe` flag. Each task receives ONLY its
     bucket's bitmap (once per bucket, not per row) — the executor-resident
     alternative to broadcasting the whole sidecar; at 10^10 URLs the
-    sidecar never exists as one object anywhere.
-
-    Probe width is SELF-DESCRIBED by each shard row (len(bitmap)*8), never
-    taken from engine config: a warehouse reopened with a different
-    expected_urls/n_buckets sizing must still probe the stored shards at
-    the width they were built with (a wrong-width probe yields false
-    'definitely new' verdicts that bypass the exact anti-join). Mixed
-    widths merge per-width and OR the verdicts, so old and new sizings
-    coexist correctly until the next rebuild/compaction."""
+    sidecar never exists as one object anywhere. The probe width is the
+    shard rows' own width (all rows share it)."""
     def fn(cand: pd.DataFrame, shards: pd.DataFrame) -> pd.DataFrame:
         out = cand[out_columns].copy()
         if len(cand) == 0:
             out["maybe"] = pd.Series([], dtype=bool)
             return out
-        if len(shards) == 0:
-            out["maybe"] = False  # no shard: nothing seen in this bucket
-            return out
-        by_width: dict[int, np.ndarray] = {}
-        for raw in shards["bitmap"]:
-            arr = np.frombuffer(raw, dtype=np.uint8)
-            w = arr.size * 8
-            by_width[w] = (arr.copy() if w not in by_width
-                           else np.bitwise_or(by_width[w], arr))
-        hashes = cand["url_hash"].to_numpy()
-        maybe = np.zeros(len(cand), dtype=bool)
-        for w, bitmap in by_width.items():
-            pos = _positions(hashes, w)
-            bits = (bitmap[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-            maybe |= bits.all(axis=1)
-        out["maybe"] = maybe
+        bitmap = _bucket_bitmap(shards, None)
+        # no shard: nothing seen in this bucket
+        out["maybe"] = (False if bitmap is None
+                        else _probe(bitmap, cand["url_hash"].to_numpy()))
         return out
     return fn
 
@@ -125,55 +134,40 @@ def partitioned_probe_fn(out_columns: list[str]):
 def partitioned_probe_upsert_fn(out_columns: list[str], m_bits: int):
     """Fused cogrouped probe + shard update (r6): one pass per bucket
     emits BOTH the probed candidate rows (`maybe` flag, `bitmap` null)
-    and the bucket's updated shard rows (`bitmap` set, candidate columns
-    null). This replaces a separate per-round update job (partial bitmaps
-    of the new urls, OR-merged per bucket into the stored rows): the
-    probe task already holds the bucket's bitmap and its candidate
+    and the bucket's one updated shard row (`bitmap` set, candidate
+    columns null). This replaces a separate per-round update job (partial
+    bitmaps of the new urls, OR-merged per bucket into the stored rows):
+    the probe task already holds the bucket's bitmap and its candidate
     hashes, so inserting is free.
 
     Correctness of inserting ALL candidates (not just the post-anti-join
     new urls): a candidate probing `maybe` has, by definition of the
     probe, all K of its bit positions already set — OR-ing them in is a
     bit-level no-op — while every `not maybe` candidate is definitely
-    new and would have been inserted anyway. So on a single-width shard
-    the updated bitmap is bit-identical to the old two-pass update. On
-    a mixed-width warehouse (expected_urls resize) the engine-width
-    shard may gain bits for rows whose `maybe` came from an old-width
-    row; the sidecar stays a superset of url_seen (the only invariant
-    probing correctness needs — extra bits can only add false
-    positives, which the exact anti-join resolves).
-
-    New bits always land in the ENGINE-width (`m_bits`) row, created on
-    demand; rows of other widths pass through untouched."""
+    new and would have been inserted anyway. So the updated bitmap is
+    bit-identical to the old two-pass update. Every shard row must be
+    `m_bits` wide."""
     _NULLABLE = {"int8": "Int8", "int16": "Int16", "int32": "Int32",
                  "int64": "Int64", "uint8": "UInt8", "uint16": "UInt16",
                  "uint32": "UInt32", "uint64": "UInt64", "bool": "boolean"}
 
     def fn(cand: pd.DataFrame, shards: pd.DataFrame) -> pd.DataFrame:
-        by_width: dict[int, np.ndarray] = {}
-        for raw in shards["bitmap"] if len(shards) else []:
-            arr = np.frombuffer(raw, dtype=np.uint8)
-            w = arr.size * 8
-            by_width[w] = (arr.copy() if w not in by_width
-                           else np.bitwise_or(by_width[w], arr))
+        bitmap = _bucket_bitmap(shards, m_bits)
         out = cand[out_columns].copy()
         if len(cand):
             hashes = cand["url_hash"].to_numpy()
-            maybe = np.zeros(len(cand), dtype=bool)
-            for w, bitmap in by_width.items():
-                pos = _positions(hashes, w)
-                bits = (bitmap[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-                maybe |= bits.all(axis=1)
-            out["maybe"] = maybe
-            # insert all candidate hashes into the engine-width shard
-            shard = by_width.setdefault(
-                m_bits, np.zeros(m_bits // 8, dtype=np.uint8))
+            if bitmap is None:
+                out["maybe"] = np.zeros(len(cand), dtype=bool)
+                bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
+            else:
+                out["maybe"] = _probe(bitmap, hashes)
+            # insert all candidate hashes into the bucket's shard
             pos = _positions(hashes, m_bits).ravel()
-            np.bitwise_or.at(shard, pos >> 3,
+            np.bitwise_or.at(bitmap, pos >> 3,
                              np.uint8(1) << (pos & 7).astype(np.uint8))
         else:
             out["maybe"] = pd.Series([], dtype="boolean")
-        # nullable dtypes throughout: the shard rows carry None in the
+        # nullable dtypes throughout: the shard row carries None in the
         # candidate columns, and a plain int64 column holding None gets
         # silently promoted to float64 (53-bit mantissa — corrupts 64-bit
         # url_hash values; the pinned pandas None-poisoning trap)
@@ -181,15 +175,14 @@ def partitioned_probe_upsert_fn(out_columns: list[str], m_bits: int):
             nl = _NULLABLE.get(str(out[c].dtype))
             if nl is not None:
                 out[c] = out[c].astype(nl)
-        n_sh = len(by_width)
+        bitmaps = [] if bitmap is None else [bitmap.tobytes()]
         shard_rows = pd.DataFrame(
-            {c: pd.array([None] * n_sh, dtype=out[c].dtype)
+            {c: pd.array([None] * len(bitmaps), dtype=out[c].dtype)
              for c in out.columns})
         b = int((cand if len(cand) else shards)["bucket"].iloc[0])
-        shard_rows["bucket"] = pd.array([b] * n_sh,
+        shard_rows["bucket"] = pd.array([b] * len(bitmaps),
                                         dtype=out["bucket"].dtype)
-        shard_rows["bitmap"] = pd.Series(
-            [v.tobytes() for v in by_width.values()], dtype=object)
+        shard_rows["bitmap"] = pd.Series(bitmaps, dtype=object)
         out["bitmap"] = pd.Series([None] * len(out), dtype=object)
         return pd.concat([out, shard_rows], ignore_index=True)
     return fn

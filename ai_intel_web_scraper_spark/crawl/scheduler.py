@@ -52,7 +52,6 @@ Crawl semantics contract: see semantics.py (shared with the oracle).
 from __future__ import annotations
 
 import json
-import os
 import time
 from dataclasses import dataclass
 
@@ -259,21 +258,6 @@ class CrawlConfig:
     # preseed; `sources/sitemaps.py`). Off by default: the baseline
     # parity corpus seeds only from the seed list.
     preseed_sitemaps: bool = False
-    # url_seen storage layout for the exact anti-join (r5):
-    # "snapshot": read the snapshot-store parquet (shuffles the full seen
-    #   set into the anti-join every round).
-    # "bucketed": additionally mirror url_seen into a catalog table
-    #   bucketed by url_hash (`sources/bucketed.py`; Iceberg
-    #   bucket(N, url_hash) at the swap point) and run the exact check
-    #   as a co-located hash-equi join + tiny exact-url confirm — the
-    #   10^10-row seen side is never re-shuffled (plan-asserted). The
-    #   snapshot table remains the source of truth: a validity marker
-    #   (buckets + round) forces a rebuild after any mode/bucket change
-    #   or lost catalog, and reads filter round_added <= committed round
-    #   so crash-leftover appends are invisible (duplicates from a
-    #   resumed round are harmless set-semantics extras).
-    seen_layout: str = "snapshot"
-    seen_buckets: int | None = None   # default: max(16, 2 * parallelism)
 
     def __post_init__(self) -> None:
         if self.bloom_mode != _SIDECAR_REPR:
@@ -361,92 +345,19 @@ class CrawlEngine:
         return seen.select(self._bucket("url_hash").alias("bucket"),
                            "url_hash", "url")
 
-    # ------------------------------------------- bucketed url_seen (r5)
-    def _seen_table_name(self) -> str:
-        import hashlib
-        h = hashlib.md5(self.store.root.encode()).hexdigest()[:12]
-        return f"crawl_url_seen_{h}"
-
-    def _seen_buckets(self) -> int:
-        if self.cfg.seen_buckets:
-            return self.cfg.seen_buckets
-        return max(16, 2 * self.spark.sparkContext.defaultParallelism)
-
-    def _seen_layout_valid(self) -> bool:
-        """The bucketed mirror is trustworthy only if the LAST commit
-        maintained it at the current bucket count and the catalog still
-        knows the table (a fresh session's in-memory catalog forgets it;
-        the rebuild is always correct)."""
-        raw = self.store.read_blob("seen_layout_meta")
-        if raw is None:
-            return False
-        try:
-            meta = json.loads(raw)
-        except ValueError:
-            return False
-        snap = self.store.snapshot() or {}
-        return (meta.get("buckets") == self._seen_buckets()
-                and meta.get("round") == snap.get("round")
-                and self.spark.catalog.tableExists(self._seen_table_name()))
-
-    def _seen_catalog_write(self, rows: DataFrame, mode: str) -> None:
-        from ..sources.bucketed import write_bucketed
-        name = self._seen_table_name()
-        if mode == "overwrite":
-            # a fresh session's in-memory catalog forgets the table but
-            # its warehouse dir survives — saveAsTable then fails with
-            # LOCATION_ALREADY_EXISTS; clear both before rebuilding
-            import shutil
-            from urllib.parse import urlparse
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            wdir = urlparse(
-                self.spark.conf.get("spark.sql.warehouse.dir")).path
-            shutil.rmtree(os.path.join(wdir, name), ignore_errors=True)
-        write_bucketed(rows.select("url_hash", "url", "round_added"),
-                       name, "url_hash", self._seen_buckets(), mode=mode)
-
-    def _rebuild_seen_catalog(self) -> None:
-        self._seen_catalog_write(
-            self.store.read("url_seen"), "overwrite")
-
     def _anti_seen(self, cand: DataFrame) -> DataFrame:
-        """Exact not-yet-seen filter for candidate rows.
+        """Exact not-yet-seen filter for candidate rows: one left-anti join
+        against the committed url_seen on (bucket, url_hash, url). The url
+        is part of the key because url_hash alone is not a correctness key
+        at 10^10 URLs (64-bit collisions are expected at that scale).
 
-        snapshot layout: one left-anti join on (bucket, url_hash, url) —
-        correct, but the seen side shuffles every round.
-
-        bucketed layout: v1 bucketing elides the Exchange only when the
-        join keys EQUAL the bucket column (probed r5: a superset key
-        re-shuffles both sides), and url_hash alone is not a correctness
-        key at 10^10 URLs (64-bit collisions are expected at that
-        scale). So the exact check runs in two phases:
-          1. candidates ⋈ seen on url_hash ALONE (inner,
-             SortMergeJoin): co-located with the table layout — ZERO
-             Exchange on the seen side, one on the per-round candidate
-             delta. The url-equality check must NOT be a plain filter
-             on the join output: Catalyst would merge it into the join
-             condition, re-keying it to (url_hash, url) and
-             re-shuffling both sides (observed r5). It therefore sits
-             behind a groupBy fence — aggregate max(_seen_url = url)
-             per candidate url, filter on the AGGREGATED flag.
-          2. the truly-seen set (true hits + rare collisions, bounded
-             by the delta) anti-joins back — AQE-broadcastable.
-        Reads filter round_added <= the committed round so appends from
-        a crashed round never leak into a resume."""
-        if self.cfg.seen_layout != "bucketed":
-            return cand.join(self._seen(),
-                             ["bucket", "url_hash", "url"], "left_anti")
-        from ..sources.bucketed import read_bucketed
-        snap_round = int((self.store.snapshot() or {}).get("round", -1))
-        seen = (read_bucketed(self.spark, self._seen_table_name())
-                .where(F.col("round_added") <= F.lit(snap_round))
-                .select("url_hash", F.col("url").alias("_seen_url")))
-        m = cand.select("url_hash", "url").join(seen, "url_hash", "inner")
-        hits = (m.groupBy("url")
-                .agg(F.max(F.col("_seen_url") == F.col("url"))
-                     .alias("_hit"))
-                .where(F.col("_hit")).select("url"))
-        return cand.join(hits, "url", "left_anti")
+        The seen side shuffles every round. At 10^10 URLs it needs a
+        storage-partitioned join (Iceberg SPJ on bucket(N, url_hash)) so
+        the seen side is never re-shuffled; this parquet snapshot store
+        cannot express one. The bloom pre-filter keeps the probe side to
+        the "maybe seen" candidates meanwhile."""
+        return cand.join(self._seen(), ["bucket", "url_hash", "url"],
+                         "left_anti")
 
     def _authority_rank_view(self, frontier: DataFrame, round_no: int,
                              width: int) -> DataFrame:
@@ -508,9 +419,10 @@ class CrawlEngine:
     # disabled append url_seen without touching the shards, and an
     # out-of-date sidecar's false "definitely new" verdicts would bypass
     # the exact anti-join. The marker records which representation was
-    # maintained, at which bucketing, by which round; any mismatch forces
-    # a rebuild from url_seen (always correct), also when the marker names
-    # a representation an older engine wrote.
+    # maintained, at which bucketing and shard width (m_bits), by which
+    # round; any mismatch forces a rebuild from url_seen (always
+    # correct), also when the marker names a representation an older
+    # engine wrote or an expected_urls resize changed the width.
     def _sidecar_valid(self) -> bool:
         raw = self.store.read_blob("sidecar_meta")
         if raw is None:
@@ -522,12 +434,13 @@ class CrawlEngine:
         snap = self.store.snapshot() or {}
         return (meta.get("repr") == _SIDECAR_REPR
                 and meta.get("n_buckets") == self.cfg.n_buckets
+                and meta.get("m_bits") == self._bloom_m
                 and meta.get("round") == snap.get("round"))
 
     def _stage_sidecar_meta(self, round_no: int) -> None:
         self.store.stage_blob("sidecar_meta", json.dumps(
             {"repr": _SIDECAR_REPR, "n_buckets": self.cfg.n_buckets,
-             "round": round_no}).encode())
+             "m_bits": self._bloom_m, "round": round_no}).encode())
 
     def _apply_url_policies(self, df: DataFrame, cfg: DataFrame) -> DataFrame:
         """Join host config and tag rows rejected by exclude patterns
@@ -639,11 +552,6 @@ class CrawlEngine:
                 "bloom_shards", self._shard_partials(frontier, width),
                 "replace"))
             self._stage_sidecar_meta(0)
-        if self.cfg.seen_layout == "bucketed":
-            tasks.append(lambda: self._seen_catalog_write(url_seen,
-                                                          "overwrite"))
-            self.store.stage_blob("seen_layout_meta", json.dumps(
-                {"buckets": self._seen_buckets(), "round": 0}).encode())
         with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
             for f in [pool.submit(t) for t in tasks]:
                 f.result()
@@ -682,11 +590,6 @@ class CrawlEngine:
         # resolve -> policy chain), the probe cogroup and every write
         width = self._width(self.store.row_count("frontier"))
         frontier = self._narrow(self.store.read("frontier"), width)
-        if cfg.seen_layout == "bucketed" and not self._seen_layout_valid():
-            # mode switch / bucket-count change / fresh session catalog:
-            # rebuild the bucketed mirror from the committed url_seen
-            # (always correct; the anti-join below reads it lazily)
-            self._rebuild_seen_catalog()
 
         # -- politeness quota (SURVEY C9): two-phase salted ranking ---------
         # quota = min(max(round_seconds/crawl_delay, 1), remaining budget)
@@ -836,9 +739,9 @@ class CrawlEngine:
             if snap_tables.get("bloom_shards") and self._sidecar_valid():
                 shards_df = self.store.read("bloom_shards")
             else:  # stale (rounds ran with probing off) / n_buckets
-                # change / fresh enable / older representation: rebuild
-                # from url_seen, still executor-side (staged with this
-                # round's update)
+                # or width change / fresh enable / older representation:
+                # rebuild from url_seen, still executor-side (staged with
+                # this round's update)
                 shards_df = self._cache(
                     self._shard_partials(self._seen(), width))
             # fused probe+insert (r6): the same cogroup pass emits the
@@ -990,19 +893,12 @@ class CrawlEngine:
             ("fetched", fetched_rows, "append"),
             ("failures", failure_rows, "append"),
         ]
-        # the per-round STATE updates (bucketed-seen mirror append,
-        # host_state budget update, sidecar shard update) read only the
-        # persisted fetch/new_urls/probed caches, so they join the same
-        # concurrent batch as the sinks instead of running sequentially
-        # after it — at toy scale each serialized small job costs a full
-        # scheduling round trip
+        # the per-round STATE updates (host_state budget update, sidecar
+        # shard update) read only the persisted fetch/probed caches, so
+        # they join the same concurrent batch as the sinks instead of
+        # running sequentially after it — at toy scale each serialized
+        # small job costs a full scheduling round trip
         tasks = []
-        if cfg.seen_layout == "bucketed":
-            tasks.append(lambda: self._seen_catalog_write(
-                self._narrow(new_urls.select(
-                    "url_hash", "url", F.lit(round_no).alias("round_added")),
-                    width),
-                "append"))
         succ = (fetch.where(F.col("outcome") == "success")
                 .groupBy("host").agg(F.count("*").alias("_ok")))
         new_hs = (self.store.read("host_state")
@@ -1048,16 +944,6 @@ class CrawlEngine:
         # separately in reject_counts / the edges table
         n_discovered = int(policy_counts.get("ok", 0))
         n_new = int(sum(lineage.values()))
-        if cfg.seen_layout == "bucketed":
-            # the delta was appended to the bucketed mirror BEFORE the
-            # commit (in the concurrent batch above): a crash in between
-            # leaves the marker at R-1 and reads filter round_added <=
-            # committed round, so leftover rows are invisible until the
-            # resumed round re-commits (duplicates are set-semantics
-            # extras; see CrawlConfig)
-            self.store.stage_blob("seen_layout_meta", json.dumps(
-                {"buckets": self._seen_buckets(),
-                 "round": round_no}).encode())
         if cfg.use_bloom:
             self._stage_sidecar_meta(round_no)
         frontier_size = self.store.staged_row_count("frontier")

@@ -13,7 +13,9 @@ the engine needs with the same mechanics Iceberg uses:
 - a commit writes the manifest then atomically flips the ``CURRENT`` pointer
   (``os.replace``), so a crash mid-round leaves orphan dirs that no manifest
   references — reads at CURRENT are unaffected and resume is bit-identical;
-- binary sidecars (the per-bucket bloom filters) version with the snapshot.
+- binary blobs (the bloom sidecar's validity marker) belong to the commit
+  that staged them: a manifest lists only the blobs its own commit staged,
+  so a blob no round writes any more is freed by ``expire_snapshots``.
 
 Swapping this for real Iceberg is localized to this module: append →
 ``writeTo(t).append()``, replace → ``overwritePartitions``, snapshot pin →
@@ -216,8 +218,7 @@ class SnapshotStore:
                 rows[table] = self._rows_of(st)
             elif table in rows:
                 rows[table] += self._rows_of(st)
-        blobs = dict((parent or {}).get("blobs", {}))
-        blobs.update(self._staged_blobs)
+        blobs = dict(self._staged_blobs)
         manifest = {
             "snapshot_id": snap_id,
             "parent_id": parent_id,

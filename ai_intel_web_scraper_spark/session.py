@@ -41,10 +41,8 @@ def get_spark(app: str = "ai_intel_web_scraper_spark",
          # let AQE rewrite sort-merge joins to shuffled-hash at runtime
          # when every post-shuffle partition fits the local-map threshold
          # (guide §3.1): skips both sort passes; off by default upstream
-         # (0). Parameterized for clusters with tighter executor memory;
-         # bucketed zero-Exchange joins have no shuffle stage, so their
-         # co-located SortMergeJoin plans are untouched. AQE skew-join
-         # splitting applies to shuffled-hash joins too.
+         # (0). Parameterized for clusters with tighter executor memory.
+         # AQE skew-join splitting applies to shuffled-hash joins too.
          .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                  os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "256m"))
          .config("spark.sql.session.timeZone", "UTC")

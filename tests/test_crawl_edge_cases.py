@@ -142,12 +142,11 @@ def test_bloom_toggle_across_resume_never_refetches(spark, tmp_path):
     """bloom on -> resume with bloom off -> resume with bloom on: the
     sidecar must stay a superset of url_seen (rebuilt from url_seen when
     the rounds in between did not maintain it) so no URL is ever fetched
-    twice."""
-    chain = {f"{BASE}/p/{i}": [f"{BASE}/p/{i+1}"] for i in range(6)}
-    chain[f"{BASE}/p/6"] = [f"{BASE}/p/0"]  # cycle back: refetch bait
+    twice. p/3 is first seen in a probing-off round, so only the rebuild
+    keeps it out of round 7's fetches."""
     fx = _mini_fixtures(str(tmp_path / "fx"),
                         seeds=[(0, f"{BASE}/p/0", 0.5)],
-                        pages=chain, max_pages=50, max_depth=10)
+                        pages=_chain_back_to(3), max_pages=50, max_depth=10)
     wh = str(tmp_path / "wh")
     CrawlEngine(spark, fx, wh, CrawlConfig(
         write_payload=False, use_bloom=True, expected_urls=1024)).run(
@@ -164,22 +163,29 @@ def test_bloom_toggle_across_resume_never_refetches(spark, tmp_path):
 
 
 @pytest.mark.parametrize("mode_seq", [
-    ("partitioned", None, "partitioned"),   # probing-off rounds between
+    # probing-off rounds twice: the sidecar rebuilt after the first is
+    # stale again after the second
+    ("partitioned", None, "partitioned", None, "partitioned"),
 ])
 def test_sidecar_mode_switches_never_refetch(spark, tmp_path, mode_seq):
     """Resuming after probing-disabled rounds must NOT trust the now-stale
     sidecar: URLs first seen by the intervening rounds would probe
     'definitely new' and be fetched twice. The validity marker forces a
-    rebuild from url_seen instead."""
+    rebuild from url_seen on every such resume, also one following a
+    resume that already rebuilt. Each leg but the last runs one round,
+    and the chain closes at the page first seen in the last probing-off
+    round."""
+    last_off = max(i for i, m in enumerate(mode_seq) if m is None)
     fx = _mini_fixtures(str(tmp_path / "fx"),
                         seeds=[(0, f"{BASE}/p/0", 0.5)],
-                        pages=_chain_back_to(3), max_pages=50, max_depth=10)
+                        pages=_chain_back_to(last_off + 1),
+                        max_pages=50, max_depth=10)
     wh = str(tmp_path / "wh")
     for i, mode in enumerate(mode_seq):
         cfg = CrawlConfig(write_payload=False, expected_urls=1024,
                           use_bloom=mode is not None)
         eng = CrawlEngine(spark, fx, wh, cfg)
-        eng.run(max_rounds=2 if i < len(mode_seq) - 1 else None)
+        eng.run(max_rounds=1 if i < len(mode_seq) - 1 else None)
     fetched = eng.store.read("fetched")
     assert fetched.count() == fetched.select("url").distinct().count()
     assert fetched.count() == 7  # the whole chain, each exactly once
@@ -201,17 +207,57 @@ def test_sidecar_marker_naming_removed_repr_rebuilds(spark, tmp_path):
     eng = CrawlEngine(spark, fx, wh, CrawlConfig(
         write_payload=False, expected_urls=1024, use_bloom=False))
     eng.run(max_rounds=2)
-    snap = eng.store.snapshot()
-    with open(os.path.join(wh, "blobs", snap["blobs"]["sidecar_meta"]),
-              "w") as f:
-        json.dump({"repr": "cuckoo", "n_buckets": 16,
-                   "round": snap["round"]}, f)
+    committed = eng.store.snapshot()["round"]
+    eng.store.stage_blob("sidecar_meta", json.dumps(
+        {"repr": "cuckoo", "n_buckets": 16, "m_bits": eng._bloom_m,
+         "round": committed}).encode())
+    eng.store.commit(committed)
     eng = CrawlEngine(spark, fx, wh, CrawlConfig(
         write_payload=False, expected_urls=1024))
     eng.run()
     fetched = eng.store.read("fetched")
     assert fetched.count() == fetched.select("url").distinct().count()
     assert fetched.count() == 7  # the whole chain, each exactly once
+
+
+def test_legacy_blobs_leave_manifest_and_disk(spark, tmp_path):
+    """A blob no round writes any more (an older engine's `bloom` filter
+    and bucketed-layout `seen_layout_meta` marker) is not carried into
+    the next manifest, so expire_snapshots frees it; the crawl is
+    unaffected."""
+    import json
+
+    fx = _mini_fixtures(str(tmp_path / "fx"),
+                        seeds=[(0, f"{BASE}/p/0", 0.5)],
+                        pages=_chain_back_to(3), max_pages=50, max_depth=10)
+    wh = str(tmp_path / "wh")
+    eng = CrawlEngine(spark, fx, wh, CrawlConfig(
+        write_payload=False, expected_urls=1024))
+    eng.run(max_rounds=1)
+    store = eng.store
+    committed = store.snapshot()["round"]
+    store.stage_blob("bloom", bytes(128))
+    store.stage_blob("seen_layout_meta", json.dumps(
+        {"buckets": 16, "round": committed}).encode())
+    store.commit(committed)
+    legacy = {store.snapshot()["blobs"][n]
+              for n in ("bloom", "seen_layout_meta")}
+    eng.run(max_rounds=1)
+    store.expire_snapshots(keep_last=1)
+    assert set(store.snapshot()["blobs"]) == {"sidecar_meta"}
+    on_disk = set(os.listdir(os.path.join(wh, "blobs")))
+    assert on_disk == set(store.snapshot()["blobs"].values())
+    assert not on_disk & legacy
+    eng.run()
+    want = oracle_crawl(fx)
+    got = [(r["url"], r["round"], r["depth"], r["discovery_seq"]) for r in
+           store.read("fetched")
+           .select("url", "round", "depth", "discovery_seq")
+           .orderBy("round", "depth", "discovery_seq").collect()]
+    assert got == [(r["url"], r["round"], r["depth"], r["discovery_seq"])
+                   for r in want.fetched]
+    assert {r["url"] for r in store.read("url_seen").collect()} \
+        == want.url_seen
 
 
 def test_n_buckets_resize_resume_never_refetches(spark, tmp_path):
@@ -310,11 +356,12 @@ def test_dataframe_host_state_mode_is_bit_identical(spark, fixtures,
 
 
 def test_partitioned_probe_self_describes_width_and_merges_mixed(spark):
-    """A warehouse reopened with a different expected_urls sizing leaves
-    shard rows of two widths in the same bucket: the probe must read each
-    at its own width (len(bitmap)*8) and OR the verdicts — probing a
-    stored shard at the wrong width would yield false 'definitely new'
-    verdicts that bypass the exact anti-join."""
+    """The probe-only function reads its width from the shard rows
+    themselves (len(bitmap)*8), so a warehouse sized by another
+    expected_urls probes correctly at its own width. Rows of two widths
+    in one bucket are never merged: probing a stored shard at the wrong
+    width would yield false 'definitely new' verdicts that bypass the
+    exact anti-join, so the probe refuses them, naming both widths."""
     import numpy as np
     import pandas as pd
 
@@ -330,21 +377,25 @@ def test_partitioned_probe_self_describes_width_and_merges_mixed(spark):
         b.add_many(np.zeros(len(keys), dtype=np.int64), keys)
         return b.shards[0].tobytes()
 
-    shards = pd.DataFrame({
+    probe = partitioned_probe_fn(["url_hash", "bucket"])
+    for keys, m_bits in ((old_keys, 1 << 14), (new_keys, 1 << 17)):
+        cand = pd.DataFrame({"url_hash": np.concatenate([keys, absent]),
+                             "bucket": 0})
+        maybe = probe(cand, pd.DataFrame(
+            {"bucket": [0], "bitmap": [shard_row(keys, m_bits)]})
+        )["maybe"].to_numpy()
+        # zero false negatives at the row's own width
+        assert maybe[:500].all()
+        # and the filter still prunes: most absent keys read definitely-new
+        assert (~maybe[500:]).sum() > 400
+    mixed = pd.DataFrame({
         "bucket": [0, 0],
         "bitmap": [shard_row(old_keys, 1 << 14),   # old sizing
                    shard_row(new_keys, 1 << 17)],  # reopened, resized
     })
-    cand = pd.DataFrame({
-        "url_hash": np.concatenate([old_keys, new_keys, absent]),
-        "bucket": 0,
-    })
-    out = partitioned_probe_fn(["url_hash", "bucket"])(cand, shards)
-    maybe = out["maybe"].to_numpy()
-    # zero false negatives for keys in EITHER width's shard
-    assert maybe[:1000].all()
-    # and the filter still prunes: most absent keys read definitely-new
-    assert (~maybe[1000:]).sum() > 400
+    cand = pd.DataFrame({"url_hash": old_keys, "bucket": 0})
+    with pytest.raises(ValueError, match=f"{1 << 17}.*{1 << 14}"):
+        probe(cand, mixed)
 
 
 @pytest.mark.parametrize("kw", [{"bloom_mode": "broadcast"},
@@ -393,19 +444,21 @@ def test_partitioned_bloom_resume_with_resized_filter_never_refetches(
         spark, tmp_path, mode, tbl):
     """The ADVICE scenario end-to-end: crawl with one expected_urls
     sizing, then RESUME the same
-    warehouse with a 16x larger sizing (different shard width). Stored
-    shards must be probed at their own self-described width — a
-    wrong-width probe yields false 'definitely new' verdicts that bypass
-    the exact anti-join and refetch seen URLs."""
+    warehouse with a 16x larger sizing (different shard width). The
+    sidecar marker records the width, so the resized engine rebuilds the
+    shards from url_seen at its own width — a wrong-width probe yields
+    false 'definitely new' verdicts that bypass the exact anti-join and
+    refetch seen URLs."""
     chain = {f"{BASE}/p/{i}": [f"{BASE}/p/{i+1}"] for i in range(8)}
     chain[f"{BASE}/p/8"] = [f"{BASE}/p/0"]  # cycle back: refetch bait
     fx = _mini_fixtures(str(tmp_path / "fx"),
                         seeds=[(0, f"{BASE}/p/0", 0.5)],
                         pages=chain, max_pages=50, max_depth=12)
     wh = str(tmp_path / "wh")
-    CrawlEngine(spark, fx, wh, CrawlConfig(
+    first = CrawlEngine(spark, fx, wh, CrawlConfig(
         write_payload=False, bloom_mode=mode,
-        expected_urls=1 << 10)).run(max_rounds=3)
+        expected_urls=1 << 10))
+    first.run(max_rounds=3)
     eng = CrawlEngine(spark, fx, wh, CrawlConfig(
         write_payload=False, bloom_mode=mode,
         expected_urls=1 << 14))
@@ -413,10 +466,11 @@ def test_partitioned_bloom_resume_with_resized_filter_never_refetches(
     fetched = eng.store.read("fetched")
     assert fetched.count() == fetched.select("url").distinct().count()
     assert fetched.count() == 9  # the whole chain, each exactly once
-    # and the resized run's new shards coexist with the old-width rows
+    # the resize rebuilt the shards: every row is the resized width
+    assert first._bloom_m != eng._bloom_m
     widths = {len(bytes(r["bitmap"])) * 8 for r in
               eng.store.read(tbl).collect()}
-    assert len(widths) >= 1
+    assert widths == {eng._bloom_m}
 
 
 def test_sitemap_preseed_crawl_parity(spark, fixtures):

@@ -198,91 +198,6 @@ def test_priority_rank_mode_matches_oracle(spark, fixtures, oracle):
     assert any(bfs_slots[k] != prio_slots[k] for k in common)
 
 
-def test_bucketed_seen_layout_matches_default(spark, fixtures, engine):
-    """seen_layout='bucketed' (r5): the url_seen mirror bucketed by
-    url_hash + the two-phase exact anti-join must produce the identical
-    crawl — layout is pure physics, invisible to semantics."""
-    wh = "/tmp/spark_graft_wh_bucketed"
-    shutil.rmtree(wh, ignore_errors=True)
-    eb = CrawlEngine(spark, fixtures, wh,
-                     CrawlConfig(seen_layout="bucketed",
-                                 write_payload=False))
-    eb.run()
-    a = [(r["url"], r["round"], r["discovery_seq"]) for r in
-         eb.store.read("fetched").select("url", "round", "depth",
-                                         "discovery_seq")
-         .orderBy("round", "depth", "discovery_seq").collect()]
-    b = [(r["url"], r["round"], r["discovery_seq"]) for r in
-         engine.store.read("fetched").select("url", "round", "depth",
-                                             "discovery_seq")
-         .orderBy("round", "depth", "discovery_seq").collect()]
-    assert a == b
-    seen_b = {r["url"] for r in
-              eb.store.read("url_seen").select("url").collect()}
-    seen_d = {r["url"] for r in
-              engine.store.read("url_seen").select("url").collect()}
-    assert seen_b == seen_d
-
-
-def test_bucketed_seen_rebuild_after_lost_catalog(spark, fixtures, engine):
-    """A fresh session's in-memory catalog forgets the bucketed mirror;
-    the validity marker must force a rebuild from the snapshot url_seen
-    and the resumed crawl must stay bit-identical. Simulated by DROPPING
-    the catalog table mid-crawl."""
-    wh = "/tmp/spark_graft_wh_bucketed_resume"
-    shutil.rmtree(wh, ignore_errors=True)
-    cfg = CrawlConfig(seen_layout="bucketed", write_payload=False)
-    e1 = CrawlEngine(spark, fixtures, wh, cfg)
-    e1.run(max_rounds=3)
-    spark.sql(f"DROP TABLE IF EXISTS {e1._seen_table_name()}")
-    assert not e1._seen_layout_valid()
-    e2 = CrawlEngine(spark, fixtures, wh, cfg)   # resume: rebuild path
-    e2.run()
-    got = {(r["url"], r["round"], r["discovery_seq"]) for r in
-           e2.store.read("fetched")
-           .select("url", "round", "discovery_seq").collect()}
-    want = {(r["url"], r["round"], r["discovery_seq"]) for r in
-            engine.store.read("fetched")
-            .select("url", "round", "discovery_seq").collect()}
-    assert got == want
-
-
-def test_bucketed_anti_seen_plan_shape(spark, fixtures):
-    """The scale contract of the bucketed layout (plan-asserted, with
-    broadcast disabled to expose the worst case): phase 1 joins on
-    url_hash ALONE (the r5 Catalyst regression — a pushed url-equality
-    filter re-keys the join — is fenced behind a groupBy), and the ONLY
-    url_hash Exchange is on the per-round candidate side: the seen
-    table's scan feeds the join with zero shuffle."""
-    wh = "/tmp/spark_graft_wh_bucketed_plan"
-    shutil.rmtree(wh, ignore_errors=True)
-    eng = CrawlEngine(spark, fixtures, wh,
-                      CrawlConfig(seen_layout="bucketed",
-                                  write_payload=False))
-    eng.run(max_rounds=3)
-    cand = (eng.store.read("url_seen")
-            .select("url_hash", "url", F.lit("h").alias("host"),
-                    F.lit(1).alias("depth"),
-                    F.lit(5).cast("long").alias("discovery_seq"),
-                    F.col("bucket")))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = eng._anti_seen(cand)
-        assert j.count() == 0          # every candidate is already seen
-        plan = j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "Bucketed: true" in plan, plan
-    assert plan.count("Exchange hashpartitioning(url_hash") == 1, plan
-    inner = [ln for ln in plan.splitlines()
-             if "Join" in ln and ", Inner" in ln]
-    assert len(inner) == 1, plan
-    # single-key join: one column per key list
-    keys = inner[0].split("[")[1].split("]")[0]
-    assert keys.count("#") == 1 and "url_hash" in keys, inner[0]
-
-
 def test_authority_rank_mode_matches_oracle(spark, fixtures, oracle):
     """rank_mode='authority' (r5): the engine recomputes integer PageRank
     over the recorded edge table each round and ranks the frontier by the
@@ -566,27 +481,3 @@ def test_crawl_with_periodic_expiry_matches_unexpired_crawl(spark, fixtures,
     got, store = run(str(tmp_path / "wb"), expire_every=2, expire_keep=2)
     assert got == base and len(got) > 0
     assert len(store.history()) <= 3  # horizon enforced (keep 2 + commit)
-
-
-def test_authority_and_bucketed_compose(spark, fixtures):
-    """The two r5 engine features TOGETHER (rank_mode='authority' +
-    seen_layout='bucketed'): the ranking loop and the co-located
-    anti-join touch disjoint parts of the round (frontier rank vs
-    url_seen dedup), but nothing short of running them composed proves
-    it — full fetch-row parity vs the pure-Python oracle crawler under
-    the authority contract (the bucketed mirror must be semantically
-    invisible)."""
-    wh = "/tmp/spark_graft_wh_auth_bucketed"
-    shutil.rmtree(wh, ignore_errors=True)
-    eng = CrawlEngine(spark, fixtures, wh,
-                      CrawlConfig(rank_mode="authority",
-                                  seen_layout="bucketed",
-                                  write_payload=False))
-    eng.run()
-    want_res = oracle_crawl(fixtures, rank_mode="authority")
-    got = sorted((r["url"], r["round"], r["fetch_slot"]) for r in
-                 eng.store.read("fetched")
-                 .select("url", "round", "fetch_slot").collect())
-    want = sorted((r["url"], r["round"], r["fetch_slot"])
-                  for r in want_res.fetched)
-    assert got == want

@@ -3,10 +3,12 @@
 reproduce BOTH halves of the old two-pass round — the probe verdicts of
 `partitioned_probe_fn` and the shard bytes of a separate insert of the
 new hashes OR-ed into the stored rows — bit for bit, and must not
-float-poison 64-bit columns when shard rows carry None."""
+float-poison 64-bit columns when shard rows carry None; and it refuses
+a shard row of another width."""
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from ai_intel_web_scraper_spark.crawl.bloom import (
     BloomShards, _positions, partitioned_probe_fn,
@@ -95,6 +97,12 @@ def test_fused_empty_candidates_pass_shards_through():
 
 
 def test_fused_mixed_width_keeps_old_width_rows():
+    """One shard width per warehouse: a resize rebuilds the sidecar, so a
+    shard row of another width reaching the fused probe means a stale
+    sidecar. The fused function neither probes that row at the engine's
+    width (false 'definitely new' verdicts) nor rewrites it: it refuses
+    the bucket, naming both widths, so the old-width row is never
+    silently replaced by an engine-width one."""
     m_engine, m_old = 1 << 12, 1 << 10
     rng = np.random.default_rng(11)
     old_keys = rng.integers(-(1 << 62), 1 << 62, 10, dtype=np.int64)
@@ -105,9 +113,5 @@ def test_fused_mixed_width_keeps_old_width_rows():
                                       np.zeros(m_engine // 8,
                                                dtype=np.uint8).tobytes()]})
     cand = _mk_cand(list(old_keys[:4]), 1)  # all maybe via the OLD width
-    out = partitioned_probe_upsert_fn(OUT_COLS, m_engine)(cand, shards)
-    probed = out[out["bitmap"].isnull()]
-    assert probed["maybe"].all()
-    widths = sorted(len(b) * 8 for b in out[out["bitmap"].notnull()]
-                    ["bitmap"])
-    assert widths == [m_old, m_engine]  # old-width row passes through
+    with pytest.raises(ValueError, match=f"{m_old}.*{m_engine}"):
+        partitioned_probe_upsert_fn(OUT_COLS, m_engine)(cand, shards)

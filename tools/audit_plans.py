@@ -266,56 +266,6 @@ def main() -> int:
         failures += bool(bad)
         print(f"| {name} | {', '.join(props)} | {verdict} |")
 
-    # r5: the bucketed url_seen anti-join is engine state, not a driver
-    # query — audit it directly on a bootstrapped bucketed-layout engine
-    # (broadcast disabled to expose the worst-case SMJ shape). Asserts:
-    # the seen scan is bucketed, exactly ONE url_hash Exchange exists
-    # (the candidate delta side — a seen-side Exchange would add a
-    # second), and the inner join is single-key (the Catalyst
-    # filter-into-join regression would re-key it to two columns).
-    import shutil as _sh
-
-    from pyspark.sql import functions as F
-
-    from ai_intel_web_scraper_spark.crawl.scheduler import (CrawlConfig,
-                                                            CrawlEngine)
-    wh = "/tmp/spark_graft_audit_wh"
-    _sh.rmtree(wh, ignore_errors=True)
-    eng = CrawlEngine(spark, E._crawl_fixture_paths(), wh,
-                      CrawlConfig(seen_layout="bucketed",
-                                  write_payload=False))
-    eng.bootstrap()
-    cand = eng.store.read("url_seen").select(
-        "url_hash", "url", F.lit("h").alias("host"),
-        F.lit(1).alias("depth"),
-        F.lit(5).cast("long").alias("discovery_seq"), "bucket")
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (eng._anti_seen(cand)._jdf.queryExecution()
-                .executedPlan().toString())
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-    anti_props = [
-        r"Bucketed: true",
-        r"Exchange hashpartitioning\(url_hash",
-        r"!(?s)Exchange hashpartitioning\(url_hash"
-        r".*Exchange hashpartitioning\(url_hash",
-        r"!Join \[[^\]]*,[^\]]*\], \[[^\]]*\], Inner",
-    ]
-    bad = []
-    for p in anti_props:
-        if p.startswith("!"):
-            if re.search(p[1:], plan):
-                bad.append(f"unexpected {p[1:]}")
-        elif not re.search(p, plan):
-            bad.append(f"missing {p}")
-    verdict = "OK" if not bad else "FAIL: " + "; ".join(bad)
-    failures += bool(bad)
-    print(f"| crawl_anti_seen[bucketed] | bucketed seen scan, single "
-          f"url_hash Exchange (delta side only), single-key inner join "
-          f"| {verdict} |")
-
     print("\n## Notes\n")
     print("- `WindowGroupLimit` = Catalyst's partial per-partition top-k "
           "inserted BEFORE the window shuffle (enabled by the literal "
