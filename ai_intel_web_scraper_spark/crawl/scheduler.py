@@ -65,26 +65,6 @@ from . import semantics as S
 from .bloom import BloomShards, partial_bitmaps, partitioned_probe_upsert_fn
 from .statestore import SnapshotStore
 
-_BYTE_SUFFIX = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10,
-                "m": 1 << 20, "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30,
-                "t": 1 << 40, "tb": 1 << 40}
-
-
-def _parse_byte_size(s, default: int = 10 * 1024 * 1024) -> int:
-    """Spark byte-string config values ('10485760', '10m', '1g', '512k')
-    -> bytes, mirroring JavaUtils.byteStringAsBytes; `default` on any
-    unparseable value (the heuristic must never throw)."""
-    text = str(s).strip().lower()
-    i = len(text)
-    while i > 0 and not text[:i][-1].isdigit():
-        i -= 1
-    num, suffix = text[:i], text[i:].strip()
-    try:
-        return int(num) * _BYTE_SUFFIX[suffix]
-    except (ValueError, KeyError):
-        return default
-
-
 # Rows per task for the round's stages. A Python-UDF task costs ~0.1-0.15 s
 # before its first row (worker hand-off, Arrow setup: a job running a
 # trivial pandas UDF over 500 rows takes that much longer than a JVM-only
@@ -148,8 +128,7 @@ def resolve_udf(link: pd.Series, base: pd.Series) -> pd.DataFrame:
 
 def politeness_rank(frontier: DataFrame, quota_cfg: DataFrame,
                     order_cols: list, n_salt: int,
-                    round_no: int, round_seconds: float,
-                    max_quota: int | None = None,
+                    round_no: int, round_seconds: float, max_quota: int,
                     broadcast_quota: bool = True) -> DataFrame:
     """The frontier-scheduling core (SURVEY C1/C8/C9): two-phase salted
     per-host quota ranking.
@@ -166,8 +145,6 @@ def politeness_rank(frontier: DataFrame, quota_cfg: DataFrame,
     lets Catalyst insert a partial per-partition top-k BEFORE the window
     shuffle — on a quota-bound frontier this prunes the shuffle input from
     |frontier| to ~n_hosts * n_salt * max_quota rows."""
-    if max_quota is None:
-        max_quota = int(quota_cfg.agg(F.max("quota")).first()[0] or 0)
     # broadcast_quota=False when the host table must not transit the
     # driver (the engine's host_state) — Catalyst/AQE picks the strategy
     qc = F.broadcast(quota_cfg) if broadcast_quota else quota_cfg
@@ -203,7 +180,6 @@ def politeness_rank(frontier: DataFrame, quota_cfg: DataFrame,
 class CrawlConfig:
     n_buckets: int = 16
     n_salt: int = 8
-    use_bloom: bool = True
     # The url_seen pre-filter is one representation: per-bucket bloom
     # shard rows in the snapshot's bloom_shards table, probed and updated
     # by one bucket-cogrouped applyInPandas pass — the driver never
@@ -213,7 +189,7 @@ class CrawlConfig:
     # value.
     bloom_mode: str = _SIDECAR_REPR
     # host_state stays a table end to end: quota derivation, the
-    # alive/max/sum scalars (one small agg job) and the fetched_count
+    # max/sum quota scalars (one small agg job) and the fetched_count
     # update (join + staged replace) are Spark jobs; the driver never
     # holds the host set. "dataframe" is the only accepted value.
     host_state_mode: str = "dataframe"
@@ -415,14 +391,15 @@ class CrawlEngine:
                 .drop("node", "r"))
 
     # Sidecar validity marker: the bloom shard rows are only trustworthy
-    # if the LAST commit maintained them — rounds run with probing
-    # disabled append url_seen without touching the shards, and an
-    # out-of-date sidecar's false "definitely new" verdicts would bypass
-    # the exact anti-join. The marker records which representation was
-    # maintained, at which bucketing and shard width (m_bits), by which
-    # round; any mismatch forces a rebuild from url_seen (always
-    # correct), also when the marker names a representation an older
-    # engine wrote or an expected_urls resize changed the width.
+    # if the LAST commit maintained them — a commit that staged no marker
+    # (an older engine's probing-off rounds, a compact()) may have added
+    # url_seen rows the shards lack, and an out-of-date sidecar's false
+    # "definitely new" verdicts would bypass the exact anti-join. The
+    # marker records which representation was maintained, at which
+    # bucketing and shard width (m_bits), by which round; any mismatch
+    # forces a rebuild from url_seen (always correct), also when the
+    # marker names a representation an older engine wrote or an
+    # n_buckets or expected_urls change altered the layout.
     def _sidecar_valid(self) -> bool:
         raw = self.store.read_blob("sidecar_meta")
         if raw is None:
@@ -541,17 +518,16 @@ class CrawlEngine:
         # the bootstrap writes are independent DAGs over the persisted
         # seed frontier — run them concurrently like the round sinks
         from concurrent.futures import ThreadPoolExecutor
+        # the bloom shard rows are built AND stored executor-side; the
+        # driver never holds a bitmap
         tasks = [lambda: self.store.stage_write("frontier", frontier,
                                                 "replace"),
                  lambda: self.store.stage_write("url_seen", url_seen,
-                                                "append")]
-        if self.cfg.use_bloom:
-            # per-bucket shard rows built AND stored executor-side; the
-            # driver never holds a bitmap
-            tasks.append(lambda: self.store.stage_write(
-                "bloom_shards", self._shard_partials(frontier, width),
-                "replace"))
-            self._stage_sidecar_meta(0)
+                                                "append"),
+                 lambda: self.store.stage_write(
+                     "bloom_shards", self._shard_partials(frontier, width),
+                     "replace")]
+        self._stage_sidecar_meta(0)
         with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
             for f in [pool.submit(t) for t in tasks]:
                 f.result()
@@ -603,30 +579,14 @@ class CrawlEngine:
                                  F.col("max_pages") - F.col("fetched_count"))
                              .cast("int").alias("quota"))
                      .where(F.col("quota") > 0))
+        # a crawl whose every host budget is spent runs this same plan: it
+        # schedules nothing, and the next frontier keeps only the rows of
+        # hosts with quota (oracle: quota <= 0 drops the host's rows), so
+        # the round commits an empty frontier and the driver loop stops
         qs = quota_cfg.agg(F.max("quota").alias("mx"),
-                           F.sum("quota").alias("sm"),
-                           F.count("*").alias("n")).first()
+                           F.sum("quota").alias("sm")).first()
         max_quota = int(qs["mx"] or 0)
         quota_sum = int(qs["sm"] or 0)
-        n_alive = int(qs["n"])
-        if n_alive == 0:
-            # every remaining host's max_pages budget is exhausted: the
-            # crawl is over (oracle: quota<=0 drops the host's rows).
-            # Commit an empty frontier so the driver loop terminates.
-            self.store.stage_write(
-                "frontier", sp.createDataFrame([], FRONTIER_SCHEMA),
-                "replace")
-            metrics = {"round": round_no, "scheduled": 0, "fetched_ok": 0,
-                       "failed": 0, "retried": 0, "rejected": {},
-                       "discovered": 0, "new_urls": 0, "frontier_size": 0,
-                       "url_seen_lineage_per_bucket": {},
-                       "wall_ms": (time.time() - t0) * 1000.0}
-            self.store.stage_write_arrow("metrics", pd.DataFrame([{
-                k: v for k, v in metrics.items()
-                if k not in ("rejected", "url_seen_lineage_per_bucket")}]),
-                "append")
-            self.store.commit(round_no, metrics)
-            return metrics
         if cfg.rank_mode == "bfs":
             order_cols = [F.col("depth").asc(), F.col("discovery_seq").asc()]
         else:
@@ -653,8 +613,8 @@ class CrawlEngine:
         # partitioned join on the shared url_hash bucketing). Gating on
         # estimated BYTES vs autoBroadcastJoinThreshold (not a fixed row
         # count) keeps the broadcast within executor memory on any cluster.
-        bcast_limit = _parse_byte_size(
-            sp.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
+        bcast_limit = (sp._jsparkSession.sessionState().conf()
+                       .autoBroadcastJoinThreshold())
         if bcast_limit > 0 and quota_sum * 40 <= bcast_limit:
             ranked_keys = F.broadcast(ranked_keys)
         # persisted: consumed by the fetch join AND the next-frontier
@@ -726,61 +686,54 @@ class CrawlEngine:
                    .withColumn("bucket", self._bucket("url_hash")))
 
         # -- url_seen anti-join with bloom pre-filter (SURVEY C2) -----------
-        # The shards must remain a SUPERSET of url_seen: rounds run with
-        # probing disabled do not maintain them, so a later round trusts
-        # them only if the validity marker names the last commit, and
-        # rebuilds them from url_seen otherwise — a stale sidecar's false
-        # "definitely new" verdicts would bypass the exact anti-join.
-        if cfg.use_bloom:
-            # executor-resident sidecar: per-bucket shard rows cogrouped
-            # against the candidate buckets — each task receives only its
-            # buckets' bitmaps, once, and the driver never holds the set
-            snap_tables = (self.store.snapshot() or {}).get("tables", {})
-            if snap_tables.get("bloom_shards") and self._sidecar_valid():
-                shards_df = self.store.read("bloom_shards")
-            else:  # stale (rounds ran with probing off) / n_buckets
-                # or width change / fresh enable / older representation:
-                # rebuild from url_seen, still executor-side (staged with
-                # this round's update)
-                shards_df = self._cache(
-                    self._shard_partials(self._seen(), width))
-            # fused probe+insert (r6): the same cogroup pass emits the
-            # updated shard rows (bitmap set, candidate columns null)
-            # alongside the probed candidates. Fresh StructType:
-            # StructType.add MUTATES the frame's cached schema, which would
-            # poison the cogroup's column resolution
-            out_schema = T.StructType(
-                list(deduped.schema.fields)
-                + [T.StructField("maybe", T.BooleanType()),
-                   T.StructField("bitmap", T.BinaryType())])
-            probe = partitioned_probe_upsert_fn(deduped.columns,
-                                                self._bloom_m)
-            # below full width both sides are hash-partitioned by bucket
-            # at the round's width, which the cogroup takes as its own
-            # partitioning (no further exchange). At least 2: a one-way
-            # repartition plans as a single partition, which the cogroup
-            # re-shuffles at full width whenever the candidates' size
-            # estimate (a product over the round's joins) is large.
-            cand, shards = deduped, shards_df
-            probe_width = max(width, 2)
-            if probe_width < sp.sparkContext.defaultParallelism:
-                cand = deduped.repartition(probe_width, "bucket")
-                shards = shards_df.repartition(probe_width, "bucket")
-            # persist: both the definite-new and to-confirm branches read
-            # this frame — uncached, the cogrouped shard probe (the most
-            # expensive per-round stage at scale) would run twice
-            probed = self._cache(cand.groupBy("bucket")
-                                 .cogroup(shards.groupBy("bucket"))
-                                 .applyInPandas(probe, schema=out_schema))
-            # shard rows carry maybe=null, so the candidate filters below
-            # exclude them without an explicit bitmap-null conjunct
-            definite_new = probed.where(~F.col("maybe")).drop("maybe",
-                                                              "bitmap")
-            to_confirm = probed.where(F.col("maybe")).drop("maybe", "bitmap")
-            new_urls = definite_new.unionByName(self._anti_seen(to_confirm))
-        else:
-            new_urls = self._anti_seen(deduped)
-        new_urls = self._cache(new_urls)
+        # The shards must remain a SUPERSET of url_seen: a round trusts them
+        # only if the validity marker names the last commit (see
+        # _sidecar_valid) and rebuilds them from url_seen otherwise — a
+        # stale sidecar's false "definitely new" verdicts would bypass the
+        # exact anti-join. The sidecar is executor-resident: per-bucket
+        # shard rows cogrouped against the candidate buckets — each task
+        # receives only its buckets' bitmaps, once, and the driver never
+        # holds the set.
+        snap_tables = (self.store.snapshot() or {}).get("tables", {})
+        if snap_tables.get("bloom_shards") and self._sidecar_valid():
+            shards_df = self.store.read("bloom_shards")
+        else:  # no valid marker: rebuild from url_seen, still
+            # executor-side (staged with this round's update)
+            shards_df = self._cache(
+                self._shard_partials(self._seen(), width))
+        # fused probe+insert (r6): the same cogroup pass emits the
+        # updated shard rows (bitmap set, candidate columns null)
+        # alongside the probed candidates. Fresh StructType:
+        # StructType.add MUTATES the frame's cached schema, which would
+        # poison the cogroup's column resolution
+        out_schema = T.StructType(
+            list(deduped.schema.fields)
+            + [T.StructField("maybe", T.BooleanType()),
+               T.StructField("bitmap", T.BinaryType())])
+        probe = partitioned_probe_upsert_fn(deduped.columns, self._bloom_m)
+        # below full width both sides are hash-partitioned by bucket
+        # at the round's width, which the cogroup takes as its own
+        # partitioning (no further exchange). At least 2: a one-way
+        # repartition plans as a single partition, which the cogroup
+        # re-shuffles at full width whenever the candidates' size
+        # estimate (a product over the round's joins) is large.
+        cand, shards = deduped, shards_df
+        probe_width = max(width, 2)
+        if probe_width < sp.sparkContext.defaultParallelism:
+            cand = deduped.repartition(probe_width, "bucket")
+            shards = shards_df.repartition(probe_width, "bucket")
+        # persist: both the definite-new and to-confirm branches read
+        # this frame — uncached, the cogrouped shard probe (the most
+        # expensive per-round stage at scale) would run twice
+        probed = self._cache(cand.groupBy("bucket")
+                             .cogroup(shards.groupBy("bucket"))
+                             .applyInPandas(probe, schema=out_schema))
+        # shard rows carry maybe=null, so the candidate filters below
+        # exclude them without an explicit bitmap-null conjunct
+        definite_new = probed.where(~F.col("maybe")).drop("maybe", "bitmap")
+        to_confirm = probed.where(F.col("maybe")).drop("maybe", "bitmap")
+        new_urls = self._cache(
+            definite_new.unionByName(self._anti_seen(to_confirm)))
 
         # -- next frontier: unscheduled + retries + new (anti-join, no skew) -
         alive_hosts = quota_cfg.select("host")
@@ -852,31 +805,24 @@ class CrawlEngine:
             "discovery_seq", "attempt",
             F.col("outcome").alias("reason"))
 
-        # -- metrics: the three small aggregations (fetch outcomes per host,
-        # policy-reject breakdown, per-bucket new-url lineage) are unioned
-        # into ONE action so the driver pays one job-scheduling round trip;
-        # the subtrees read only the persisted fetch/policed/new_urls caches.
-        # Everything else comes free from parquet footers of the staged
-        # writes — no redundant Spark jobs.
-        ho_agg = (fetch.groupBy("host", "outcome")
-                  .agg(F.count("*").alias("cnt"))
-                  .select(F.lit("outcome").alias("kind"),
-                          F.col("host").alias("k1"),
-                          F.col("outcome").alias("k2"), "cnt"))
-        pol_agg = (policed.groupBy("reject").agg(F.count("*").alias("cnt"))
-                   .select(F.lit("policy").alias("kind"),
-                           F.lit(None).cast("string").alias("k1"),
-                           F.coalesce("reject", F.lit("ok")).alias("k2"), "cnt"))
-        lin_agg = (new_urls.groupBy("bucket").agg(F.count("*").alias("cnt"))
-                   .select(F.lit("lineage").alias("kind"),
-                           F.lit(None).cast("string").alias("k1"),
-                           F.col("bucket").cast("string").alias("k2"), "cnt"))
-        stats_df = ho_agg.unionByName(pol_agg).unionByName(lin_agg)
+        # -- metrics: the two small aggregations (fetch outcomes, policy-
+        # reject breakdown) are unioned into ONE action so the driver pays
+        # one job-scheduling round trip; both read only the persisted
+        # fetch/policed caches. The fetched, failed, new-url and frontier
+        # counts come free from the staged writes' parquet footers.
+        outcome_agg = (fetch.groupBy("outcome").agg(F.count("*").alias("cnt"))
+                       .select(F.lit("outcome").alias("kind"),
+                               F.col("outcome").alias("key"), "cnt"))
+        policy_agg = (policed.groupBy("reject").agg(F.count("*").alias("cnt"))
+                      .select(F.lit("policy").alias("kind"),
+                              F.coalesce("reject", F.lit("ok")).alias("key"),
+                              "cnt"))
+        stats_df = outcome_agg.unionByName(policy_agg)
 
-        # -- stage + commit: the five sinks are independent DAGs over cached
-        # inputs, so they run as CONCURRENT Spark jobs (threaded driver),
-        # overlapped with the metrics collect on this thread — the cluster
-        # pipelines all six actions instead of idling between them.
+        # -- stage + commit: the sink and state writes are independent DAGs
+        # over cached inputs, so they run as CONCURRENT Spark jobs (threaded
+        # driver), overlapped with the metrics collect on this thread — the
+        # cluster pipelines all the actions instead of idling between them.
         from concurrent.futures import ThreadPoolExecutor
         # materialized web-graph edges (SURVEY §1.3): every same-host
         # candidate link this round, with its policy outcome — downstream
@@ -898,7 +844,6 @@ class CrawlEngine:
         # they join the same concurrent batch as the sinks instead of
         # running sequentially after it — at toy scale each serialized
         # small job costs a full scheduling round trip
-        tasks = []
         succ = (fetch.where(F.col("outcome") == "success")
                 .groupBy("host").agg(F.count("*").alias("_ok")))
         new_hs = (self.store.read("host_state")
@@ -907,67 +852,47 @@ class CrawlEngine:
                               F.col("fetched_count")
                               + F.coalesce(F.col("_ok"), F.lit(0)))
                   .drop("_ok"))
-        tasks.append(lambda: self.store.stage_write(
-            "host_state", self._narrow(new_hs, width), "replace"))
-        if cfg.use_bloom:
-            # fused path: the updated shard rows came out of the probe
-            # cogroup itself — this write only filters the persisted
-            # probe output, no extra shuffle
-            merged = (probed.where(F.col("bitmap").isNotNull())
+        # the updated shard rows came out of the probe cogroup itself —
+        # this write only filters the persisted probe output, no extra
+        # shuffle
+        shard_rows = (probed.where(F.col("bitmap").isNotNull())
                       .select("bucket", "bitmap"))
-            tasks.append(lambda: self.store.stage_write(
-                "bloom_shards", self._narrow(merged, width), "replace"))
+        state_writes = [("host_state", new_hs, "replace"),
+                        ("bloom_shards", shard_rows, "replace")]
         # leaving the block waits for every write, also when one fails,
         # so run_round's abort sees all that this attempt staged
-        with ThreadPoolExecutor(
-                max_workers=len(sink_writes) + len(tasks)) as pool:
+        writes = sink_writes + state_writes
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
             futs = [pool.submit(self.store.stage_write, t,
                                 self._narrow(df, width), m)
-                    for t, df, m in sink_writes]
-            futs += [pool.submit(t) for t in tasks]
+                    for t, df, m in writes]
             stats = stats_df.collect()
             for f in futs:  # join the concurrent sink + state-update writes
                 f.result()
         outcome_counts: dict[str, int] = {}
         policy_counts: dict[str, int] = {}
-        lineage: dict[str, int] = {}
         for r in stats:
-            if r["kind"] == "outcome":
-                outcome_counts[r["k2"]] = outcome_counts.get(r["k2"], 0) + r["cnt"]
-            elif r["kind"] == "policy":
-                policy_counts[r["k2"]] = r["cnt"]
-            else:
-                lineage[r["k2"]] = r["cnt"]
-        reject_counts = {k: v for k, v in policy_counts.items() if k != "ok"}
-        # discovered = policy-ACCEPTED candidates (oracle semantics: its
-        # candidates list excludes rejected links); rejects are reported
-        # separately in reject_counts / the edges table
-        n_discovered = int(policy_counts.get("ok", 0))
-        n_new = int(sum(lineage.values()))
-        if cfg.use_bloom:
-            self._stage_sidecar_meta(round_no)
-        frontier_size = self.store.staged_row_count("frontier")
-        wall_ms = (time.time() - t0) * 1000.0
+            counts = outcome_counts if r["kind"] == "outcome" else policy_counts
+            counts[r["key"]] = int(r["cnt"])
+        self._stage_sidecar_meta(round_no)
+        staged = self.store.staged_row_count
         metrics = {
             "round": round_no,
-            "scheduled": int(sum(outcome_counts.values())),
-            "fetched_ok": int(outcome_counts.get("success", 0)),
-            "failed": int(outcome_counts.get("http_error", 0)
-                          + outcome_counts.get("timeout_dead", 0)),
-            "retried": int(outcome_counts.get("timeout_retry", 0)),
-            "rejected": reject_counts,
-            "discovered": n_discovered,
-            "new_urls": n_new,
-            "frontier_size": int(frontier_size),
-            "url_seen_lineage_per_bucket": lineage,
-            "wall_ms": wall_ms,
+            "scheduled": sum(outcome_counts.values()),
+            "fetched_ok": staged("fetched"),
+            "failed": staged("failures"),
+            "retried": outcome_counts.get("timeout_retry", 0),
+            "rejected": {k: v for k, v in policy_counts.items() if k != "ok"},
+            # discovered = policy-ACCEPTED candidates (oracle semantics: its
+            # candidates list excludes rejected links); rejects are reported
+            # separately in `rejected` / the edges table
+            "discovered": policy_counts.get("ok", 0),
+            "new_urls": staged("url_seen"),
+            "frontier_size": staged("frontier"),
+            "wall_ms": (time.time() - t0) * 1000.0,
         }
         self.store.stage_write_arrow("metrics", pd.DataFrame([{
-            "round": round_no, "scheduled": metrics["scheduled"],
-            "fetched_ok": metrics["fetched_ok"], "failed": metrics["failed"],
-            "retried": metrics["retried"], "discovered": n_discovered,
-            "new_urls": n_new, "frontier_size": int(frontier_size),
-            "wall_ms": wall_ms}]), "append")
+            k: v for k, v in metrics.items() if k != "rejected"}]), "append")
         self.store.commit(round_no, metrics)
         return metrics
 

@@ -15,7 +15,8 @@ the engine needs with the same mechanics Iceberg uses:
   references — reads at CURRENT are unaffected and resume is bit-identical;
 - binary blobs (the bloom sidecar's validity marker) belong to the commit
   that staged them: a manifest lists only the blobs its own commit staged,
-  so a blob no round writes any more is freed by ``expire_snapshots``.
+  so a blob no round writes any more is freed by ``expire_snapshots``; a
+  store that registers schemas likewise carries only those tables forward.
 
 Swapping this for real Iceberg is localized to this module: append →
 ``writeTo(t).append()``, replace → ``overwritePartitions``, snapshot pin →
@@ -206,11 +207,18 @@ class SnapshotStore:
         parent_id = self.current_snapshot_id()
         parent = self.snapshot(parent_id) if parent_id is not None else None
         snap_id = (parent_id or 0) + 1
-        tables: dict[str, list[str]] = dict((parent or {}).get("tables", {}))
+        # a store that registers schemas carries only its registered
+        # tables forward: a table no code writes any more (an older
+        # engine's) then leaves the manifest, and expire_snapshots frees
+        # its dirs. A schema-less store carries every parent table.
+        tables: dict[str, list[str]] = {
+            t: dirs for t, dirs in (parent or {}).get("tables", {}).items()
+            if not self.schemas or t in self.schemas}
         # rows per table (from the staged files' footers): replace = staged,
         # append = parent + staged, untouched = parent. A parent without
         # counts (an older manifest) leaves its appended tables uncounted.
-        rows = dict((parent or {}).get("rows", {}))
+        rows = {t: n for t, n in (parent or {}).get("rows", {}).items()
+                if t in tables}
         for table, st in self._staged.items():
             prev = tables.get(table, []) if st["mode"] == "append" else []
             tables[table] = list(prev) + st["dirs"]

@@ -1,11 +1,10 @@
 """Regression tests for engine edge cases found in review: budget
-exhaustion, alias seeds, bucket-count independence, bloom staleness across
-config toggles."""
+exhaustion, alias seeds, bucket-count independence, stale bloom sidecars
+and state left behind by older engines."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -84,6 +83,13 @@ def test_budget_exhaustion_terminates_cleanly(spark, mini, tmp_path):
     rounds = eng.run()
     assert rounds[-1]["frontier_size"] == 0
     assert eng.store.read("fetched").count() == 1  # budget respected
+    # the exhausted round runs the normal plan: nothing scheduled, an
+    # empty frontier committed, and its metrics row says so
+    last = eng.store.read("metrics").orderBy("round").collect()[-1]
+    assert last["round"] == rounds[-1]["round"] == 2
+    for col in ("scheduled", "fetched_ok", "discovered", "new_urls",
+                "frontier_size"):
+        assert last[col] == 0, col
     want = oracle_crawl(mini)
     assert len(want.fetched) == 1
 
@@ -138,82 +144,40 @@ def _chain_back_to(k: int) -> dict[str, list[str]]:
     return chain
 
 
-def test_bloom_toggle_across_resume_never_refetches(spark, tmp_path):
-    """bloom on -> resume with bloom off -> resume with bloom on: the
-    sidecar must stay a superset of url_seen (rebuilt from url_seen when
-    the rounds in between did not maintain it) so no URL is ever fetched
-    twice. p/3 is first seen in a probing-off round, so only the rebuild
-    keeps it out of round 7's fetches."""
-    fx = _mini_fixtures(str(tmp_path / "fx"),
-                        seeds=[(0, f"{BASE}/p/0", 0.5)],
-                        pages=_chain_back_to(3), max_pages=50, max_depth=10)
-    wh = str(tmp_path / "wh")
-    CrawlEngine(spark, fx, wh, CrawlConfig(
-        write_payload=False, use_bloom=True, expected_urls=1024)).run(
-        max_rounds=2)
-    CrawlEngine(spark, fx, wh, CrawlConfig(
-        write_payload=False, use_bloom=False, expected_urls=1024)).run(
-        max_rounds=2)
-    eng = CrawlEngine(spark, fx, wh, CrawlConfig(
-        write_payload=False, use_bloom=True, expected_urls=1024))
-    eng.run()
-    fetched = eng.store.read("fetched")
-    assert fetched.count() == fetched.select("url").distinct().count()
-    assert fetched.count() == 7  # the whole chain, each exactly once
-
-
-@pytest.mark.parametrize("mode_seq", [
-    # probing-off rounds twice: the sidecar rebuilt after the first is
-    # stale again after the second
-    ("partitioned", None, "partitioned", None, "partitioned"),
-])
-def test_sidecar_mode_switches_never_refetch(spark, tmp_path, mode_seq):
-    """Resuming after probing-disabled rounds must NOT trust the now-stale
-    sidecar: URLs first seen by the intervening rounds would probe
-    'definitely new' and be fetched twice. The validity marker forces a
-    rebuild from url_seen on every such resume, also one following a
-    resume that already rebuilt. Each leg but the last runs one round,
-    and the chain closes at the page first seen in the last probing-off
-    round."""
-    last_off = max(i for i, m in enumerate(mode_seq) if m is None)
-    fx = _mini_fixtures(str(tmp_path / "fx"),
-                        seeds=[(0, f"{BASE}/p/0", 0.5)],
-                        pages=_chain_back_to(last_off + 1),
-                        max_pages=50, max_depth=10)
-    wh = str(tmp_path / "wh")
-    for i, mode in enumerate(mode_seq):
-        cfg = CrawlConfig(write_payload=False, expected_urls=1024,
-                          use_bloom=mode is not None)
-        eng = CrawlEngine(spark, fx, wh, cfg)
-        eng.run(max_rounds=1 if i < len(mode_seq) - 1 else None)
-    fetched = eng.store.read("fetched")
-    assert fetched.count() == fetched.select("url").distinct().count()
-    assert fetched.count() == 7  # the whole chain, each exactly once
-
-
-def test_sidecar_marker_naming_removed_repr_rebuilds(spark, tmp_path):
-    """A warehouse whose validity marker names a sidecar representation
-    this engine no longer has must rebuild the shards from url_seen, even
-    when the marker's bucketing and round match. Here the shards went stale in two
-    probing-off rounds; trusting them would refetch p/3."""
+@pytest.mark.parametrize("marker", ["removed_repr", "older_round", "none"])
+def test_stale_sidecar_rebuilds_never_refetch(spark, tmp_path, marker):
+    """Shards that miss url_seen rows must be rebuilt from url_seen, not
+    trusted. Here the committed shards are round 1's (read by time
+    travel), which lack p/3, and the commit's validity marker names a
+    representation this engine does not have, names an older round, or
+    is absent (an older engine's probing-off rounds, a compact()).
+    Trusting the shards would probe p/3 'definitely new' when p/6 links
+    back to it in round 7, and fetch it twice."""
     import json
 
     fx = _mini_fixtures(str(tmp_path / "fx"),
                         seeds=[(0, f"{BASE}/p/0", 0.5)],
                         pages=_chain_back_to(3), max_pages=50, max_depth=10)
     wh = str(tmp_path / "wh")
-    CrawlEngine(spark, fx, wh, CrawlConfig(
-        write_payload=False, expected_urls=1024)).run(max_rounds=2)
-    eng = CrawlEngine(spark, fx, wh, CrawlConfig(
-        write_payload=False, expected_urls=1024, use_bloom=False))
-    eng.run(max_rounds=2)
-    committed = eng.store.snapshot()["round"]
-    eng.store.stage_blob("sidecar_meta", json.dumps(
-        {"repr": "cuckoo", "n_buckets": 16, "m_bits": eng._bloom_m,
-         "round": committed}).encode())
-    eng.store.commit(committed)
-    eng = CrawlEngine(spark, fx, wh, CrawlConfig(
-        write_payload=False, expected_urls=1024))
+    cfg = CrawlConfig(write_payload=False, expected_urls=1024)
+    eng = CrawlEngine(spark, fx, wh, cfg)
+    eng.run(max_rounds=4)
+    store = eng.store
+    round1 = next(h["snapshot_id"] for h in store.history()
+                  if h["round"] == 1)
+    store.stage_write("bloom_shards",
+                      store.read("bloom_shards", snap_id=round1), "replace")
+    committed = store.snapshot()["round"]
+    meta = {"repr": "partitioned", "n_buckets": cfg.n_buckets,
+            "m_bits": eng._bloom_m, "round": committed}
+    if marker == "removed_repr":
+        meta["repr"] = "cuckoo"
+    elif marker == "older_round":
+        meta["round"] = 1
+    if marker != "none":
+        store.stage_blob("sidecar_meta", json.dumps(meta).encode())
+    store.commit(committed)
+    eng = CrawlEngine(spark, fx, wh, cfg)
     eng.run()
     fetched = eng.store.read("fetched")
     assert fetched.count() == fetched.select("url").distinct().count()
@@ -249,6 +213,35 @@ def test_legacy_blobs_leave_manifest_and_disk(spark, tmp_path):
     assert on_disk == set(store.snapshot()["blobs"].values())
     assert not on_disk & legacy
     eng.run()
+    _assert_matches_oracle(store, fx)
+
+
+def test_legacy_tables_leave_manifest_and_disk(spark, tmp_path):
+    """A table no round writes any more (an older engine's
+    `cuckoo_shards`) is not carried into the next manifest, so
+    expire_snapshots frees its dirs; the crawl is unaffected."""
+    fx = _mini_fixtures(str(tmp_path / "fx"),
+                        seeds=[(0, f"{BASE}/p/0", 0.5)],
+                        pages=_chain_back_to(3), max_pages=50, max_depth=10)
+    wh = str(tmp_path / "wh")
+    eng = CrawlEngine(spark, fx, wh, CrawlConfig(
+        write_payload=False, expected_urls=1024))
+    eng.run(max_rounds=1)
+    store = eng.store
+    store.stage_write("cuckoo_shards", spark.range(4).selectExpr(
+        "cast(id as int) as bucket"), "replace")
+    store.commit(store.snapshot()["round"])
+    assert store.snapshot()["tables"]["cuckoo_shards"]
+    eng.run(max_rounds=1)
+    store.expire_snapshots(keep_last=1)
+    assert "cuckoo_shards" not in store.snapshot()["tables"]
+    assert "cuckoo_shards" not in store.snapshot()["rows"]
+    assert not os.listdir(os.path.join(wh, "tables", "cuckoo_shards"))
+    eng.run()
+    _assert_matches_oracle(store, fx)
+
+
+def _assert_matches_oracle(store, fx) -> None:
     want = oracle_crawl(fx)
     got = [(r["url"], r["round"], r["depth"], r["discovery_seq"]) for r in
            store.read("fetched")
@@ -409,18 +402,6 @@ def test_crawl_config_rejects_removed_modes(kw):
         CrawlConfig(**kw)
 
 
-def test_parse_byte_size_spark_suffixes():
-    from ai_intel_web_scraper_spark.crawl.scheduler import _parse_byte_size
-    assert _parse_byte_size("10485760") == 10485760
-    assert _parse_byte_size("10485760b") == 10485760
-    assert _parse_byte_size("10m") == 10 * 1024 * 1024
-    assert _parse_byte_size("10MB") == 10 * 1024 * 1024
-    assert _parse_byte_size("1g") == 1 << 30
-    assert _parse_byte_size("512k") == 512 * 1024
-    assert _parse_byte_size("-1") == -1  # broadcast disabled
-    assert _parse_byte_size("nonsense") == 10 * 1024 * 1024  # default
-
-
 def test_connected_components_on_64bit_hash_ids(spark):
     """The convergence test must not overflow Spark 4's ANSI long sum when
     ids are 64-bit hashes (the repo's standard doc id); labels near
@@ -473,7 +454,7 @@ def test_partitioned_bloom_resume_with_resized_filter_never_refetches(
     assert widths == {eng._bloom_m}
 
 
-def test_sitemap_preseed_crawl_parity(spark, fixtures):
+def test_sitemap_preseed_crawl_parity(spark, fixtures, tmp_path):
     """Sitemap-derived seeds appended to the seeds table must flow through
     BOTH the engine and the pure-Python oracle crawler identically —
     fetched at depth 0, alias-collapsed, budget/politeness applied — and
@@ -496,16 +477,13 @@ def test_sitemap_preseed_crawl_parity(spark, fixtures):
     old = spark.read.parquet(fixtures["seeds"])
     base = old.agg(F.max("seed_seq")).collect()[0][0] + 1
     extra = sitemaps_to_seeds(parsed, base_seq=base)
-    out = "/tmp/spark_graft_sitemap_fx"
-    shutil.rmtree(out, ignore_errors=True)
+    out = str(tmp_path / "fx")
     os.makedirs(out)
     aug = dict(fixtures)
     aug["seeds"] = os.path.join(out, "seeds.parquet")
     (old.select("seed_seq", "url", "priority").unionByName(extra)
      .toPandas().to_parquet(aug["seeds"]))
-    wh = "/tmp/spark_graft_wh_sitemap"
-    shutil.rmtree(wh, ignore_errors=True)
-    eng = CrawlEngine(spark, aug, wh,
+    eng = CrawlEngine(spark, aug, str(tmp_path / "wh"),
                       CrawlConfig(expected_urls=1 << 14,
                                   write_payload=False))
     eng.run()
@@ -522,23 +500,17 @@ def test_sitemap_preseed_crawl_parity(spark, fixtures):
     hit = [u for u in preseeded if u in fetched_depth]
     assert len(hit) >= 5
     assert all(fetched_depth[u] == 0 for u in hit)
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(wh, ignore_errors=True)
 
 
-def test_blocked_hosts_policy_engine_oracle_parity(spark, fixtures):
+def test_blocked_hosts_policy_engine_oracle_parity(spark, fixtures,
+                                                   tmp_path):
     """Quality-driven host blocklist wired into the crawl: engine and
     pure-Python oracle agree exactly on the fetched set with a host
     blocked, no fetched row touches the blocked host, and the blocked
     host WAS fetched in the unblocked baseline (the policy actually
     bites)."""
-    import shutil
-    from ai_intel_web_scraper_spark.crawl.scheduler import (CrawlConfig,
-                                                            CrawlEngine)
-    from ai_intel_web_scraper_spark.oracle.crawler import oracle_crawl
     def engine_run(bl):
-        wh = f"/tmp/spark_graft_block_wh_{int(bool(bl))}"
-        shutil.rmtree(wh, ignore_errors=True)
+        wh = str(tmp_path / f"wh_{int(bool(bl))}")
         eng = CrawlEngine(spark, fixtures, wh,
                           CrawlConfig(write_payload=False,
                                       expected_urls=1 << 14,
@@ -564,21 +536,15 @@ def test_blocked_hosts_policy_engine_oracle_parity(spark, fixtures):
         == [(u, rd, sq) for u, rd, sq, _ in want]
 
 
-def test_engine_internal_sitemap_preseed_parity(spark, fixtures):
+def test_engine_internal_sitemap_preseed_parity(spark, fixtures, tmp_path):
     """CrawlConfig.preseed_sitemaps=True: the engine parses the fixture
     sitemap BODIES at bootstrap (robots -> sitemap -> seeds, fully
     engine-internal) and must match the oracle crawler's independent
     Python replay of the same channel exactly; the preseed must also
     actually change the crawl vs the baseline (new URLs fetched), and
     list-seed duplicates collapse keep-first by seq on both sides."""
-    import shutil
-    from ai_intel_web_scraper_spark.crawl.scheduler import (CrawlConfig,
-                                                            CrawlEngine)
-    from ai_intel_web_scraper_spark.oracle.crawler import oracle_crawl
-
     def engine_run(preseed):
-        wh = f"/tmp/spark_graft_smps_wh_{int(preseed)}"
-        shutil.rmtree(wh, ignore_errors=True)
+        wh = str(tmp_path / f"wh_{int(preseed)}")
         eng = CrawlEngine(spark, fixtures, wh,
                           CrawlConfig(write_payload=False,
                                       expected_urls=1 << 14,

@@ -391,7 +391,7 @@ def test_politeness_rank_quota_and_order(spark):
         "host string, crawl_delay double, quota int")
     out = politeness_rank(
         frontier, quota, [F.col("depth").asc(), F.col("discovery_seq").asc()],
-        n_salt=4, round_no=2, round_seconds=100.0).collect()
+        n_salt=4, round_no=2, round_seconds=100.0, max_quota=3).collect()
     per_host = {}
     for r in out:
         per_host.setdefault(r["host"], []).append(r)
