@@ -48,13 +48,11 @@ def _positions(hashes: np.ndarray, m: int) -> np.ndarray:
 
 
 class BloomShards:
-    """Dict of bucket -> packed uint8 bitmap, all shards the same size."""
+    """The sidecar's sizing: `n_buckets` shards, each `m_bits` wide."""
 
-    def __init__(self, n_buckets: int, m_bits: int,
-                 shards: dict[int, np.ndarray] | None = None) -> None:
+    def __init__(self, n_buckets: int, m_bits: int) -> None:
         self.n_buckets = n_buckets
         self.m_bits = m_bits
-        self.shards = shards if shards is not None else {}
 
     @classmethod
     def sized_for(cls, expected_keys: int, n_buckets: int,
@@ -62,30 +60,6 @@ class BloomShards:
         per_bucket = max(1024, (expected_keys * bits_per_key) // max(1, n_buckets))
         m = 1 << int(np.ceil(np.log2(per_bucket)))
         return cls(n_buckets, m)
-
-    def _shard(self, bucket: int) -> np.ndarray:
-        s = self.shards.get(bucket)
-        if s is None:
-            s = np.zeros(self.m_bits // 8, dtype=np.uint8)
-            self.shards[bucket] = s
-        return s
-
-    def add_many(self, buckets: np.ndarray, hashes: np.ndarray) -> None:
-        for b in np.unique(buckets):
-            pos = _positions(hashes[buckets == b], self.m_bits).ravel()
-            np.bitwise_or.at(self._shard(int(b)), pos >> 3,
-                             np.uint8(1) << (pos & 7).astype(np.uint8))
-
-    def maybe_contains(self, buckets: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-        """Vectorized probe; True = maybe seen, False = definitely new."""
-        out = np.zeros(len(hashes), dtype=bool)
-        for b in np.unique(buckets):
-            mask = buckets == b
-            shard = self.shards.get(int(b))
-            if shard is None:
-                continue  # empty shard: nothing seen in this bucket
-            out[mask] = _probe(shard, hashes[mask])
-        return out
 
 
 def _bucket_bitmap(shards: pd.DataFrame, m_bits: int | None) -> np.ndarray | None:

@@ -51,7 +51,6 @@ Crawl semantics contract: see semantics.py (shared with the oracle).
 
 from __future__ import annotations
 
-import json
 import time
 from dataclasses import dataclass
 
@@ -213,11 +212,10 @@ class CrawlConfig:
     # production knob (oracle mirrors it).
     authority_every: int = 1
     write_payload: bool = True    # join image bytes into the fetched sink
-    max_rounds: int = 200
     round_seconds: float = S.ROUND_SECONDS  # virtual wall-clock per round
     # Snapshot retention (Iceberg expire_snapshots analog): every
     # `expire_every` committed rounds, retain the most recent
-    # `expire_keep` manifests and vacuum the dirs/blobs only older ones
+    # `expire_keep` manifests and vacuum the dirs only older ones
     # referenced. None = never expire (the correctness-test default:
     # time travel to ANY snapshot stays available). A continuous crawler
     # at one-snapshot-per-round MUST set this or manifest count and
@@ -259,6 +257,10 @@ class CrawlEngine:
         })
         self._bloom_m = BloomShards.sized_for(
             self.cfg.expected_urls, self.cfg.n_buckets).m_bits
+        # the sidecar validity marker: the shard layout every commit that
+        # maintained the bloom shards records in its own manifest
+        self._sidecar = {"n_buckets": self.cfg.n_buckets,
+                         "m_bits": self._bloom_m}
         self.fixtures = fixtures
         # persist (lazy): the fetch join re-reads the web graph EVERY
         # round — caching it pays the parquet scan once, in round 1,
@@ -269,9 +271,9 @@ class CrawlEngine:
         # once (round 1, inside the timed run) instead of once per round
         self.pages = (spark.read.parquet(fixtures["pages"]).persist()
                       if self.cfg.write_payload else None)
-        # what the current round attempt persisted: released by run_round
-        # on every path
-        self._round_cache: list = []
+        # what the current attempt (bootstrap or round) persisted:
+        # released by _attempt on every path
+        self._attempt_cache: list = []
 
     def close(self) -> None:
         """Release the persisted web graph and pages (idempotent). The
@@ -306,8 +308,8 @@ class CrawlEngine:
                               "bucket")
 
     def _cache(self, df: DataFrame) -> DataFrame:
-        """Persist df until the end of this round attempt."""
-        self._round_cache.append(df.persist())
+        """Persist df until the end of this attempt."""
+        self._attempt_cache.append(df.persist())
         return df
 
     def _seen(self) -> DataFrame:
@@ -334,6 +336,14 @@ class CrawlEngine:
         the "maybe seen" candidates meanwhile."""
         return cand.join(self._seen(), ["bucket", "url_hash", "url"],
                          "left_anti")
+
+    def _shard_partials(self, df: DataFrame, width: int) -> DataFrame:
+        """Executor-built per-bucket partial bitmaps, one row per bucket
+        (repartition-by-bucket puts each bucket wholly in one partition)."""
+        return (self._buckets_on(df.select("bucket", "url_hash"), width)
+                .mapInPandas(partial_bitmaps(self._bloom_m,
+                                             self.cfg.n_buckets),
+                             schema="bucket int, bitmap binary"))
 
     def _authority_rank_view(self, frontier: DataFrame, round_no: int,
                              width: int) -> DataFrame:
@@ -390,35 +400,6 @@ class CrawlEngine:
                 .withColumn("priority", composed)
                 .drop("node", "r"))
 
-    # Sidecar validity marker: the bloom shard rows are only trustworthy
-    # if the LAST commit maintained them — a commit that staged no marker
-    # (an older engine's probing-off rounds, a compact()) may have added
-    # url_seen rows the shards lack, and an out-of-date sidecar's false
-    # "definitely new" verdicts would bypass the exact anti-join. The
-    # marker records which representation was maintained, at which
-    # bucketing and shard width (m_bits), by which round; any mismatch
-    # forces a rebuild from url_seen (always correct), also when the
-    # marker names a representation an older engine wrote or an
-    # n_buckets or expected_urls change altered the layout.
-    def _sidecar_valid(self) -> bool:
-        raw = self.store.read_blob("sidecar_meta")
-        if raw is None:
-            return False
-        try:
-            meta = json.loads(raw)
-        except ValueError:
-            return False
-        snap = self.store.snapshot() or {}
-        return (meta.get("repr") == _SIDECAR_REPR
-                and meta.get("n_buckets") == self.cfg.n_buckets
-                and meta.get("m_bits") == self._bloom_m
-                and meta.get("round") == snap.get("round"))
-
-    def _stage_sidecar_meta(self, round_no: int) -> None:
-        self.store.stage_blob("sidecar_meta", json.dumps(
-            {"repr": _SIDECAR_REPR, "n_buckets": self.cfg.n_buckets,
-             "m_bits": self._bloom_m, "round": round_no}).encode())
-
     def _apply_url_policies(self, df: DataFrame, cfg: DataFrame) -> DataFrame:
         """Join host config and tag rows rejected by exclude patterns
         (SURVEY C6, substring containment per docs_scraper.py:171-176) or
@@ -443,7 +424,12 @@ class CrawlEngine:
 
     # ------------------------------------------------------------ bootstrap
     def bootstrap(self) -> None:
-        """Round 0: seed the frontier, url_seen, host_state; commit snapshot."""
+        """Round 0: seed host_state, admit the seeds into frontier and
+        url_seen by the round's own admission plan, and commit the
+        snapshot — atomically (see _attempt)."""
+        self._attempt(self._bootstrap)
+
+    def _bootstrap(self) -> None:
         import numpy as np
         import pyarrow.dataset as ds
         import pyarrow.parquet as pq
@@ -492,70 +478,139 @@ class CrawlEngine:
         seeds = (raw_seeds
                  .select(resolve_udf("url", F.lit(None).cast("string")).alias("r"),
                          "seed_seq", "priority")
-                 .select(F.col("r.url").alias("url"), F.col("r.host").alias("host"),
+                 .select(F.col("r.url").alias("url"),
                          F.col("r.url_hash").alias("url_hash"),
-                         "seed_seq", "priority")
+                         F.col("r.host").alias("host"),
+                         F.lit(0).alias("depth"),
+                         F.col("seed_seq").alias("discovery_seq"),
+                         "priority")
                  .where(F.col("url").isNotNull()))
-        # host_state is staged but not yet committed here, so the policy
-        # config comes from the local frame
-        seeds = self._apply_url_policies(
-            seeds, sp.createDataFrame(hs[["host", "crawl_delay",
-                                          "exclude_patterns", "disallow"]]))
-        ok = seeds.where(F.col("reject").isNull())
-        # alias seeds (distinct raw strings, same canonical URL) collapse
-        # keep-first by seed_seq — the oracle's add-before-enqueue skip
-        w_seed = Window.partitionBy("url").orderBy("seed_seq")
-        ok = (ok.withColumn("_rn", F.row_number().over(w_seed))
-              .where(F.col("_rn") == 1).drop("_rn"))
-        frontier = self._narrow(ok.select(
-            "url", "url_hash", self._bucket("url_hash").alias("bucket"), "host",
-            F.lit(0).alias("depth"), "priority",
-            F.col("seed_seq").alias("discovery_seq"),
-            F.lit(1).alias("attempt")), width).persist()
-        # add-before-enqueue: seeds enter url_seen immediately (C2 semantics)
-        url_seen = frontier.select("url", "url_hash", "bucket",
-                                   F.lit(0).alias("round_added"))
-        # the bootstrap writes are independent DAGs over the persisted
-        # seed frontier — run them concurrently like the round sinks
-        from concurrent.futures import ThreadPoolExecutor
-        # the bloom shard rows are built AND stored executor-side; the
-        # driver never holds a bitmap
-        tasks = [lambda: self.store.stage_write("frontier", frontier,
-                                                "replace"),
-                 lambda: self.store.stage_write("url_seen", url_seen,
-                                                "append"),
-                 lambda: self.store.stage_write(
-                     "bloom_shards", self._shard_partials(frontier, width),
-                     "replace")]
-        self._stage_sidecar_meta(0)
-        with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-            for f in [pool.submit(t) for t in tasks]:
-                f.result()
-        frontier.unpersist()
-        self.store.commit(round_no=0, metrics={"round": 0, "event": "bootstrap"})
+        # the seeds take the round's admission: alias seeds (distinct raw
+        # strings, same canonical URL) collapse keep-first by seed_seq —
+        # the oracle's add-before-enqueue skip. host_state is staged, not
+        # committed, so the policy config is the staged read; url_seen is
+        # empty, so the committed (empty) shard read is its superset
+        _, new_urls, admit_writes = self._admit(
+            seeds, self.store.read_staged("host_state"),
+            self.store.read("bloom_shards"), width, 0)
+        self._stage([("frontier", new_urls, "replace")] + admit_writes,
+                    width)
+        self.store.commit(round_no=0, metrics={"round": 0, "event": "bootstrap"},
+                          sidecar=self._sidecar)
 
-    def _shard_partials(self, df: DataFrame, width: int) -> DataFrame:
-        """Executor-built per-bucket partial bitmaps, one row per bucket
-        (repartition-by-bucket puts each bucket wholly in one partition)."""
-        return (self._buckets_on(df.select("bucket", "url_hash"), width)
-                .mapInPandas(partial_bitmaps(self._bloom_m,
-                                             self.cfg.n_buckets),
-                             schema="bucket int, bitmap binary"))
+    # ------------------------------------------------------------ admission
+    def _admit(self, cand: DataFrame, host_state: DataFrame,
+               shards: DataFrame, width: int, round_no: int):
+        """The add-before-enqueue admission (SURVEY C2/C16) that the
+        bootstrap's seeds and every round's discovered links take: URL
+        policy -> keep-first per URL -> fused bloom probe + shard update
+        -> exact url_seen confirm of the "maybe seen" rows.
 
-    # ------------------------------------------------------------ one round
-    def run_round(self, round_no: int) -> dict:
-        """One crawl round, committed atomically: a failed attempt aborts
-        everything it staged, so a retry — on this engine or after a
-        resume — starts from the last commit."""
+        cand: (url, url_hash, host, depth, discovery_seq, priority
+        [, src_url]); host_state: the policy config; shards: bloom shard
+        rows that are a superset of url_seen. Returns the policed
+        candidates (every row, `reject` tagged), the admitted URLs as
+        frontier rows, and the url_seen and bloom_shards writes."""
+        policed = self._cache(self._apply_url_policies(
+            cand, host_state.select("host", "crawl_delay",
+                                    "exclude_patterns", "disallow")))
+        # keep-first within the batch (SURVEY C16): min (depth,
+        # discovery_seq); a URL's priority rides along with its first row
+        deduped = (policed.where(F.col("reject").isNull())
+                   .groupBy("url_hash", "url", "host")
+                   .agg(F.min(F.struct("depth", "discovery_seq", "priority"))
+                        .alias("m"))
+                   .select("url_hash", "url", "host",
+                           F.col("m.depth").alias("depth"),
+                           F.col("m.discovery_seq").alias("discovery_seq"),
+                           F.col("m.priority").alias("priority"))
+                   .withColumn("bucket", self._bucket("url_hash")))
+        # fused probe+insert (r6): the same cogroup pass emits the
+        # updated shard rows (bitmap set, candidate columns null)
+        # alongside the probed candidates. The sidecar is executor-
+        # resident: each task receives only its buckets' bitmaps, once,
+        # and the driver never holds the set. Fresh StructType:
+        # StructType.add MUTATES the frame's cached schema, which would
+        # poison the cogroup's column resolution
+        out_schema = T.StructType(
+            list(deduped.schema.fields)
+            + [T.StructField("maybe", T.BooleanType()),
+               T.StructField("bitmap", T.BinaryType())])
+        probe = partitioned_probe_upsert_fn(deduped.columns, self._bloom_m)
+        # below full width both sides are hash-partitioned by bucket
+        # at the round's width, which the cogroup takes as its own
+        # partitioning (no further exchange). At least 2: a one-way
+        # repartition plans as a single partition, which the cogroup
+        # re-shuffles at full width whenever the candidates' size
+        # estimate (a product over the round's joins) is large.
+        probe_width = max(width, 2)
+        if probe_width < self.spark.sparkContext.defaultParallelism:
+            deduped = deduped.repartition(probe_width, "bucket")
+            shards = shards.repartition(probe_width, "bucket")
+        # persist: both the definite-new and to-confirm branches read
+        # this frame — uncached, the cogrouped shard probe (the most
+        # expensive per-round stage at scale) would run twice
+        probed = self._cache(deduped.groupBy("bucket")
+                             .cogroup(shards.groupBy("bucket"))
+                             .applyInPandas(probe, schema=out_schema))
+        # shard rows carry maybe=null, so the candidate filters below
+        # exclude them without an explicit bitmap-null conjunct
+        definite_new = probed.where(~F.col("maybe")).drop("maybe", "bitmap")
+        to_confirm = probed.where(F.col("maybe")).drop("maybe", "bitmap")
+        new_urls = self._cache(
+            definite_new.unionByName(self._anti_seen(to_confirm)))
+        # the updated shard rows came out of the probe cogroup itself —
+        # this write only filters the persisted probe output, no extra
+        # shuffle
+        shard_rows = (probed.where(F.col("bitmap").isNotNull())
+                      .select("bucket", "bitmap"))
+        return (policed,
+                new_urls.select("url", "url_hash", "bucket", "host", "depth",
+                                "priority", "discovery_seq",
+                                F.lit(1).alias("attempt")),
+                [("url_seen", new_urls.select(
+                    "url", "url_hash", "bucket",
+                    F.lit(round_no).alias("round_added")), "append"),
+                 ("bloom_shards", shard_rows, "replace")])
+
+    # ------------------------------------------------------------ attempts
+    def _attempt(self, body, *args):
+        """Run one commit attempt (the bootstrap or a round) atomically: a
+        failed attempt aborts everything it staged, so a retry — on this
+        engine or after a resume — starts from the last commit. What the
+        attempt persisted is released on every path."""
         try:
-            return self._round(round_no)
+            return body(*args)
         except BaseException:
             self.store.abort()
             raise
         finally:
-            for held in self._round_cache:
+            for held in self._attempt_cache:
                 held.unpersist()
-            self._round_cache.clear()
+            self._attempt_cache.clear()
+
+    def _stage(self, writes: list, width: int, overlap=None):
+        """Stage every (table, df, mode) write at `width` as CONCURRENT
+        Spark jobs (threaded driver): the writes are independent DAGs
+        over the attempt's caches, so the cluster pipelines them instead
+        of idling between them. `overlap()` runs on this thread
+        meanwhile and its result is returned. Leaving waits for every
+        write, also when one fails, so the attempt's abort sees all
+        that it staged."""
+        from concurrent.futures import ThreadPoolExecutor
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            futs = [pool.submit(self.store.stage_write, t,
+                                self._narrow(df, width), m)
+                    for t, df, m in writes]
+            out = overlap() if overlap is not None else None
+            for f in futs:
+                f.result()
+        return out
+
+    # ------------------------------------------------------------ one round
+    def run_round(self, round_no: int) -> dict:
+        """One crawl round, committed atomically (see _attempt)."""
+        return self._attempt(self._round, round_no)
 
     def _round(self, round_no: int) -> dict:
         t0 = time.time()
@@ -672,68 +727,30 @@ class CrawlEngine:
                                 F.col("parent_seq")
                                 * F.lit(1 << S.SEQ_LEVEL_BITS)
                                 + F.col("pos") + 1)
-                    .drop("parent_host", "parent_depth", "parent_seq", "pos"))
-        policed = self._cache(self._apply_url_policies(
-            resolved, self.store.read("host_state").select(
-                "host", "crawl_delay", "exclude_patterns", "disallow")))
-        kept = policed.where(F.col("reject").isNull())
-        # keep-first within the batch (SURVEY C16): min (depth, discovery_seq)
-        deduped = (kept.groupBy("url_hash", "url", "host")
-                   .agg(F.min(F.struct("depth", "discovery_seq")).alias("m"))
-                   .select("url_hash", "url", "host",
-                           F.col("m.depth").alias("depth"),
-                           F.col("m.discovery_seq").alias("discovery_seq"))
-                   .withColumn("bucket", self._bucket("url_hash")))
+                    .drop("parent_host", "parent_depth", "parent_seq", "pos")
+                    # discovered-link priority (SURVEY C12 slot: in
+                    # production this is the post-URL heuristic score;
+                    # here a deterministic hash-derived score so
+                    # rank_mode="priority" is exercised — the oracle
+                    # computes the identical function)
+                    .withColumn("priority",
+                                F.pmod(F.abs("url_hash"), F.lit(1000))
+                                .cast("double") / 1000.0))
 
-        # -- url_seen anti-join with bloom pre-filter (SURVEY C2) -----------
+        # -- admission: url_seen anti-join with bloom pre-filter (SURVEY C2)
         # The shards must remain a SUPERSET of url_seen: a round trusts them
-        # only if the validity marker names the last commit (see
-        # _sidecar_valid) and rebuilds them from url_seen otherwise — a
+        # only if the last commit maintained them at this engine's layout
+        # (its manifest's sidecar marker) and rebuilds them from url_seen
+        # otherwise — after a commit that did not maintain them (an older
+        # engine's, a compact()) or an n_buckets/expected_urls change. A
         # stale sidecar's false "definitely new" verdicts would bypass the
-        # exact anti-join. The sidecar is executor-resident: per-bucket
-        # shard rows cogrouped against the candidate buckets — each task
-        # receives only its buckets' bitmaps, once, and the driver never
-        # holds the set.
-        snap_tables = (self.store.snapshot() or {}).get("tables", {})
-        if snap_tables.get("bloom_shards") and self._sidecar_valid():
-            shards_df = self.store.read("bloom_shards")
-        else:  # no valid marker: rebuild from url_seen, still
-            # executor-side (staged with this round's update)
-            shards_df = self._cache(
-                self._shard_partials(self._seen(), width))
-        # fused probe+insert (r6): the same cogroup pass emits the
-        # updated shard rows (bitmap set, candidate columns null)
-        # alongside the probed candidates. Fresh StructType:
-        # StructType.add MUTATES the frame's cached schema, which would
-        # poison the cogroup's column resolution
-        out_schema = T.StructType(
-            list(deduped.schema.fields)
-            + [T.StructField("maybe", T.BooleanType()),
-               T.StructField("bitmap", T.BinaryType())])
-        probe = partitioned_probe_upsert_fn(deduped.columns, self._bloom_m)
-        # below full width both sides are hash-partitioned by bucket
-        # at the round's width, which the cogroup takes as its own
-        # partitioning (no further exchange). At least 2: a one-way
-        # repartition plans as a single partition, which the cogroup
-        # re-shuffles at full width whenever the candidates' size
-        # estimate (a product over the round's joins) is large.
-        cand, shards = deduped, shards_df
-        probe_width = max(width, 2)
-        if probe_width < sp.sparkContext.defaultParallelism:
-            cand = deduped.repartition(probe_width, "bucket")
-            shards = shards_df.repartition(probe_width, "bucket")
-        # persist: both the definite-new and to-confirm branches read
-        # this frame — uncached, the cogrouped shard probe (the most
-        # expensive per-round stage at scale) would run twice
-        probed = self._cache(cand.groupBy("bucket")
-                             .cogroup(shards.groupBy("bucket"))
-                             .applyInPandas(probe, schema=out_schema))
-        # shard rows carry maybe=null, so the candidate filters below
-        # exclude them without an explicit bitmap-null conjunct
-        definite_new = probed.where(~F.col("maybe")).drop("maybe", "bitmap")
-        to_confirm = probed.where(F.col("maybe")).drop("maybe", "bitmap")
-        new_urls = self._cache(
-            definite_new.unionByName(self._anti_seen(to_confirm)))
+        # exact anti-join.
+        if (self.store.snapshot() or {}).get("sidecar") == self._sidecar:
+            shards = self.store.read("bloom_shards")
+        else:  # rebuild executor-side (staged with this round's update)
+            shards = self._cache(self._shard_partials(self._seen(), width))
+        policed, new_urls, admit_writes = self._admit(
+            resolved, self.store.read("host_state"), shards, width, round_no)
 
         # -- next frontier: unscheduled + retries + new (anti-join, no skew) -
         alive_hosts = quota_cfg.select("host")
@@ -745,20 +762,11 @@ class CrawlEngine:
                                     "priority",
                                     "discovery_seq",
                                     (F.col("attempt") + 1).alias("attempt"))
-        # discovered-link priority (SURVEY C12 slot: in production this is
-        # the post-URL heuristic score; here a deterministic hash-derived
-        # score so rank_mode="priority" is exercised — the oracle computes
-        # the identical function)
-        new_frontier_rows = new_urls.select(
-            "url", "url_hash", "bucket", "host", "depth",
-            (F.pmod(F.abs("url_hash"), F.lit(1000)).cast("double") / 1000.0)
-            .alias("priority"), "discovery_seq",
-            F.lit(1).alias("attempt"))
         next_frontier = (unscheduled
                          .select("url", "url_hash", "bucket", "host", "depth",
                                  "priority", "discovery_seq", "attempt")
                          .unionByName(retry_rows)
-                         .unionByName(new_frontier_rows))
+                         .unionByName(new_urls))
 
         # -- sinks -----------------------------------------------------------
         fetched_cols = success.select(
@@ -819,31 +827,17 @@ class CrawlEngine:
                               "cnt"))
         stats_df = outcome_agg.unionByName(policy_agg)
 
-        # -- stage + commit: the sink and state writes are independent DAGs
-        # over cached inputs, so they run as CONCURRENT Spark jobs (threaded
-        # driver), overlapped with the metrics collect on this thread — the
-        # cluster pipelines all the actions instead of idling between them.
-        from concurrent.futures import ThreadPoolExecutor
+        # -- stage + commit: the sink and state writes run as concurrent
+        # Spark jobs, overlapped with the metrics collect on this thread.
         # materialized web-graph edges (SURVEY §1.3): every same-host
         # candidate link this round, with its policy outcome — downstream
         # link-analysis (PageRank-style priors, dead-link audits) reads this
         edges_rows = policed.select(
             "src_url", F.col("url").alias("dst_url"),
             F.lit(round_no).alias("round"), "reject")
-        sink_writes = [
-            ("edges", edges_rows, "append"),
-            ("frontier", next_frontier, "replace"),
-            ("url_seen", new_urls.select("url", "url_hash", "bucket",
-                                         F.lit(round_no).alias("round_added")),
-             "append"),
-            ("fetched", fetched_rows, "append"),
-            ("failures", failure_rows, "append"),
-        ]
-        # the per-round STATE updates (host_state budget update, sidecar
-        # shard update) read only the persisted fetch/probed caches, so
-        # they join the same concurrent batch as the sinks instead of
-        # running sequentially after it — at toy scale each serialized
-        # small job costs a full scheduling round trip
+        # the host_state budget update reads only the persisted fetch
+        # cache, so it joins the same concurrent batch as the sinks and
+        # the admission's url_seen and shard writes
         succ = (fetch.where(F.col("outcome") == "success")
                 .groupBy("host").agg(F.count("*").alias("_ok")))
         new_hs = (self.store.read("host_state")
@@ -852,29 +846,17 @@ class CrawlEngine:
                               F.col("fetched_count")
                               + F.coalesce(F.col("_ok"), F.lit(0)))
                   .drop("_ok"))
-        # the updated shard rows came out of the probe cogroup itself —
-        # this write only filters the persisted probe output, no extra
-        # shuffle
-        shard_rows = (probed.where(F.col("bitmap").isNotNull())
-                      .select("bucket", "bitmap"))
-        state_writes = [("host_state", new_hs, "replace"),
-                        ("bloom_shards", shard_rows, "replace")]
-        # leaving the block waits for every write, also when one fails,
-        # so run_round's abort sees all that this attempt staged
-        writes = sink_writes + state_writes
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            futs = [pool.submit(self.store.stage_write, t,
-                                self._narrow(df, width), m)
-                    for t, df, m in writes]
-            stats = stats_df.collect()
-            for f in futs:  # join the concurrent sink + state-update writes
-                f.result()
+        stats = self._stage([("edges", edges_rows, "append"),
+                             ("frontier", next_frontier, "replace"),
+                             ("fetched", fetched_rows, "append"),
+                             ("failures", failure_rows, "append"),
+                             ("host_state", new_hs, "replace")]
+                            + admit_writes, width, stats_df.collect)
         outcome_counts: dict[str, int] = {}
         policy_counts: dict[str, int] = {}
         for r in stats:
             counts = outcome_counts if r["kind"] == "outcome" else policy_counts
             counts[r["key"]] = int(r["cnt"])
-        self._stage_sidecar_meta(round_no)
         staged = self.store.staged_row_count
         metrics = {
             "round": round_no,
@@ -893,17 +875,16 @@ class CrawlEngine:
         }
         self.store.stage_write_arrow("metrics", pd.DataFrame([{
             k: v for k, v in metrics.items() if k != "rejected"}]), "append")
-        self.store.commit(round_no, metrics)
+        self.store.commit(round_no, metrics, sidecar=self._sidecar)
         return metrics
 
     # ------------------------------------------------------------ driver loop
-    def run(self, max_rounds: int | None = None, verbose: bool = False) -> list[dict]:
+    def run(self, max_rounds: int = 200, verbose: bool = False) -> list[dict]:
         if self.store.current_snapshot_id() is None:
             self.bootstrap()
         start_round = int(self.store.snapshot()["round"]) + 1
         out = []
-        limit = max_rounds or self.cfg.max_rounds
-        for r in range(start_round, start_round + limit):
+        for r in range(start_round, start_round + max_rounds):
             m = self.run_round(r)
             out.append(m)
             if (self.cfg.expire_every

@@ -13,10 +13,11 @@ the engine needs with the same mechanics Iceberg uses:
 - a commit writes the manifest then atomically flips the ``CURRENT`` pointer
   (``os.replace``), so a crash mid-round leaves orphan dirs that no manifest
   references — reads at CURRENT are unaffected and resume is bit-identical;
-- binary blobs (the bloom sidecar's validity marker) belong to the commit
-  that staged them: a manifest lists only the blobs its own commit staged,
-  so a blob no round writes any more is freed by ``expire_snapshots``; a
-  store that registers schemas likewise carries only those tables forward.
+- a commit may record a small ``sidecar`` dict (the engine's bloom shard
+  layout) in its own manifest; it is not carried to the next one, so a
+  commit that did not maintain the sidecar reads as "no marker". A store
+  that registers schemas carries only those tables forward, so a table no
+  round writes any more is freed by ``expire_snapshots``.
 
 Swapping this for real Iceberg is localized to this module: append →
 ``writeTo(t).append()``, replace → ``overwritePartitions``, snapshot pin →
@@ -38,6 +39,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+# where an older store kept per-commit marker files; no manifest field
+# names them any more, and expire_snapshots deletes the dir
+_LEGACY_MARKER_DIR = "blobs"
+
 
 def _fsync_dir(path: str) -> None:
     fd = os.open(path, os.O_RDONLY)
@@ -54,9 +59,7 @@ class SnapshotStore:
         self.root = root
         self.schemas = schemas or {}
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
-        os.makedirs(os.path.join(root, "blobs"), exist_ok=True)
         self._staged: dict[str, dict] = {}
-        self._staged_blobs: dict[str, str] = {}
         self._stage_lock = threading.Lock()  # stage_write is called from
         # concurrent sink-writer threads (scheduler runs independent sinks
         # as parallel Spark jobs)
@@ -197,13 +200,10 @@ class SnapshotStore:
         return reader.parquet(
             *[os.path.join(self._table_dir(table), d) for d in dirs])
 
-    def stage_blob(self, name: str, data: bytes) -> None:
-        fname = f"{name}-{uuid.uuid4().hex[:12]}.bin"
-        with open(os.path.join(self.root, "blobs", fname), "wb") as f:
-            f.write(data)
-        self._staged_blobs[name] = fname
-
-    def commit(self, round_no: int, metrics: dict | None = None) -> int:
+    def commit(self, round_no: int, metrics: dict | None = None,
+               sidecar: dict | None = None) -> int:
+        """Write the next manifest and flip CURRENT to it. `sidecar` is
+        recorded in this manifest only (see the module docstring)."""
         parent_id = self.current_snapshot_id()
         parent = self.snapshot(parent_id) if parent_id is not None else None
         snap_id = (parent_id or 0) + 1
@@ -226,14 +226,13 @@ class SnapshotStore:
                 rows[table] = self._rows_of(st)
             elif table in rows:
                 rows[table] += self._rows_of(st)
-        blobs = dict(self._staged_blobs)
         manifest = {
             "snapshot_id": snap_id,
             "parent_id": parent_id,
             "round": round_no,
             "tables": tables,
             "rows": rows,
-            "blobs": blobs,
+            "sidecar": sidecar,
             # Iceberg manifest-entry analog: THIS commit's added files per
             # table/dir with byte and footer row counts — per-partition
             # lineage is walkable through the parent chain
@@ -257,26 +256,19 @@ class SnapshotStore:
         os.replace(tmp, self._current_path())  # the atomic commit point
         _fsync_dir(self.root)
         self._staged = {}
-        self._staged_blobs = {}
         return snap_id
 
     def abort(self) -> None:
         """Drop everything staged since the last commit and delete its
-        dirs and blobs from disk: a failed round attempt then leaves
-        nothing for the next commit to pick up. Callers must first wait
-        for their in-flight stage_write calls."""
+        dirs from disk: a failed round attempt then leaves nothing for
+        the next commit to pick up. Callers must first wait for their
+        in-flight stage_write calls."""
         with self._stage_lock:
-            staged, blobs = self._staged, self._staged_blobs
-            self._staged, self._staged_blobs = {}, {}
+            staged, self._staged = self._staged, {}
         for table, st in staged.items():
             for d in st["dirs"]:
                 shutil.rmtree(os.path.join(self._table_dir(table), d),
                               ignore_errors=True)
-        for fname in blobs.values():
-            try:
-                os.remove(os.path.join(self.root, "blobs", fname))
-            except FileNotFoundError:
-                pass
 
     def compact(self, table: str) -> int:
         """Iceberg `rewrite_data_files` analog: an append-heavy table (e.g.
@@ -318,7 +310,8 @@ class SnapshotStore:
 
         Retains the most recent `keep_last` manifests (CURRENT always
         included), deletes older manifest files, then deletes every table
-        dir and blob referenced by NO retained manifest. Dirs and blobs
+        dir referenced by NO retained manifest, and an older store's
+        marker-file dir, which no manifest field names any more. Dirs
         staged for the NEXT commit are protected (they are in no manifest
         yet — deleting them would corrupt the upcoming commit). Reads and
         resume at retained snapshots are bit-identical before/after
@@ -327,13 +320,12 @@ class SnapshotStore:
         import glob
         cur = self.current_snapshot_id()
         if cur is None:
-            return {"snapshots": 0, "dirs": 0, "blobs": 0}
+            return {"snapshots": 0, "dirs": 0}
         all_ids = sorted(
             int(os.path.basename(p)[5:-5]) for p in glob.glob(
                 os.path.join(self.root, "snapshots", "snap-*.json")))
         keep = set(all_ids[-keep_last:]) | {cur}
         ref_dirs: set[tuple[str, str]] = set()
-        ref_blobs: set[str] = set()
         for i in sorted(keep):
             try:
                 s = self.snapshot(i)
@@ -344,8 +336,8 @@ class SnapshotStore:
                 err = None
             if not s:
                 # A RETAINED manifest that cannot be read must abort the
-                # vacuum: silently skipping it would treat its dirs/blobs
-                # as unreferenced and delete live data on a transient
+                # vacuum: silently skipping it would treat its dirs as
+                # unreferenced and delete live data on a transient
                 # read failure. (ADVICE r5)
                 raise RuntimeError(
                     f"expire_snapshots: retained manifest snap-{i} "
@@ -353,12 +345,10 @@ class SnapshotStore:
                 ) from err
             for t, dirs in s.get("tables", {}).items():
                 ref_dirs.update((t, d) for d in dirs)
-            ref_blobs.update(s.get("blobs", {}).values())
         with self._stage_lock:
             for t, st in self._staged.items():
                 ref_dirs.update((t, d) for d in st["dirs"])
-            ref_blobs.update(self._staged_blobs.values())
-        removed = {"snapshots": 0, "dirs": 0, "blobs": 0}
+        removed = {"snapshots": 0, "dirs": 0}
         for i in all_ids:
             if i not in keep:
                 os.remove(self._snap_path(i))
@@ -375,24 +365,21 @@ class SnapshotStore:
                         # ignore_errors can fail silently)
                         if not os.path.exists(path):
                             removed["dirs"] += 1
-        blob_root = os.path.join(self.root, "blobs")
-        for b in sorted(os.listdir(blob_root)):
-            if b not in ref_blobs:
-                os.remove(os.path.join(blob_root, b))
-                removed["blobs"] += 1
+        shutil.rmtree(os.path.join(self.root, _LEGACY_MARKER_DIR),
+                      ignore_errors=True)
         return removed
 
     # ---------------------------------------------------------------- reads
     def read(self, table: str, snap_id: int | None = None) -> DataFrame:
         """Table state as of a snapshot (default: CURRENT). Unknown/empty
-        tables return an empty DataFrame with the registered schema."""
+        tables return an empty DataFrame with the registered schema: a
+        read of zero paths, which has no partitions (createDataFrame([])
+        would run a Python task per default-parallelism partition)."""
         snap = self.snapshot(snap_id)
         dirs = (snap or {}).get("tables", {}).get(table, [])
         schema = self.schemas.get(table)
-        if not dirs:
-            if schema is None:
-                raise KeyError(f"table {table!r} empty and no schema registered")
-            return self.spark.createDataFrame([], schema)
+        if not dirs and schema is None:
+            raise KeyError(f"table {table!r} empty and no schema registered")
         paths = [os.path.join(self._table_dir(table), d) for d in dirs]
         reader = self.spark.read
         if schema is not None:
@@ -402,14 +389,6 @@ class SnapshotStore:
             # is a synchronous driver-side file listing + footer decode
             reader = reader.schema(schema)
         return reader.parquet(*paths)
-
-    def read_blob(self, name: str, snap_id: int | None = None) -> bytes | None:
-        snap = self.snapshot(snap_id)
-        fname = (snap or {}).get("blobs", {}).get(name)
-        if fname is None:
-            return None
-        with open(os.path.join(self.root, "blobs", fname), "rb") as f:
-            return f.read()
 
 
 def merge_upsert(store: SnapshotStore, table: str, updates,

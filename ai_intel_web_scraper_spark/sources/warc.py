@@ -1,10 +1,10 @@
 """WARC (ISO 28500) record source — the web-archive interchange format
 Common Crawl ships, which a crawl engine must both emit and ingest. This
-module covers the ingest side for PLAIN (non-gzip) WARC blobs: parse the
+module covers the ingest side for PLAIN (non-gzip) WARC files: parse the
 record framing (version line, named headers, Content-Length-delimited
 content block, CRLF CRLF record separator) into one row per record.
 
-Scale shape: archives arrive as opaque binary blobs (one per source
+Scale shape: archives arrive as opaque binary values (one per source
 file/segment); parsing is a narrow Arrow mapInPandas — archive bytes
 never cross a shuffle, only the (much smaller) parsed rows flow on. A
 TRUNCATED archive degrades: every record before the cut parses normally
@@ -89,7 +89,7 @@ def build_warc(records: list[tuple]) -> bytes:
 def read_warc_records(archives: DataFrame,
                       id_col: str = "archive_id",
                       bytes_col: str = "warc_bytes") -> DataFrame:
-    """One row per WARC record across all archive blobs, plus one
+    """One row per WARC record across all archives, plus one
     parse_ok=false accounting row per archive whose blob ends
     mid-record. Narrow map; blob bytes never shuffle."""
     import pandas as pd

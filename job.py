@@ -76,8 +76,7 @@ def main() -> int:
     cfg_kwargs = dict(n_buckets=args.n_buckets,
                       expected_urls=args.expected_urls,
                       rank_mode=args.rank_mode,
-                      write_payload=args.payload,
-                      max_rounds=args.max_rounds)
+                      write_payload=args.payload)
     if args.round_seconds is not None:
         cfg_kwargs["round_seconds"] = args.round_seconds
     eng = CrawlEngine(spark, fixtures, args.warehouse,

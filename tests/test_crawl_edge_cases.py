@@ -144,17 +144,15 @@ def _chain_back_to(k: int) -> dict[str, list[str]]:
     return chain
 
 
-@pytest.mark.parametrize("marker", ["removed_repr", "older_round", "none"])
+@pytest.mark.parametrize("marker", ["other_layout", "none"])
 def test_stale_sidecar_rebuilds_never_refetch(spark, tmp_path, marker):
     """Shards that miss url_seen rows must be rebuilt from url_seen, not
     trusted. Here the committed shards are round 1's (read by time
-    travel), which lack p/3, and the commit's validity marker names a
-    representation this engine does not have, names an older round, or
-    is absent (an older engine's probing-off rounds, a compact()).
-    Trusting the shards would probe p/3 'definitely new' when p/6 links
-    back to it in round 7, and fetch it twice."""
-    import json
-
+    travel), which lack p/3, and the commit's sidecar marker names
+    another shard layout or is absent (a commit that did not maintain
+    the shards: an older engine's, a compact()). Trusting the shards
+    would probe p/3 'definitely new' when p/6 links back to it in round
+    7, and fetch it twice."""
     fx = _mini_fixtures(str(tmp_path / "fx"),
                         seeds=[(0, f"{BASE}/p/0", 0.5)],
                         pages=_chain_back_to(3), max_pages=50, max_depth=10)
@@ -167,16 +165,10 @@ def test_stale_sidecar_rebuilds_never_refetch(spark, tmp_path, marker):
                   if h["round"] == 1)
     store.stage_write("bloom_shards",
                       store.read("bloom_shards", snap_id=round1), "replace")
-    committed = store.snapshot()["round"]
-    meta = {"repr": "partitioned", "n_buckets": cfg.n_buckets,
-            "m_bits": eng._bloom_m, "round": committed}
-    if marker == "removed_repr":
-        meta["repr"] = "cuckoo"
-    elif marker == "older_round":
-        meta["round"] = 1
-    if marker != "none":
-        store.stage_blob("sidecar_meta", json.dumps(meta).encode())
-    store.commit(committed)
+    sidecar = None
+    if marker == "other_layout":
+        sidecar = {"n_buckets": cfg.n_buckets * 2, "m_bits": eng._bloom_m}
+    store.commit(store.snapshot()["round"], sidecar=sidecar)
     eng = CrawlEngine(spark, fx, wh, cfg)
     eng.run()
     fetched = eng.store.read("fetched")
@@ -185,10 +177,10 @@ def test_stale_sidecar_rebuilds_never_refetch(spark, tmp_path, marker):
 
 
 def test_legacy_blobs_leave_manifest_and_disk(spark, tmp_path):
-    """A blob no round writes any more (an older engine's `bloom` filter
-    and bucketed-layout `seen_layout_meta` marker) is not carried into
-    the next manifest, so expire_snapshots frees it; the crawl is
-    unaffected."""
+    """An older store kept its sidecar marker as a file under `blobs/`,
+    named by the manifest's `blobs` key. This engine reads no such
+    marker (the round rebuilds the shards), writes no `blobs` key, and
+    expire_snapshots frees the dir; the crawl is unaffected."""
     import json
 
     fx = _mini_fixtures(str(tmp_path / "fx"),
@@ -199,19 +191,21 @@ def test_legacy_blobs_leave_manifest_and_disk(spark, tmp_path):
         write_payload=False, expected_urls=1024))
     eng.run(max_rounds=1)
     store = eng.store
-    committed = store.snapshot()["round"]
-    store.stage_blob("bloom", bytes(128))
-    store.stage_blob("seen_layout_meta", json.dumps(
-        {"buckets": 16, "round": committed}).encode())
-    store.commit(committed)
-    legacy = {store.snapshot()["blobs"][n]
-              for n in ("bloom", "seen_layout_meta")}
+    os.makedirs(os.path.join(wh, "blobs"))
+    with open(os.path.join(wh, "blobs", "sidecar_meta-0.bin"), "w") as f:
+        json.dump({"repr": "partitioned", "n_buckets": 16,
+                   "m_bits": eng._bloom_m, "round": 1}, f)
+    snap_path = store._snap_path(store.current_snapshot_id())
+    with open(snap_path) as f:
+        legacy = json.load(f)
+    legacy["blobs"] = {"sidecar_meta": "sidecar_meta-0.bin"}
+    del legacy["sidecar"]
+    with open(snap_path, "w") as f:
+        json.dump(legacy, f)
     eng.run(max_rounds=1)
+    assert "blobs" not in store.snapshot()
     store.expire_snapshots(keep_last=1)
-    assert set(store.snapshot()["blobs"]) == {"sidecar_meta"}
-    on_disk = set(os.listdir(os.path.join(wh, "blobs")))
-    assert on_disk == set(store.snapshot()["blobs"].values())
-    assert not on_disk & legacy
+    assert not os.path.exists(os.path.join(wh, "blobs"))
     eng.run()
     _assert_matches_oracle(store, fx)
 
@@ -305,49 +299,6 @@ def test_randomized_webs_match_oracle(spark, tmp_path, seed, n_hosts,
     assert got_seen == want.url_seen
 
 
-def test_partitioned_bloom_mode_is_bit_identical(spark, fixtures, tmp_path):
-    """The partitioned sidecar (executor-resident per-bucket shard table,
-    one cogrouped probe+insert pass — the driver never materializes it)
-    must reproduce the oracle's crawl over four rounds, discovery order
-    and url_seen included, and stage no blob beyond the markers."""
-    wh = str(tmp_path / "wh")
-    eng = CrawlEngine(spark, fixtures, wh,
-                      CrawlConfig(expected_urls=1 << 14, write_payload=False))
-    eng.run(max_rounds=4)
-    want = oracle_crawl(fixtures, max_rounds=4)
-    got = [(r["url"], r["round"], r["depth"], r["discovery_seq"]) for r in
-           eng.store.read("fetched")
-           .select("url", "round", "depth", "discovery_seq")
-           .orderBy("round", "depth", "discovery_seq").collect()]
-    assert got == [(r["url"], r["round"], r["depth"], r["discovery_seq"])
-                   for r in want.fetched]
-    assert {r["url"] for r in eng.store.read("url_seen").collect()} \
-        == want.url_seen
-    # the filter lives in the bloom_shards table; the only blob is the
-    # few-byte sidecar_meta validity marker
-    blobs = os.listdir(os.path.join(wh, "blobs"))
-    assert blobs and all(f.startswith("sidecar_meta") for f in blobs)
-
-
-def test_dataframe_host_state_mode_is_bit_identical(spark, fixtures,
-                                                    tmp_path):
-    """host_state stays a table (quota derivation, alive/max/sum scalars
-    and the fetched_count update all run as Spark jobs — the driver never
-    holds the host table): after four rounds each host's fetched_count
-    equals the oracle's fetches of that host."""
-    from collections import Counter
-    eng = CrawlEngine(spark, fixtures, str(tmp_path / "wh"),
-                      CrawlConfig(expected_urls=1 << 14, write_payload=False))
-    eng.run(max_rounds=4)
-    want = Counter(r["host"]
-                   for r in oracle_crawl(fixtures, max_rounds=4).fetched)
-    got = {r["host"]: r["fetched_count"]
-           for r in eng.store.read("host_state").collect()}
-    assert sum(want.values()) > 0
-    assert got == {h: want.get(h, 0) for h in got}
-    assert set(want) <= set(got)
-
-
 def test_partitioned_probe_self_describes_width_and_merges_mixed(spark):
     """The probe-only function reads its width from the shard rows
     themselves (len(bitmap)*8), so a warehouse sized by another
@@ -358,7 +309,7 @@ def test_partitioned_probe_self_describes_width_and_merges_mixed(spark):
     import numpy as np
     import pandas as pd
 
-    from ai_intel_web_scraper_spark.crawl.bloom import (BloomShards,
+    from ai_intel_web_scraper_spark.crawl.bloom import (partial_bitmaps,
                                                         partitioned_probe_fn)
     rng = np.random.default_rng(11)
     old_keys = rng.integers(-(1 << 62), 1 << 62, 500, dtype=np.int64)
@@ -366,9 +317,9 @@ def test_partitioned_probe_self_describes_width_and_merges_mixed(spark):
     absent = rng.integers(-(1 << 62), 1 << 62, 500, dtype=np.int64)
 
     def shard_row(keys, m_bits):
-        b = BloomShards(1, m_bits)
-        b.add_many(np.zeros(len(keys), dtype=np.int64), keys)
-        return b.shards[0].tobytes()
+        (rows,) = partial_bitmaps(m_bits, 1)(
+            iter([pd.DataFrame({"bucket": 0, "url_hash": keys})]))
+        return rows["bitmap"].iloc[0]
 
     probe = partitioned_probe_fn(["url_hash", "bucket"])
     for keys, m_bits in ((old_keys, 1 << 14), (new_keys, 1 << 17)):
@@ -420,9 +371,8 @@ def test_connected_components_on_64bit_hash_ids(spark):
     assert comp[big + 10] == comp[big + 11] == big + 10
 
 
-@pytest.mark.parametrize("mode,tbl", [("partitioned", "bloom_shards")])
 def test_partitioned_bloom_resume_with_resized_filter_never_refetches(
-        spark, tmp_path, mode, tbl):
+        spark, tmp_path):
     """The ADVICE scenario end-to-end: crawl with one expected_urls
     sizing, then RESUME the same
     warehouse with a 16x larger sizing (different shard width). The
@@ -437,12 +387,10 @@ def test_partitioned_bloom_resume_with_resized_filter_never_refetches(
                         pages=chain, max_pages=50, max_depth=12)
     wh = str(tmp_path / "wh")
     first = CrawlEngine(spark, fx, wh, CrawlConfig(
-        write_payload=False, bloom_mode=mode,
-        expected_urls=1 << 10))
+        write_payload=False, expected_urls=1 << 10))
     first.run(max_rounds=3)
     eng = CrawlEngine(spark, fx, wh, CrawlConfig(
-        write_payload=False, bloom_mode=mode,
-        expected_urls=1 << 14))
+        write_payload=False, expected_urls=1 << 14))
     eng.run()
     fetched = eng.store.read("fetched")
     assert fetched.count() == fetched.select("url").distinct().count()
@@ -450,7 +398,7 @@ def test_partitioned_bloom_resume_with_resized_filter_never_refetches(
     # the resize rebuilt the shards: every row is the resized width
     assert first._bloom_m != eng._bloom_m
     widths = {len(bytes(r["bitmap"])) * 8 for r in
-              eng.store.read(tbl).collect()}
+              eng.store.read("bloom_shards").collect()}
     assert widths == {eng._bloom_m}
 
 

@@ -73,6 +73,19 @@ def test_fetch_ts_politeness_floor(engine):
         prev[key] = r["fetch_ts"]
 
 
+def test_host_fetched_count_matches_oracle(engine, oracle):
+    """host_state stays a table (quota derivation, the max/sum quota
+    scalars and the fetched_count update all run as Spark jobs): each
+    host's fetched_count equals the oracle's fetches of that host."""
+    from collections import Counter
+    want = Counter(r["host"] for r in oracle.fetched)
+    got = {r["host"]: r["fetched_count"]
+           for r in engine.store.read("host_state").collect()}
+    assert sum(want.values()) > 0
+    assert got == {h: want.get(h, 0) for h in got}
+    assert set(want) <= set(got)
+
+
 def test_per_host_budget_respected(engine, spark, fixtures):
     pol = {r["host"]: r["max_pages"] for r in
            spark.read.parquet(fixtures["politeness"]).collect()}
@@ -360,7 +373,7 @@ def test_expire_snapshots_vacuums_unreferenced_state(spark, fixtures,
                                                      tmp_path):
     """Iceberg expire_snapshots + remove_orphan_files analog: after a
     multi-round crawl + compaction, expiring to the last 2 snapshots
-    deletes the older manifests and every dir/blob only they referenced,
+    deletes the older manifests and every dir only they referenced,
     while reads at retained snapshots and resume stay bit-identical and
     history() cuts cleanly at the horizon."""
     import os
@@ -420,7 +433,7 @@ def test_expire_snapshots_protects_staged_uncommitted_dirs(spark, tmp_path):
 def test_expire_snapshots_aborts_on_unreadable_retained_manifest(
         spark, tmp_path):
     """ADVICE r5: a RETAINED manifest that cannot be read must abort the
-    vacuum — silently skipping it would treat its dirs/blobs as
+    vacuum — silently skipping it would treat its dirs as
     unreferenced and delete live data. Nothing may be removed."""
     import glob
     import os

@@ -6,7 +6,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from ai_intel_web_scraper_spark.crawl.bloom import BloomShards
+from ai_intel_web_scraper_spark.crawl.bloom import (
+    BloomShards, partial_bitmaps, partitioned_probe_fn,
+    partitioned_probe_upsert_fn)
 from ai_intel_web_scraper_spark.functions.codec import (
     average_phash, decode_image, encode_image, png_decode, png_encode, psnr)
 from ai_intel_web_scraper_spark.functions.urls import (
@@ -60,18 +62,36 @@ def test_vectorized_matches_scalar():
 
 
 def test_bloom_no_false_negatives_and_low_fpr():
+    """Shards built by the rebuild kernel (`partial_bitmaps`), probed per
+    bucket by the engine's fused probe and by the probe-only function:
+    both give the same verdicts, no stored key reads 'definitely new',
+    and few fresh keys read 'maybe'."""
     rng = np.random.default_rng(11)
-    n = 20000
+    n, n_buckets = 20000, 16
+    m_bits = BloomShards.sized_for(n, n_buckets).m_bits
     keys = rng.integers(-(2**62), 2**62, n).astype(np.int64)
-    buckets = (np.abs(keys) % 16).astype(np.int64)
-    bloom = BloomShards.sized_for(n, 16)
-    bloom.add_many(buckets, keys)
-    # zero false negatives
-    assert bloom.maybe_contains(buckets, keys).all()
-    # low false-positive rate on fresh keys
     fresh = rng.integers(-(2**62), 2**62, n).astype(np.int64)
-    fb = (np.abs(fresh) % 16).astype(np.int64)
-    fpr = bloom.maybe_contains(fb, fresh).mean()
+
+    def bucket(h):
+        return (np.abs(h) % n_buckets).astype(np.int32)
+
+    (shards,) = partial_bitmaps(m_bits, n_buckets)(iter([pd.DataFrame(
+        {"bucket": bucket(keys), "url_hash": keys})]))
+    cols = ["url_hash", "bucket"]
+    maybe = {"stored": [], "fresh": []}
+    for b in range(n_buckets):
+        shard = shards[shards["bucket"] == b]
+        for kind, h in (("stored", keys), ("fresh", fresh)):
+            cand = pd.DataFrame({"url_hash": h[bucket(h) == b],
+                                 "bucket": np.int32(b)})
+            got = partitioned_probe_fn(cols)(cand, shard)["maybe"]
+            fused = partitioned_probe_upsert_fn(cols, m_bits)(cand, shard)
+            assert list(fused["maybe"].iloc[:len(cand)]) == list(got)
+            maybe[kind].append(got.to_numpy(dtype=bool))
+    # zero false negatives
+    assert np.concatenate(maybe["stored"]).all()
+    # low false-positive rate on fresh keys
+    fpr = np.concatenate(maybe["fresh"]).mean()
     assert fpr < 0.03, fpr
 
 

@@ -97,31 +97,35 @@ class _Injected(RuntimeError):
     pass
 
 
+@pytest.mark.parametrize("fail_round,table", [(0, "url_seen"),
+                                              (2, "fetched")])
 def test_failed_round_leaves_nothing_and_retry_matches_oracle(
-        spark, fixtures, tmp_path):
-    """A failure injected right after round 2's `fetched` write, then
-    run_round(2) retried on the same engine: the committed crawl equals
-    the oracle's, no table holds a duplicate row, host_state is one dir,
-    and no dir or blob on disk is left unreferenced by the manifests."""
+        spark, fixtures, tmp_path, fail_round, table):
+    """A failure injected right after one write of an attempt — the
+    bootstrap's `url_seen` write, or round 2's `fetched` write — then the
+    crawl retried on the same engine: the committed crawl equals the
+    oracle's, no table holds a duplicate row, host_state is one dir, and
+    the warehouse holds nothing the manifests do not reference."""
     eng = CrawlEngine(spark, fixtures, str(tmp_path / "wh"),
                       CrawlConfig(**CFG))
-    eng.run(max_rounds=1)
+    if fail_round > 1:
+        eng.run(max_rounds=fail_round - 1)
     store = eng.store
     write = store.stage_write
 
-    def failing_write(table, df, mode):
-        write(table, df, mode)
-        if table == "fetched":
-            raise _Injected("injected after the fetched write")
+    def failing_write(table_, df, mode):
+        write(table_, df, mode)
+        if table_ == table:
+            raise _Injected(f"injected after the {table} write")
 
     store.stage_write = failing_write
     with pytest.raises(_Injected):
-        eng.run_round(2)
+        eng.run(max_rounds=1)
     store.stage_write = write
-    assert store.snapshot()["round"] == 1
-    assert eng._round_cache == []
-    eng.run_round(2)
-    eng.run_round(3)
+    committed = (store.snapshot() or {}).get("round", -1)
+    assert committed == fail_round - 1
+    assert eng._attempt_cache == []
+    eng.run(max_rounds=3 - max(committed, 0))
 
     oracle = oracle_crawl(fixtures, max_rounds=3)
     key = ("url", "round", "depth", "discovery_seq", "image_id")
@@ -138,6 +142,7 @@ def test_failed_round_leaves_nothing_and_retry_matches_oracle(
     front = [r["url"] for r in store.read("frontier").collect()]
     assert len(front) == len(set(front))
     snap = store.snapshot()
+    assert snap["round"] == 3
     assert len(snap["tables"]["host_state"]) == 1
     assert snap["rows"]["fetched"] == len(got)
 
@@ -147,6 +152,4 @@ def test_failed_round_leaves_nothing_and_retry_matches_oracle(
     on_disk = {(t, d) for t in os.listdir(os.path.join(store.root, "tables"))
                for d in os.listdir(os.path.join(store.root, "tables", t))}
     assert on_disk == referenced
-    blobs = {b for h in store.history()
-             for b in store.snapshot(h["snapshot_id"])["blobs"].values()}
-    assert set(os.listdir(os.path.join(store.root, "blobs"))) == blobs
+    assert set(os.listdir(store.root)) == {"CURRENT", "snapshots", "tables"}
